@@ -165,3 +165,33 @@ def test_kmeans_clamps_n_clusters_to_corpus_size(spark):
     empty = small.filter(F.col("vec_id") < 0)
     with pytest.raises(ValueError):
         kmeans_fit(empty, n_clusters=4, iters=1)
+
+
+def test_kmeans_ivf_probing_every_cell_is_bruteforce(spark, clustered, cluster_queries):
+    """With n_probes = n_clusters every corpus row is a candidate, so the IVF
+    operator must return exactly the brute-force answer: the operators
+    differ only in candidate generation, never in scoring or ranking."""
+    cents = kmeans_fit(clustered, n_clusters=N_CLUSTERS, iters=4)
+    approx = cosine_topk_ivf_kmeans(
+        clustered, cluster_queries, cents, k=5, n_probes=N_CLUSTERS
+    )
+    exact = cosine_topk_bruteforce(clustered, cluster_queries, k=5)
+    got = sorted(map(tuple, approx.collect()))
+    assert got == sorted(map(tuple, exact.collect())) and got
+
+
+def test_lsh_multiprobe_scores_each_pair_once(spark, clustered, cluster_queries):
+    """Probing the home bucket plus every Hamming-1 flip (n_probes =
+    n_planes + 1) never reaches a neighbor twice: with k above any
+    candidate count every scored pair is returned, once, ranked 1..n."""
+    n_planes = 4
+    out = cosine_topk_ivf_lsh(
+        clustered, cluster_queries, k=N, n_planes=n_planes, dim=DIM,
+        n_probes=n_planes + 1,
+    ).collect()
+    pairs = [(r.query_id, r.neighbor_id) for r in out]
+    assert pairs and len(pairs) == len(set(pairs))
+    ranks: dict = {}
+    for r in out:
+        ranks.setdefault(r.query_id, []).append(r.rank)
+    assert all(sorted(v) == list(range(1, len(v) + 1)) for v in ranks.values())

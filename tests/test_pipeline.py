@@ -306,3 +306,45 @@ def test_dedup_components_modes_agree(spark):
     a = sorted(map(tuple, dedup_components(pairs).collect()))
     b = sorted(map(tuple, dedup_components(pairs, mode="star").collect()))
     assert a == b
+
+
+def test_dedup_components_round_sec_every_path(spark):
+    """A seeded stats["round_sec"] gets one wall time per round in propagate
+    mode, in star mode, and across the propagate->star fallback."""
+    from ukeeper_readability_spark.pipeline.dedup import dedup_components
+
+    short = spark.createDataFrame([(2, 1), (2, 3), (5, 6)], "doc_a long, doc_b long")
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 64)], "doc_a long, doc_b long"
+    )
+    runs = {}
+    for label, pairs, kw in (
+        ("propagate", short, {}),
+        ("star", short, {"mode": "star"}),
+        ("propagate->star", path, {"max_iters": 8}),
+    ):
+        st = {"round_sec": []}
+        if label == "propagate->star":
+            with pytest.warns(UserWarning, match="falling back"):
+                dedup_components(pairs, stats=st, **kw).collect()
+        else:
+            dedup_components(pairs, stats=st, **kw).collect()
+        runs[label] = st
+    for label, st in runs.items():
+        assert st["mode"] == label
+        assert len(st["round_sec"]) == st["rounds"] + st.get("fallback_rounds", 0)
+        assert all(t >= 0 for t in st["round_sec"])
+    assert runs["propagate->star"]["fallback_rounds"] >= 1
+    # opt-in: an unseeded dict gets no round_sec key
+    st = {}
+    dedup_components(short, mode="star", stats=st).collect()
+    assert "round_sec" not in st
+
+
+@pytest.mark.parametrize("mode", ["propagate", "star"])
+def test_dedup_components_rejects_max_iters_below_one(spark, mode):
+    from ukeeper_readability_spark.pipeline.dedup import dedup_components
+
+    pairs = spark.createDataFrame([(2, 1)], "doc_a long, doc_b long")
+    with pytest.raises(ValueError, match="max_iters"):
+        dedup_components(pairs, max_iters=0, mode=mode)

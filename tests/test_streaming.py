@@ -74,6 +74,28 @@ def test_sessionize_stream_runs_as_a_real_stream(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
+def test_sessionize_stream_once_cleans_up_on_failure(spark, tmp_path, monkeypatch):
+    """A failure after start() must neither leak the memory-sink temp view
+    nor leave the streaming query running."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    rows = _ev_rows([(1, 0, 1.0), (2, 60, 2.0)])
+    ev = spark.createDataFrame(
+        rows, "event_id long, ts timestamp, user_id long, event_type string, value double"
+    )
+    path = str(tmp_path / "ev_fail")
+    ev.write.parquet(path)
+
+    def fail(self, timeout=None):
+        raise RuntimeError("injected after start()")
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", fail)
+    with pytest.raises(RuntimeError, match="injected"):
+        run_sessionize_stream_once(spark, path, query_name="sess_fail_probe")
+    assert not spark.catalog.tableExists("sess_fail_probe")
+    assert all(q.name != "sess_fail_probe" for q in spark.streams.active)
+
+
 def _transcripts(spark, n, start=0):
     from ukeeper_readability_spark.data.synth import fixture_transcripts_distributed
 

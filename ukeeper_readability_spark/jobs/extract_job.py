@@ -231,6 +231,24 @@ def _extract_batches_inner(
         gc.collect()
 
 
+def _run_extract(
+    joined: DataFrame, cols: list, binary: bool, snippet_size, num_partitions, salt_buckets
+) -> DataFrame:
+    """The plan both extraction entry points share: explicit column pruning
+    into the scan, the optional conv_id (+ salt) repartition, the Arrow UDF."""
+    slim = joined.select(*cols)
+    if num_partitions:
+        if salt_buckets > 1:
+            salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt_buckets))
+            slim = slim.repartition(num_partitions, F.col("conv_id"), salt)
+        else:
+            slim = slim.repartition(num_partitions, F.col("conv_id"))
+    return slim.mapInPandas(
+        _make_extract_batches(snippet_size, binary=binary),
+        EXTRACTED_WITH_METRICS_SCHEMA,
+    )
+
+
 def run_extraction(
     joined: DataFrame,
     snippet_size: int = DEFAULT_SNIPPET_SIZE,
@@ -244,16 +262,7 @@ def run_extraction(
     task. Extraction is per-turn, so salting never changes results, only layout.
     """
     cols = ["conv_id", "turn_idx", "text", "tool", "rule_content", "routed_cloudflare"]
-    slim = joined.select(*cols)  # explicit column pruning into the scan
-    if num_partitions:
-        if salt_buckets > 1:
-            salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt_buckets))
-            slim = slim.repartition(num_partitions, F.col("conv_id"), salt)
-        else:
-            slim = slim.repartition(num_partitions, F.col("conv_id"))
-    return slim.mapInPandas(
-        _make_extract_batches(snippet_size), EXTRACTED_WITH_METRICS_SCHEMA
-    )
+    return _run_extract(joined, cols, False, snippet_size, num_partitions, salt_buckets)
 
 
 def run_extraction_bytes(
@@ -271,17 +280,7 @@ def run_extraction_bytes(
         "conv_id", "turn_idx", "body_bytes", "header_content_type", "tool",
         "rule_content", "routed_cloudflare",
     ]
-    slim = joined.select(*cols)
-    if num_partitions:
-        if salt_buckets > 1:
-            salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt_buckets))
-            slim = slim.repartition(num_partitions, F.col("conv_id"), salt)
-        else:
-            slim = slim.repartition(num_partitions, F.col("conv_id"))
-    return slim.mapInPandas(
-        _make_extract_batches(snippet_size, binary=True),
-        EXTRACTED_WITH_METRICS_SCHEMA,
-    )
+    return _run_extract(joined, cols, True, snippet_size, num_partitions, salt_buckets)
 
 
 def _metric_aggs():

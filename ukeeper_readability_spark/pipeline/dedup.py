@@ -351,11 +351,18 @@ def dedup_components(
 
     Pass `stats={}` to receive rounds-to-convergence instrumentation:
     {"mode", "rounds", "converged"} — the numbers BENCH.md reports for the
-    iterative stage of the dedup chain. Seed the dict with {"round_sec": []}
-    to ALSO receive wall seconds per round (r06; opt-in so the frozen
-    bench.py's single JSON line — which dumps this dict verbatim — does not
-    grow past the driver's bounded tail capture, the r5 parsed-null failure).
+    iterative stage of the dedup chain — plus "fallback_rounds" when the
+    star fallback ran. Seed the dict with {"round_sec": []} to ALSO receive
+    wall seconds per round, in both modes and across a fallback (propagate
+    rounds, then star rounds: len == rounds + fallback_rounds). Opt-in (r06)
+    because the frozen bench.py dumps this dict verbatim into its single
+    JSON line, which must stay short (the r5 parsed-null failure).
+
+    max_iters must be >= 1: no mode can return labels without running a
+    round.
     """
+    if max_iters < 1:
+        raise ValueError(f"max_iters must be >= 1, got {max_iters}")
     if stats is None:
         stats = {}
     if mode == "star":
@@ -462,12 +469,14 @@ def dedup_components(
                     msg + "; falling back to mode='star' (O(log^2 n) rounds)",
                     stacklevel=2,
                 )
-                fb: dict = {}
+                fb: dict = {"round_sec": []}
                 out = _components_star(pairs, key_a, key_b, max_iters, fb)
                 stats.update(
                     mode="propagate->star", fallback_rounds=fb["rounds"],
                     converged=fb["converged"],
                 )
+                if "round_sec" in stats:
+                    stats["round_sec"] = round_sec + fb["round_sec"]
                 return out
             warnings.warn(msg + "; returning PARTIAL labels", stacklevel=2)
         return labels.select(
@@ -530,8 +539,10 @@ def _components_star(
         fp = fingerprint(e)
         converged = False
         rounds = 0
+        round_sec: list = []
         for _ in range(max_iters):
             rounds += 1
+            _t0 = time.perf_counter()
             # ---- large-star over the symmetric neighborhood ----
             sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
             mins = (
@@ -571,11 +582,14 @@ def _components_star(
                 .localCheckpoint(eager=False)
             )
             new_fp = fingerprint(e)
+            round_sec.append(round(time.perf_counter() - _t0, 3))
             if new_fp == fp:
                 converged = True
                 break
             fp = new_fp
         if stats is not None:
+            if "round_sec" in stats:
+                stats["round_sec"] = round_sec
             stats.update(mode="star", rounds=rounds, converged=converged)
         # at the fixpoint e = {(member, root)}; singletons have no edge
         roots = e.select(F.col("u").alias("doc_id"), F.col("v").alias("component_id"))

@@ -1,14 +1,32 @@
 """Similarity search over an embedding column (array<float>).
 
-Brute-force cosine top-k as the exactness baseline, and a bucketed (IVF-style)
-variant as the scale path: search only within a coarse partition instead of the
-full corpus. Dot products run JVM-side via F.aggregate/F.zip_with (whole-stage
-codegen) — no Python in the hot loop.
+The four cosine top-k operators share ONE scoring core (`_score_topk`) and
+differ only in how they generate candidates (the HERO-style split of
+candidate partitioning from scoring):
+
+- `cosine_topk_bruteforce`: every corpus row (broadcast cross join) — the
+  exactness baseline;
+- `cosine_topk_bucketed`: the corpus rows sharing the query's precomputed
+  coarse bucket;
+- `cosine_topk_ivf_lsh`: the buckets of an in-engine random-hyperplane LSH
+  quantizer, multi-probed on the query side;
+- `cosine_topk_ivf_kmeans`: the cells of a fitted k-means quantizer, likewise
+  multi-probed.
+
+Each generator builds the corpus side (neighbor_id, nvec, _nn[, bucket]) and
+the query side (query_id, qvec, _qn[, bucket]) with one shared per-row norm
+projection; the core joins them (broadcasting the query side), drops the
+self pair, scores the 6 dp cosine and keeps rank <= k per query. A probe list
+never repeats a bucket and each corpus row lives in exactly one bucket, so a
+(query, neighbor) pair is scored at most once and no dedup pass is needed.
+Dot products run JVM-side via F.aggregate/F.zip_with — no Python in the hot
+loop.
 
 At 100 TB scale: brute force is O(Q·N) — only for small Q against a broadcast
-query set; the IVF path shuffles once on the coarse key and bounds each task's
-candidate set to one bucket. Scores are rounded to 6 dp and ties broken by
-neighbor id so results are deterministic and oracle-comparable.
+query set; the IVF paths bound each query's candidate set to its probed
+buckets, and the plan shuffles once, on the query id for the rank window.
+Scores are rounded to 6 dp and ties broken by neighbor id so results are
+deterministic and oracle-comparable.
 """
 
 from __future__ import annotations
@@ -20,21 +38,61 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
+def _zip_sum(a, b, f):
+    return F.aggregate(F.zip_with(a, b, f), F.lit(0.0), lambda acc, v: acc + v)
+
+
 def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    return _zip_sum(a, b, lambda x, y: x.cast("double") * y.cast("double"))
 
 
 def _norm(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+    return F.sqrt(_dot(a, a))
+
+
+def _normed(df: DataFrame, id_col: str, vec_col: str, names, *extra) -> DataFrame:
+    """(id, vec, norm) renamed to `names`, plus `extra` columns. Norms are
+    computed ONCE PER ROW before any join (r06): higher-order aggregates are
+    interpreted, and folding both norms per (query, neighbor) pair costs
+    O(Q·N) norm evaluations instead of O(Q + N). Same doubles either way."""
+    i, v, n = names
+    return df.select(
+        F.col(id_col).alias(i),
+        F.col(vec_col).alias(v),
+        _norm(F.col(vec_col)).alias(n),
+        *extra,
+    )
+
+
+# (id, vec, norm) column names of the corpus and query sides _score_topk reads
+_E = ("neighbor_id", "nvec", "_nn")
+_Q = ("query_id", "qvec", "_qn")
+
+
+def _cosine(a: str, b: str, na: str, nb: str):
+    return F.round(_dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb)), 6)
+
+
+def _score_topk(e: DataFrame, q: DataFrame, on, k: int) -> DataFrame:
+    """The scoring core of every top-k operator.
+
+    e: (neighbor_id, nvec, _nn[, bucket]); q: (query_id, qvec, _qn[, bucket]).
+    `on=None` scores every pair (broadcast cross join); otherwise only pairs
+    that agree on the `on` column (broadcast hash join). Output:
+    (query_id, neighbor_id, cosine, rank) with rank <= k.
+    """
+    q = F.broadcast(q)
+    pairs = e.crossJoin(q) if on is None else e.join(q, on)
+    scored = pairs.filter(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id", "neighbor_id", _cosine("qvec", "nvec", "_qn", "_nn").alias("cosine")
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
 
@@ -50,40 +108,9 @@ def cosine_topk_bruteforce(
 
     Output: (query_id, neighbor_id, cosine, rank).
     """
-    # norms are computed ONCE PER ROW on each side before the join (r06):
-    # higher-order aggregates are interpreted, and the old per-pair shape
-    # re-folded both norms for every (query, neighbor) pair — O(Q·N) norm
-    # evaluations instead of O(Q + N). Same doubles, same rounded values.
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("_qn"),
-    )
-    e = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nvec"),
-        _norm(F.col(vec_col)).alias("_nn"),
-    )
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("qvec"), F.col("nvec")) / (F.col("_qn") * F.col("_nn")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    e = _normed(embeddings, id_col, vec_col, _E)
+    q = _normed(queries, query_id_col, vec_col, _Q)
+    return _score_topk(e, q, None, k)
 
 
 def embedding_near_duplicates(
@@ -111,32 +138,15 @@ def embedding_near_duplicates(
     sized = embeddings.withColumn(
         "_bsize", F.count(F.lit(1)).over(Window.partitionBy(bucket_col))
     ).filter(F.col("_bsize") <= max_bucket)
-    # per-row norms before the self-join (r06): the within-bucket pair space
-    # is O(b²) while rows are O(b) — folding the norm per pair was the
-    # dominant interpreted-expression cost at scale. Same doubles.
-    a = sized.select(
-        F.col(id_col).alias("doc_a"),
-        F.col(vec_col).alias("avec"),
-        _norm(F.col(vec_col)).alias("_an"),
-        F.col(bucket_col).alias("bucket"),
-    )
-    b = sized.select(
-        F.col(id_col).alias("doc_b"),
-        F.col(vec_col).alias("bvec"),
-        _norm(F.col(vec_col)).alias("_bn"),
-        F.col(bucket_col).alias("bucket"),
-    )
+    # per-row norms before the self-join (see _normed): the within-bucket
+    # pair space is O(b²) while rows are O(b)
+    bucket = F.col(bucket_col).alias("bucket")
+    a = _normed(sized, id_col, vec_col, ("doc_a", "avec", "_an"), bucket)
+    b = _normed(sized, id_col, vec_col, ("doc_b", "bvec", "_bn"), bucket)
     return (
         a.join(b, "bucket")
         .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                _dot(F.col("avec"), F.col("bvec")) / (F.col("_an") * F.col("_bn")),
-                6,
-            ).alias("cosine"),
-        )
+        .select("doc_a", "doc_b", _cosine("avec", "bvec", "_an", "_bn").alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 
@@ -168,42 +178,13 @@ def cosine_topk_bucketed(
     """IVF-style top-k: candidates restricted to the query's coarse bucket.
 
     Here the coarse quantizer is the precomputed `label` column (in production:
-    a k-means assignment or LSH bucket). One shuffle on the bucket key; each
-    task scans a single bucket — the 100 TB path.
+    a k-means assignment or LSH bucket). Each query scores only the corpus
+    rows of its own bucket — the 100 TB path.
     """
-    # per-row norms before the join (r06) — see cosine_topk_bruteforce
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("_qn"),
-        F.col(bucket_col).alias("bucket"),
-    )
-    e = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nvec"),
-        _norm(F.col(vec_col)).alias("_nn"),
-        F.col(bucket_col).alias("bucket"),
-    )
-    scored = (
-        e.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("qvec"), F.col("nvec")) / (F.col("_qn") * F.col("_nn")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    bucket = F.col(bucket_col).alias("bucket")
+    e = _normed(embeddings, id_col, vec_col, _E, bucket)
+    q = _normed(queries, query_id_col, vec_col, _Q, bucket)
+    return _score_topk(e, q, "bucket", k)
 
 
 # ---------------------------------------------------------------------------
@@ -229,12 +210,18 @@ def _plane_lit(plane: int, dim: int):
     return F.array(*[F.lit(hyperplane_component(plane, j)) for j in range(dim)])
 
 
-def _plane_dot(vec_col, plane: int, dim: int):
-    return F.aggregate(
-        F.zip_with(vec_col, _plane_lit(plane, dim), lambda x, p: x.cast("double") * p),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def _plane_dots(vec, n_planes: int, dim: int) -> list:
+    """v · plane_i for every plane, rounded to 6 dp so an engine-vs-oracle
+    ULP wobble near zero can't flip a sign bit."""
+    return [F.round(_dot(vec, _plane_lit(i, dim)), 6) for i in range(n_planes)]
+
+
+def _sign_bucket(dots: list):
+    """Bucket id with bit i = (dots[i] >= 0)."""
+    bucket = F.lit(0)
+    for i, d in enumerate(dots):
+        bucket = bucket + F.when(d >= 0, F.lit(2**i)).otherwise(F.lit(0))
+    return bucket.cast("int")
 
 
 def with_hyperplane_bucket(
@@ -249,12 +236,9 @@ def with_hyperplane_bucket(
     The sign is taken on round(dot, 6) so an engine-vs-oracle ULP wobble near
     zero can't flip a bit. Pure codegen expressions — no shuffle, no Python.
     """
-    bucket = F.lit(0)
-    for i in range(n_planes):
-        bucket = bucket + F.when(
-            F.round(_plane_dot(F.col(vec_col), i, dim), 6) >= 0, F.lit(2**i)
-        ).otherwise(F.lit(0))
-    return df.withColumn(out_col, bucket.cast("int"))
+    return df.withColumn(
+        out_col, _sign_bucket(_plane_dots(F.col(vec_col), n_planes, dim))
+    )
 
 
 def hyperplane_probe_buckets(
@@ -267,16 +251,14 @@ def hyperplane_probe_buckets(
 ) -> DataFrame:
     """Multi-probe bucket list for the QUERY side: the home bucket plus the
     Hamming-1 flips of the (n_probes - 1) planes with the smallest |dot| —
-    the standard multi-probe LSH recall lever without another index."""
-    dots = F.array(
-        *[F.round(_plane_dot(F.col(vec_col), i, dim), 6) for i in range(n_planes)]
+    the standard multi-probe LSH recall lever without another index. Each
+    flip clears or sets a different plane's bit, so the list never repeats a
+    bucket."""
+    df = df.withColumn("_dots", F.array(*_plane_dots(F.col(vec_col), n_planes, dim)))
+    home = _sign_bucket(
+        [F.element_at(F.col("_dots"), i + 1) for i in range(n_planes)]
     )
-    home = F.lit(0)
-    for i in range(n_planes):
-        home = home + F.when(
-            F.element_at(dots, i + 1) >= 0, F.lit(2**i)
-        ).otherwise(F.lit(0))
-    df = df.withColumn("_dots", dots).withColumn("_home", home.cast("int"))
+    df = df.withColumn("_home", home)
     # rank planes by |dot| ascending; flip the first (n_probes-1)
     order = F.array_sort(
         F.transform(
@@ -310,45 +292,15 @@ def cosine_topk_ivf_lsh(
 ) -> DataFrame:
     """IVF ANN with an in-engine LSH coarse quantizer: bucket assignment is
     computed (not assumed), queries probe `n_probes` buckets, candidates are
-    scanned within-bucket only. One shuffle on the bucket key."""
-    # per-row norms before the join (r06) — see cosine_topk_bruteforce
+    scanned within-bucket only."""
     e = with_hyperplane_bucket(
-        embeddings.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("nvec"),
-            _norm(F.col(vec_col)).alias("_nn"),
-        ),
-        "nvec", n_planes, dim, "bucket",
+        _normed(embeddings, id_col, vec_col, _E), "nvec", n_planes, dim, "bucket"
     )
     q = hyperplane_probe_buckets(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            _norm(F.col(vec_col)).alias("_qn"),
-        ),
+        _normed(queries, query_id_col, vec_col, _Q),
         "qvec", n_planes, dim, n_probes, "probe_buckets",
-    ).select("query_id", "qvec", "_qn", F.explode("probe_buckets").alias("bucket"))
-    scored = (
-        e.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("qvec"), F.col("nvec")) / (F.col("_qn") * F.col("_nn")),
-                6,
-            ).alias("cosine"),
-        )
-        .distinct()  # multi-probe can reach the same neighbor twice
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    ).select(*_Q, F.explode("probe_buckets").alias("bucket"))
+    return _score_topk(e, q, "bucket", k)
 
 
 def kmeans_fit(
@@ -366,7 +318,7 @@ def kmeans_fit(
 
     Portable arithmetic: updated centroid components are rounded to 6 dp
     inside the agg (F.round(avg)), and assignment distances are rounded to
-    6 dp before the argmin (_assign_to_centroids) — so the whole fit is
+    6 dp before the argmin (_centroid_dists) — so the whole fit is
     bit-replicable in DuckDB (pipeline/oracles.py ann_ivf_kmeans_sql), the
     same portability pattern the LSH quantizer oracle uses. FP-sum-order
     differences between engines are ~1e-12, far below the rounding grain.
@@ -391,7 +343,9 @@ def kmeans_fit(
     # empty-cluster fallback would otherwise index past the init list)
     n_clusters = len(centroids)
     for _ in range(iters):
-        assigned = _assign_to_centroids(base, centroids, "_v")
+        assigned = base.withColumn(
+            "cluster_id", F.array_min(_centroid_dists(centroids, F.col("_v")))["c"]
+        )
         dim = len(centroids[0])
         upd = (
             assigned.select("cluster_id", F.posexplode("_v").alias("pos", "val"))
@@ -413,36 +367,26 @@ def kmeans_fit(
     return centroids
 
 
-def _centroid_dists(centroids: list, vec_col: str) -> list:
-    """Squared distances to literal centroids, rounded to 6 dp — the rounding
-    makes the argmin (with cluster-id tie-break) engine-portable."""
-    return [
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col(vec_col),
-                    F.array(*[F.lit(x) for x in c]),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            6,
-        ).alias(f"_d{i}")
-        for i, c in enumerate(centroids)
-    ]
-
-
-def _assign_to_centroids(df: DataFrame, centroids: list, vec_col: str) -> DataFrame:
-    """argmin over 6dp-rounded squared distance — ties to lowest cluster id."""
-    dists = _centroid_dists(centroids, vec_col)
-    arr = F.array(
-        *[F.struct(F.col(f"_d{i}").alias("d"), F.lit(i).alias("c")) for i in range(len(centroids))]
-    )
-    return (
-        df.select("*", *dists)
-        .withColumn("cluster_id", F.array_min(arr)["c"])
-        .drop(*[f"_d{i}" for i in range(len(centroids))])
+def _centroid_dists(centroids: list, vec):
+    """Array of (d, c) structs, one per literal centroid c: d is the squared
+    distance from `vec` (array<double>) rounded to 6 dp. The rounding makes
+    the ascending (d, c) order — argmin with cluster-id tie-break — and thus
+    assignment and probing engine-portable."""
+    return F.array(
+        *[
+            F.struct(
+                F.round(
+                    _zip_sum(
+                        vec,
+                        F.array(*[F.lit(x) for x in c]),
+                        lambda x, y: (x - y) * (x - y),
+                    ),
+                    6,
+                ).alias("d"),
+                F.lit(i).alias("c"),
+            )
+            for i, c in enumerate(centroids)
+        ]
     )
 
 
@@ -454,21 +398,12 @@ def probe_centroids(
     out_col: str = "probe_buckets",
 ) -> DataFrame:
     """The n_probes nearest centroid ids per row (ascending rounded distance,
-    cluster-id tie-break) — the k-means mirror of hyperplane_probe_buckets."""
-    dists = _centroid_dists(centroids, vec_col)
-    arr = F.array_sort(
-        F.array(
-            *[
-                F.struct(F.col(f"_d{i}").alias("d"), F.lit(i).alias("c"))
-                for i in range(len(centroids))
-            ]
-        )
-    )
-    probes = F.transform(F.slice(arr, 1, n_probes), lambda s: s["c"])
-    return (
-        df.select("*", *dists)
-        .withColumn(out_col, probes)
-        .drop(*[f"_d{i}" for i in range(len(centroids))])
+    cluster-id tie-break) — the k-means mirror of hyperplane_probe_buckets.
+    `vec_col` must be array<double>. A slice of distinct cluster ids, so the
+    list never repeats a cell."""
+    nearest = F.array_sort(_centroid_dists(centroids, F.col(vec_col)))
+    return df.withColumn(
+        out_col, F.transform(F.slice(nearest, 1, n_probes), lambda s: s["c"])
     )
 
 
@@ -479,8 +414,7 @@ def with_kmeans_bucket(
     out_col: str = "km_bucket",
 ) -> DataFrame:
     dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    out = _assign_to_centroids(df.withColumn("_v", dbl), centroids, "_v")
-    return out.withColumnRenamed("cluster_id", out_col).drop("_v")
+    return df.withColumn(out_col, F.array_min(_centroid_dists(centroids, dbl))["c"])
 
 
 def cosine_topk_ivf_kmeans(
@@ -496,46 +430,16 @@ def cosine_topk_ivf_kmeans(
     """IVF ANN over a fitted k-means quantizer. Queries probe their n_probes
     nearest centroid cells (mirroring the LSH path's multi-probe) — the
     standard recall lever when clusters overlap; candidates still bounded to
-    the probed cells, same one-shuffle join shape."""
-    # per-row norms before the join (r06) — see cosine_topk_bruteforce
+    the probed cells."""
     e = with_kmeans_bucket(
-        embeddings.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("nvec"),
-            _norm(F.col(vec_col)).alias("_nn"),
-        ),
-        centroids, "nvec", "bucket",
+        _normed(embeddings, id_col, vec_col, _E), centroids, "nvec", "bucket"
     )
     dbl = F.transform(F.col("qvec"), lambda x: x.cast("double"))
     q = probe_centroids(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            _norm(F.col(vec_col)).alias("_qn"),
-        ).withColumn("_v", dbl),
+        _normed(queries, query_id_col, vec_col, _Q).withColumn("_v", dbl),
         centroids, "_v", n_probes, "probe_buckets",
-    ).select("query_id", "qvec", "_qn", F.explode("probe_buckets").alias("bucket"))
-    scored = (
-        e.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("qvec"), F.col("nvec")) / (F.col("_qn") * F.col("_nn")),
-                6,
-            ).alias("cosine"),
-        )
-        .distinct()  # defensive vs probe overlap; neighbors live in one cell
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    ).select(*_Q, F.explode("probe_buckets").alias("bucket"))
+    return _score_topk(e, q, "bucket", k)
 
 
 def ann_recall_vs_bruteforce(approx: DataFrame, exact: DataFrame, k: int = 5) -> DataFrame:

@@ -104,6 +104,7 @@ def run_sessionize_stream_once(
         staged = tempfile.mkdtemp(prefix="ukeeper_stream_")
         os.symlink(events_path, os.path.join(staged, os.path.basename(events_path)))
         events_path = staged
+    q = None
     try:
         stream = spark.readStream.schema(schema).parquet(events_path)
         q = (
@@ -119,9 +120,13 @@ def run_sessionize_stream_once(
         # r5: one registered sink table per invocation accumulated in
         # long-lived sessions); localCheckpoint keeps the rows alive after
         # the view is gone without re-running the stream
-        out = spark.table(name).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(name)
-        return out
+        return spark.table(name).localCheckpoint(eager=True)
     finally:
+        # on the error path too: a failed run must not leave a running query
+        # or its registered sink view behind
+        if q is not None:
+            if q.isActive:
+                q.stop()
+            spark.catalog.dropTempView(name)
         if staged is not None:
             shutil.rmtree(staged, ignore_errors=True)
