@@ -94,21 +94,52 @@ def test_apple_maps_rule_path_end_to_end():
     assert "/2015/09/25/poiezdka-s-apple-maps/" in r["url"]
 
 
+# a page the R1 preprocessing regexes leave unchanged (no comments, no <br>
+# runs, no <font>): on a rule miss the general parser reuses the rule's parse
+CLEAN_PAGE = (
+    "<html><head><title>Clean Page</title></head><body>"
+    '<div class="content"><p>' + "Plain words about a clean page, again. " * 12
+    + '<a href="/more">more</a></p></div><div class="footer">footer</div>'
+    "</body></html>"
+)
+
+
 def test_rule_selector_miss_falls_back_to_general():
-    # readability_test.go:214-219: rule matching nothing → general parser output
-    with_rule = extract_document(
-        load("poiezdka-s-apple-maps"),
-        BASE + "/2015/09/25/poiezdka-s-apple-maps/",
-        rule_selector=".does-not-exist-anywhere p",
-        snippet_size=200,
-    )
-    general = extract_document(
-        load("poiezdka-s-apple-maps"),
-        BASE + "/2015/09/25/poiezdka-s-apple-maps/",
-        snippet_size=200,
-    )
-    assert with_rule["content"] == general["content"]
-    assert with_rule["content"]
+    # readability_test.go:214-219: rule matching nothing → general parser output.
+    # The clean page takes the parse-reuse branch. The commented one must not:
+    # R1's comment regex strips from the "<!--" inside the title attribute to
+    # the "-->" in the text, link included, which the rule's parse keeps.
+    commented = CLEAN_PAGE.replace(
+        '<a href="/more">', '<a title="<!--" href="/more">'
+    ).replace('<div class="footer">', '<p>Closing words. --></p><div class="footer">')
+    pages = [
+        (load("poiezdka-s-apple-maps"), BASE + "/2015/09/25/poiezdka-s-apple-maps/"),
+        (CLEAN_PAGE, "http://example.com/clean"),
+        (commented, "http://example.com/clean"),
+    ]
+    for page, url in pages:
+        with_rule = extract_document(
+            page, url, rule_selector=".does-not-exist-anywhere p", snippet_size=200
+        )
+        general = extract_document(page, url, snippet_size=200)
+        for k in ("content", "rich_content", "title", "links"):
+            assert with_rule[k] == general[k], k
+        assert with_rule["content"] and with_rule["title"]
+        assert with_rule["metrics"]["rule_hit"] == 0
+        assert with_rule["metrics"]["general_parse"] == 1
+
+
+def test_title_inside_body_is_found():
+    # extractor/readability.go:140 reads the first <title> anywhere; the
+    # head-only parse cannot see one inside <body>, so extraction re-parses
+    body = "<p>" + "Words of a page whose title sits in its body. " * 8 + "</p>"
+    for page in (
+        "<html><head></head><body><title>Body Title</title>" + body + "</body></html>",
+        "<html><head></head><body><!-- c --><title>Body Title</title>" + body + "</body></html>",
+    ):
+        for rule in (None, "#nomatch"):
+            r = extract_document(page, "http://example.com/t", rule_selector=rule)
+            assert r["title"] == "Body Title", (page, rule)
 
 
 def test_inline_article():

@@ -160,20 +160,11 @@ def test_ngram_jaccard_semijoin_prunes_noncandidates(spark, docs):
     plan — the semi-join prune is asserted on the pre-snapshot shape the
     operator builds, and the outer plan is asserted to consume the
     snapshots instead of recomputing the upstream pipeline."""
-    from pyspark.sql import functions as F
-
-    from ukeeper_readability_spark.pipeline.dedup import _shingle_array
+    from ukeeper_readability_spark.pipeline.dedup import _pruned_shingles
 
     pairs = minhash_lsh_pairs(docs, shingle_n=3, k=8, bands=4)
     # the pre-snapshot shape ngram_jaccard builds for its shingle table
-    cand = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .union(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    sh = docs.select(
-        F.col("doc_id"), _shingle_array("text", 3).alias("shingles")
-    ).join(cand, "doc_id", "left_semi")
+    sh = _pruned_shingles(docs, pairs, "text", "doc_id", 3)
     assert "LeftSemi" in sh._jdf.queryExecution().executedPlan().toString()
 
     out = ngram_jaccard(docs, pairs, shingle_n=3)
@@ -237,14 +228,13 @@ def test_dedup_components_star_mode_low_rounds_on_path(spark):
         for r in dedup_components(pairs, max_iters=8, mode="star").collect()
     }
     assert star == {i: 1 for i in range(1, 65)}
+    # diameter-bound: 8 propagation rounds cannot traverse 63 hops, so the
+    # default mode spends all 8 and hands over to star
+    stats: dict = {}
     with pytest.warns(UserWarning, match="did not converge"):
-        prop = {
-            r.doc_id: r.component_id
-            for r in dedup_components(
-                pairs, max_iters=8, on_exhaustion="partial"
-            ).collect()
-        }
-    assert prop != star  # diameter-bound: 8 rounds cannot traverse 63 hops
+        dedup_components(pairs, max_iters=8, stats=stats)
+    assert stats["mode"] == "propagate->star"
+    assert stats["rounds"] == 8
 
 
 def test_dedup_components_on_filter_derived_pairs(spark, docs):
@@ -279,8 +269,7 @@ def test_dedup_components_on_filter_derived_pairs(spark, docs):
 
 def test_dedup_components_exhaustion_never_silent(spark):
     """ADVICE r4: propagate exhausting max_iters must not return partial
-    labels silently — default falls back to star (correct result + warning);
-    on_exhaustion='raise' raises."""
+    labels silently — it falls back to star (correct result + warning)."""
     from ukeeper_readability_spark.pipeline.dedup import dedup_components
 
     pairs = spark.createDataFrame(
@@ -292,10 +281,6 @@ def test_dedup_components_exhaustion_never_silent(spark):
             for r in dedup_components(pairs, max_iters=8).collect()
         }
     assert got == {i: 1 for i in range(1, 65)}  # fallback result is CORRECT
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_components(pairs, max_iters=8, on_exhaustion="raise").collect()
-    with pytest.raises(ValueError):
-        dedup_components(pairs, max_iters=8, on_exhaustion="nope")
 
 
 def test_dedup_components_modes_agree(spark):

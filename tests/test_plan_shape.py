@@ -172,18 +172,9 @@ def test_ngram_jaccard_semi_join_not_forced_broadcast(spark):
     # r06: the pruned shingle table is snapshot (localCheckpoint), so the
     # semi prune lives in the snapshot's own plan; assert it on the
     # pre-snapshot shape the operator builds, unhinted there too
-    from pyspark.sql import functions as F
+    from ukeeper_readability_spark.pipeline.dedup import _pruned_shingles
 
-    from ukeeper_readability_spark.pipeline.dedup import _shingle_array
-
-    cand = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .union(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    sh = docs.select(
-        "doc_id", _shingle_array("text", 3).alias("shingles")
-    ).join(cand, "doc_id", "left_semi")
+    sh = _pruned_shingles(docs, pairs, "text", "doc_id", 3)
     sh_analyzed = sh._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in sh_analyzed, sh_analyzed
     assert "LeftSemi" in sh_analyzed, sh_analyzed

@@ -56,16 +56,19 @@ def _custom_parser(raw_doc, rule_selector: str):
     return get_text(joined, ""), joined
 
 
-def get_content(body: str, rule_selector: Optional[str], raw_doc=None, donate_raw_doc=False):
+def get_content(body: str, rule_selector: Optional[str], raw_doc=None):
     """getContent (readability.go:168-208): custom rule first, fallback general.
 
     Returns (content, rich, meta) where meta carries per-document extraction
     metrics (rule_hit / general_parse / Document.stats counters).
 
-    donate_raw_doc=True lets the general parser take ownership of raw_doc
-    (mutating it) when R1 preprocessing provably wouldn't change `body` —
-    callers must not read raw_doc afterwards.
+    raw_doc is a full parse of `body` for the rule selector (parsed here when
+    absent; unused without a rule). On a rule miss the general parser takes
+    ownership of it (and mutates it) when R1 preprocessing provably wouldn't
+    change `body`, saving a second parse — callers must not read raw_doc
+    after a rule miss.
     """
+    preparsed = None
     if rule_selector:
         if raw_doc is None:
             raw_doc = parse(body)
@@ -74,9 +77,8 @@ def get_content(body: str, rule_selector: Optional[str], raw_doc=None, donate_ra
             return content, rich, {"rule_hit": 1, "general_parse": 0}
         except ExtractError:
             pass
-    preparsed = None
-    if donate_raw_doc and raw_doc is not None and preprocessing_is_identity(body):
-        preparsed = raw_doc
+        if preprocessing_is_identity(body):
+            preparsed = raw_doc
     content, rich, stats = _general_parser(body, preparsed=preparsed)
     meta = {"rule_hit": 0, "general_parse": 1}
     meta.update(stats)
@@ -120,30 +122,25 @@ def extract_document(
     body = text if text is not None else ""
     url = url or ""
 
-    # Raw-body parse strategy (all read-only before mutation; the reference
-    # parses the same string three times — extractor/text.go:78,
-    # readability.go:135, readability.go:182):
-    #   rule present          → full parse (selector needs the body)
-    #   preprocessing no-op   → full parse, donated to the general parser
-    #   otherwise             → head-only parse (complete for Find("head meta")
-    #     and for head titles; full-parse fallback for the title-in-body case)
-    if rule_selector or preprocessing_is_identity(body):
-        raw_doc = parse(body)
-        donate = True  # full tree; general parser may take it when identity holds
-    else:
-        raw_doc = parse_head(body)
-        donate = False
+    # Raw-body parse (read-only until get_content; the reference parses the
+    # same string three times — extractor/text.go:78, readability.go:135,
+    # readability.go:182):
+    #   rule present → full parse: the selector needs the body, and on a rule
+    #     miss get_content hands the tree to the general parser when R1
+    #     preprocessing is a no-op
+    #   no rule      → head-only parse: complete for Find("head meta") and for
+    #     head titles (the general parser builds its own tree from the
+    #     preprocessed string); full-parse fallback for the title-in-body case
+    raw_doc = parse(body) if rule_selector else parse_head(body)
 
     content_type, charset = detect_type_charset(raw_doc, header_content_type)
     # title read before get_content: the general parser may take ownership of
     # raw_doc and mutate it; reading first yields the same value the reference
     # gets from its own fresh parse (extractor/readability.go:135-140)
     title = first_title_text(raw_doc)
-    if not title and not donate and not rule_selector and "<title" in body.lower():
+    if not title and not rule_selector and "<title" in body.lower():
         title = first_title_text(parse(body))
-    content, rich, meta = get_content(
-        body, rule_selector, raw_doc=raw_doc, donate_raw_doc=donate
-    )
+    content, rich, meta = get_content(body, rule_selector, raw_doc=raw_doc)
 
     try:
         domain = urlsplit(url).netloc
@@ -155,9 +152,7 @@ def extract_document(
     excerpt = get_snippet(content, snippet_size)
 
     article_doc = parse(rich)
-    image, all_images, ok = extract_pics(article_doc)
-    if not ok:
-        image, all_images = "", None
+    image, all_images, _ = extract_pics(article_doc)
 
     return {
         "content": content,

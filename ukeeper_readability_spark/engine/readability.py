@@ -82,11 +82,12 @@ class Document:
     """Port of go-readability Document (readability.go:46-145)."""
 
     def __init__(self, input_html: str, preparsed: Node = None):
-        """`preparsed` may hand over an existing parse of input_html when the
-        R1 preprocessing regexes (br-runs, font tags, comments) provably do not
-        modify the input — the caller's tree then IS what _initialize_html
-        would build, and we may take ownership (we mutate it). Retries always
-        re-parse from the original string."""
+        """`preparsed` hands over an existing full parse of input_html. Only
+        get_content passes one: the tree its rule selector missed on, when
+        preprocessing_is_identity holds (the R1 regexes — br-runs, font tags,
+        comments — cannot modify the input), so the tree IS what
+        _initialize_html would build. We take ownership (we mutate it).
+        Retries always re-parse from the original string."""
         self.input = input_html
         self.document: Node = None  # document root
         self.content = ""

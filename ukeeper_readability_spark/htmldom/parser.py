@@ -953,14 +953,3 @@ def parse_head(s: str) -> Node:
             break
     tb._ensure_body()
     return tb.doc
-
-
-def parse_fragment_has_body(s: str) -> bool:
-    """Whether goquery would see a non-synthesized <body>.
-
-    Not used: goquery's Find("body").Length() counts the auto-created body too, so
-    the reference's no-body fallback (go-readability readability.go:98-101) only
-    triggers on inputs x/net/html cannot derive a body for; with a full document
-    parse a body always exists. Kept for documentation.
-    """
-    return True

@@ -18,9 +18,10 @@ Scale notes:
 
 from __future__ import annotations
 
+import gc
 import os
-
 import uuid
+from itertools import repeat
 from typing import Iterator, Optional
 
 import pandas as pd
@@ -28,8 +29,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..engine.extract import DEFAULT_SNIPPET_SIZE, extract_document
+from ..engine.extract import (
+    DEFAULT_SNIPPET_SIZE,
+    extract_document,
+    extract_document_bytes,
+)
+from ..htmldom.gostr import to_valid_utf8
 from .schemas import (
+    EXTRACTED_FIELDS,
     EXTRACTED_WITH_METRICS_SCHEMA,
     MANIFEST_SCHEMA,
     RULES_SCHEMA,
@@ -138,97 +145,59 @@ def extract_by_rule(
 
 
 def _make_extract_batches(snippet_size: int, binary: bool = False):
+    columns = EXTRACTED_WITH_METRICS_SCHEMA.fieldNames()
+
     def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # DOM trees are parent/child reference cycles; threshold-based GC
         # thrashes on them (~10% of extraction time). Collect once per Arrow
         # batch instead — bounded memory, no mid-document pauses.
-        import gc
-
         gc_was_enabled = gc.isenabled()
         gc.disable()
         try:
-            yield from _extract_batches_inner(batches, snippet_size, binary)
+            for pdf in batches:
+                rows = []
+                headers = pdf["header_content_type"].values if binary else repeat(None)
+                for conv, turn, text, tool, rule, routed, header in zip(
+                    pdf["conv_id"].values, pdf["turn_idx"].values,
+                    pdf["body_bytes" if binary else "text"].values,
+                    pdf["tool"].values, pdf["rule_content"].values,
+                    pdf["routed_cloudflare"].values, headers,
+                ):
+                    tool = tool if tool is not None else ""
+                    rule = rule if rule else None
+                    if binary:
+                        r = extract_document_bytes(
+                            text if text is not None else b"", tool,
+                            rule_selector=rule, snippet_size=snippet_size,
+                            header_content_type=header if header else None,
+                        )
+                        # Arrow string columns must be valid UTF-8: corrupt input
+                        # bytes survive the engine as surrogateescape chars (Go Nop
+                        # parity, engine/charset.py) and become U+FFFD only here, at
+                        # the columnar boundary. images/lead can carry corrupt bytes
+                        # from src attributes verbatim (links are already %XX-escaped
+                        # by normalize_links, scrubbed anyway for defense).
+                        for k in ("content", "rich_content", "title", "excerpt",
+                                  "lead_image_url", "domain"):
+                            r[k] = to_valid_utf8(r[k])
+                        for k in ("images", "links"):
+                            if r[k]:
+                                r[k] = [to_valid_utf8(x) for x in r[k]]
+                    else:
+                        r = extract_document(
+                            text if text is not None else "", tool,
+                            rule_selector=rule, snippet_size=snippet_size,
+                        )
+                    r.update(conv_id=conv, turn_idx=turn, routed_cloudflare=bool(routed))
+                    r.update(("m_" + k, v) for k, v in r.pop("metrics").items())
+                    rows.append(r)
+                yield pd.DataFrame(rows, columns=columns)
+                gc.collect()
         finally:
             if gc_was_enabled:
                 gc.enable()
 
     return extract_batches
-
-
-def _extract_batches_inner(
-    batches: Iterator[pd.DataFrame], snippet_size: int, binary: bool = False
-):
-    import gc
-
-    from ..engine.extract import extract_document_bytes
-    from ..htmldom.gostr import to_valid_utf8 as _valid
-
-    for pdf in batches:
-        out = {k: [] for k in (
-            "conv_id", "turn_idx", "content", "rich_content", "domain", "url",
-            "title", "excerpt", "lead_image_url", "images", "links", "type",
-            "charset", "routed_cloudflare", "m_nodes_scored",
-            "m_candidates_rejected", "m_bytes_stripped", "m_rule_hit",
-            "m_general_parse", "m_retries_relaxed",
-        )}
-        texts = pdf["body_bytes" if binary else "text"].values
-        tools = pdf["tool"].values
-        rules_col = pdf["rule_content"].values
-        routed = pdf["routed_cloudflare"].values
-        convs = pdf["conv_id"].values
-        turns = pdf["turn_idx"].values
-        headers = pdf["header_content_type"].values if binary else None
-        for i in range(len(pdf)):
-            if binary:
-                r = extract_document_bytes(
-                    texts[i] if texts[i] is not None else b"",
-                    tools[i] if tools[i] is not None else "",
-                    rule_selector=rules_col[i] if rules_col[i] else None,
-                    snippet_size=snippet_size,
-                    header_content_type=headers[i] if headers[i] else None,
-                )
-                # Arrow string columns must be valid UTF-8: corrupt input
-                # bytes survive the engine as surrogateescape chars (Go Nop
-                # parity, engine/charset.py) and become U+FFFD only here, at
-                # the columnar boundary. images/lead can carry corrupt bytes
-                # from src attributes verbatim (links are already %XX-escaped
-                # by normalize_links, scrubbed anyway for defense).
-                for k in ("content", "rich_content", "title", "excerpt",
-                          "lead_image_url", "domain"):
-                    r[k] = _valid(r[k])
-                for k in ("images", "links"):
-                    if r[k]:
-                        r[k] = [_valid(x) for x in r[k]]
-            else:
-                r = extract_document(
-                    texts[i] if texts[i] is not None else "",
-                    tools[i] if tools[i] is not None else "",
-                    rule_selector=rules_col[i] if rules_col[i] else None,
-                    snippet_size=snippet_size,
-                )
-            m = r["metrics"]
-            out["conv_id"].append(convs[i])
-            out["turn_idx"].append(turns[i])
-            out["content"].append(r["content"])
-            out["rich_content"].append(r["rich_content"])
-            out["domain"].append(r["domain"])
-            out["url"].append(r["url"])
-            out["title"].append(r["title"])
-            out["excerpt"].append(r["excerpt"])
-            out["lead_image_url"].append(r["lead_image_url"])
-            out["images"].append(r["images"])
-            out["links"].append(r["links"])
-            out["type"].append(r["type"])
-            out["charset"].append(r["charset"])
-            out["routed_cloudflare"].append(bool(routed[i]))
-            out["m_nodes_scored"].append(m["nodes_scored"])
-            out["m_candidates_rejected"].append(m["candidates_rejected"])
-            out["m_bytes_stripped"].append(m["bytes_stripped"])
-            out["m_rule_hit"].append(m["rule_hit"])
-            out["m_general_parse"].append(m["general_parse"])
-            out["m_retries_relaxed"].append(m["retries_relaxed"])
-        yield pd.DataFrame(out)
-        gc.collect()
 
 
 def _run_extract(
@@ -308,11 +277,7 @@ def partition_metrics(extracted: DataFrame) -> DataFrame:
     )
 
 
-EXTRACTED_COLS = [
-    "conv_id", "turn_idx", "content", "rich_content", "domain", "url", "title",
-    "excerpt", "lead_image_url", "images", "links", "type", "charset",
-    "routed_cloudflare",
-]
+EXTRACTED_COLS = [f.name for f in EXTRACTED_FIELDS]
 
 
 def write_with_manifest(

@@ -66,20 +66,6 @@ def _shingle_array(text_col: str, n: int):
     return F.element_at(F.transform(F.array(toks_raw), _body), 1)
 
 
-def _shingles(docs: DataFrame, text_col: str, key_col: str, n: int) -> DataFrame:
-    """Distinct word n-gram shingles per doc: (doc_id, shingle) rows.
-
-    Used where the downstream op genuinely needs the exploded relation
-    (jaccard set intersection). Distinctness comes from array_distinct BEFORE
-    the explode — the old explode→distinct shape shuffled the whole shingle
-    relation (~75× the doc count) just to dedup within-doc repeats.
-    """
-    return docs.select(
-        F.col(key_col).alias("doc_id"),
-        F.explode(_shingle_array(text_col, n)).alias("shingle"),
-    )
-
-
 def minhash_signatures(
     docs: DataFrame,
     text_col: str = "text",
@@ -179,6 +165,22 @@ def minhash_lsh_pairs(
     )
 
 
+def _pruned_shingles(
+    docs: DataFrame, pairs: DataFrame, text_col: str, key_col: str, n: int
+) -> DataFrame:
+    """(doc_id, shingles) for the docs that appear in a candidate pair: the
+    shingle table ngram_jaccard snapshots, before the snapshot (the plan
+    tests assert its unhinted left-semi prune on this exact shape)."""
+    cand = (
+        pairs.select(F.col("doc_a").alias("doc_id"))
+        .union(pairs.select(F.col("doc_b").alias("doc_id")))
+        .distinct()
+    )
+    return docs.select(
+        F.col(key_col).alias("doc_id"), _shingle_array(text_col, n).alias("shingles")
+    ).join(cand, "doc_id", "left_semi")
+
+
 def ngram_jaccard(
     docs: DataFrame,
     pairs: DataFrame,
@@ -215,19 +217,12 @@ def ngram_jaccard(
     tolerance of long chains.
     """
     pairs = pairs.select("doc_a", "doc_b").localCheckpoint(eager=False)
-    cand = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .union(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
     # the pruned (doc, shingle-array) table is joined on BOTH pair sides
     # (different keys, so no exchange reuse) — snapshot it too, so the scan +
     # shingle build runs once instead of once per side; bounded by the
     # candidate-doc count, strictly smaller than the pair snapshot above
-    sh = docs.select(
-        F.col(key_col).alias("doc_id"),
-        _shingle_array(text_col, shingle_n).alias("shingles"),
-    ).join(cand, "doc_id", "left_semi").localCheckpoint(eager=False)
+    sh = _pruned_shingles(docs, pairs, text_col, key_col, shingle_n)
+    sh = sh.localCheckpoint(eager=False)
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("_sa"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("_sb"))
     inter = F.size(F.array_intersect("_sa", "_sb"))
@@ -315,7 +310,6 @@ def dedup_components(
     key_b: str = "doc_b",
     max_iters: int = 20,
     mode: str = "propagate",
-    on_exhaustion: str = "star",
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components over the candidate-pair graph: (doc_id,
@@ -344,10 +338,8 @@ def dedup_components(
 
     Propagation that EXHAUSTS max_iters without converging has wrong labels
     for any component wider than max_iters hops — never returned silently
-    (ADVICE r4). `on_exhaustion` picks the recovery: "star" (default) warns
-    and re-solves with the diameter-independent star mode; "raise" raises
-    RuntimeError; "partial" warns and returns the unconverged labels (for
-    diagnostics/tests only).
+    (ADVICE r4): it warns and re-solves with the diameter-independent star
+    mode (stats report mode "propagate->star").
 
     Pass `stats={}` to receive rounds-to-convergence instrumentation:
     {"mode", "rounds", "converged"} — the numbers BENCH.md reports for the
@@ -367,8 +359,6 @@ def dedup_components(
         stats = {}
     if mode == "star":
         return _components_star(pairs, key_a, key_b, max_iters, stats)
-    if on_exhaustion not in ("star", "raise", "partial"):
-        raise ValueError(f"on_exhaustion: {on_exhaustion!r}")
     with _constraint_propagation_off(pairs):
         # materialize the directed edge list ONCE, then symmetrize from the
         # cached copy (r06): the former union-of-two-selects shape computed
@@ -458,27 +448,21 @@ def dedup_components(
             stats["round_sec"] = round_sec
         stats.update(mode="propagate", rounds=rounds, converged=converged)
         if not converged:
-            msg = (
+            warnings.warn(
                 f"dedup_components(mode='propagate') did not converge in "
                 f"{max_iters} rounds — a component is wider than max_iters hops"
+                "; falling back to mode='star' (O(log^2 n) rounds)",
+                stacklevel=2,
             )
-            if on_exhaustion == "raise":
-                raise RuntimeError(msg)
-            if on_exhaustion == "star":
-                warnings.warn(
-                    msg + "; falling back to mode='star' (O(log^2 n) rounds)",
-                    stacklevel=2,
-                )
-                fb: dict = {"round_sec": []}
-                out = _components_star(pairs, key_a, key_b, max_iters, fb)
-                stats.update(
-                    mode="propagate->star", fallback_rounds=fb["rounds"],
-                    converged=fb["converged"],
-                )
-                if "round_sec" in stats:
-                    stats["round_sec"] = round_sec + fb["round_sec"]
-                return out
-            warnings.warn(msg + "; returning PARTIAL labels", stacklevel=2)
+            fb: dict = {"round_sec": []}
+            out = _components_star(pairs, key_a, key_b, max_iters, fb)
+            stats.update(
+                mode="propagate->star", fallback_rounds=fb["rounds"],
+                converged=fb["converged"],
+            )
+            if "round_sec" in stats:
+                stats["round_sec"] = round_sec + fb["round_sec"]
+            return out
         return labels.select(
             F.col("node").alias("doc_id"), F.col("label").alias("component_id")
         )

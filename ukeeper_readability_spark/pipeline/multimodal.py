@@ -316,10 +316,6 @@ def _byte_hex(e: str) -> str:
     )
 
 
-def _le16(e: str) -> str:
-    return f"{_byte_hex(f'({e})%256')} || {_byte_hex(f'floor(({e})/256)')}"
-
-
 def _be32_small(e: str) -> str:  # values ≤ 65535
     return f"'0000' || {_byte_hex(f'floor(({e})/256)')} || {_byte_hex(f'({e})%256')}"
 
