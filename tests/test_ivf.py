@@ -6,7 +6,11 @@ runs on a deterministic hash-generated clustered corpus, the regime IVF exists
 for. The exactness of the LSH-bucket composition is separately value-hash
 gated against DuckDB (ann_cosine_ivf_lsh)."""
 
+import gc
 import hashlib
+import math
+import random
+import struct
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,12 +18,14 @@ from pyspark.sql import functions as F
 from ukeeper_readability_spark.pipeline import (
     ann_recall_vs_bruteforce,
     cosine_topk_bruteforce,
+    cosine_topk_bucketed,
     cosine_topk_ivf_kmeans,
     cosine_topk_ivf_lsh,
     kmeans_fit,
     with_hyperplane_bucket,
     with_kmeans_bucket,
 )
+from ukeeper_readability_spark.pipeline.similarity import _vector
 
 pytestmark = pytest.mark.spark
 
@@ -165,6 +171,9 @@ def test_kmeans_clamps_n_clusters_to_corpus_size(spark):
     empty = small.filter(F.col("vec_id") < 0)
     with pytest.raises(ValueError):
         kmeans_fit(empty, n_clusters=4, iters=1)
+    # no centroid, no cell: rejected rather than an always-null bucket
+    with pytest.raises(ValueError):
+        with_kmeans_bucket(small, [])
 
 
 def test_kmeans_ivf_probing_every_cell_is_bruteforce(spark, clustered, cluster_queries):
@@ -195,3 +204,73 @@ def test_lsh_multiprobe_scores_each_pair_once(spark, clustered, cluster_queries)
     for r in out:
         ranks.setdefault(r.query_id, []).append(r.rank)
     assert all(sorted(v) == list(range(1, len(v) + 1)) for v in ranks.values())
+
+
+def test_double_literals_round_trip_exactly(spark):
+    """Centroids and hyperplanes reach Spark as SQL text: every double,
+    including -0.0, subnormals, the extremes and non-finite values, must
+    come back with the same bits."""
+    rng = random.Random(11)
+    xs = [-0.0, 0.0, 5e-324, 2.225073858507201e-308, 2.2250738585072014e-308,
+          1.7976931348623157e308, -1.7976931348623157e308, 0.1, 1 / 3, 1e-05,
+          1e22, float("inf"), float("-inf")]
+    while len(xs) < 300:
+        x = struct.unpack(">d", rng.getrandbits(64).to_bytes(8, "big"))[0]
+        if not math.isnan(x):
+            xs.append(x)
+    xs.append(float("nan"))
+    got = spark.range(1).select(F.expr(_vector(xs)).alias("v")).collect()[0].v
+    assert len(got) == len(xs) and math.isnan(got[-1])
+    bits = f">{len(xs) - 1}d"
+    assert struct.pack(bits, *got[:-1]) == struct.pack(bits, *xs[:-1])
+
+
+def _py4j_calls(spark, build) -> int:
+    """py4j round trips made while `build()` constructs (not runs) a plan.
+    A first build resolves JVM classes and methods; only the second counts.
+    Memory-release commands ("m") are not counted: py4j sends them for
+    objects that died earlier, whenever the connection is next free."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    n = 0
+
+    def counting(command, *args, **kwargs):
+        nonlocal n
+        n += not command.startswith("m\n")
+        return send(command, *args, **kwargs)
+
+    build()
+    gc.collect()
+    gc.disable()
+    try:
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(client, "send_command", counting)
+            build()
+    finally:
+        gc.enable()
+    return n
+
+
+def test_operator_build_cost_is_independent_of_index_size(spark):
+    """Building an operator costs the same number of py4j round trips at dim
+    64 with 8 centroids and 4 planes as at dim 8 with 2 centroids and 2
+    planes: literal vectors and folds cross to the JVM as one SQL string per
+    expression, never one call per element or per lambda."""
+    counts = []
+    for dim, n_cents, n_planes in ((64, 8, 4), (8, 2, 2)):
+        emb = spark.createDataFrame(
+            [(i, [float((i + j) % 3) for j in range(dim)], i % 2) for i in range(4)],
+            "vec_id long, embedding array<float>, label int",
+        )
+        q = emb.select(F.col("vec_id").alias("query_id"), "embedding", "label")
+        cents = [[_unit(f"k{c}-{j}") for j in range(dim)] for c in range(n_cents)]
+        builds = {
+            "bruteforce": lambda: cosine_topk_bruteforce(emb, q, k=3),
+            "bucketed": lambda: cosine_topk_bucketed(emb, q, k=3),
+            "ivf_lsh": lambda: cosine_topk_ivf_lsh(
+                emb, q, k=3, n_planes=n_planes, dim=dim, n_probes=2
+            ),
+            "ivf_kmeans": lambda: cosine_topk_ivf_kmeans(emb, q, cents, k=3, n_probes=2),
+        }
+        counts.append({name: _py4j_calls(spark, b) for name, b in builds.items()})
+    assert counts[0] == counts[1], counts

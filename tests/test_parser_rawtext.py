@@ -7,9 +7,14 @@ Covers the round-2 advisor findings:
 - <plaintext> must run to EOF (HTML5: no close tag exists).
 - <caption> must push an active-formatting marker (like td/th) so formatting
   open at caption start is not reconstructed inside it after it closes.
+- `<!-->` and `<!--->` are complete empty comments and `--!>` ends a comment
+  (x/net readComment), so none of them swallows markup up to the next `-->`.
 """
 
+import pytest
+
 from ukeeper_readability_spark.htmldom import outer_html, parse
+from ukeeper_readability_spark.htmldom.node import COMMENT_NODE
 from ukeeper_readability_spark.htmldom.query import find_all, node_text
 
 
@@ -72,3 +77,15 @@ def test_caption_scopes_active_formatting():
     td = find_all(doc, "td")[0]
     assert find_all(td, "i") == []  # caption's <i> cleared at </caption>
     assert node_text(td) == "d"
+
+
+@pytest.mark.parametrize(
+    "comment, data",
+    [("<!-->", ""), ("<!--->", ""), ("<!-- a --!>", " a ")],
+)
+def test_short_and_bang_comments_end(comment, data):
+    doc = parse(f"<body>{comment}<p>A</p><!-- x --><p>B</p>")
+    assert [node_text(p) for p in find_all(doc, "p")] == ["A", "B"]
+    body = find_all(doc, "body")[0]
+    comments = [c.data for c in body.children() if c.type == COMMENT_NODE]
+    assert comments == [data, " x "]

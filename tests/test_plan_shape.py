@@ -112,6 +112,14 @@ def _assert_one_rank_exchange(plan: str) -> None:
     assert len(shuffles) == 1 and "query_id" in shuffles[0], plan
 
 
+def _assert_no_fold_in_filter(plan: str) -> None:
+    """No inferred filter re-evaluates a bucket or probe fold: Spark pushes
+    isnotnull(bucket) and size(probes) > 0 below the projection that
+    computes them, which would fold every distance a second time per row."""
+    filters = [ln for ln in plan.splitlines() if ln.lstrip(" :+-").startswith("Filter")]
+    assert not [ln for ln in filters if "aggregate(" in ln], plan
+
+
 def test_ivf_lsh_plan_shape(spark, emb_path):
     """The 100 TB shape of the LSH IVF search: the corpus joins the computed
     bucket key against a BroadcastExchange of the query side (small Q),
@@ -132,6 +140,7 @@ def test_ivf_lsh_plan_shape(spark, emb_path):
     join_part = plan.split("BroadcastHashJoin")[-1]  # below the join: scan side
     assert "Exchange hashpartitioning" not in join_part, plan
     _assert_one_rank_exchange(plan)
+    _assert_no_fold_in_filter(plan)
 
 
 def test_ivf_kmeans_plan_shape(spark, emb_path):
@@ -151,6 +160,7 @@ def test_ivf_kmeans_plan_shape(spark, emb_path):
     join_part = plan.split("BroadcastHashJoin")[-1]
     assert "Exchange hashpartitioning" not in join_part, plan
     _assert_one_rank_exchange(plan)
+    _assert_no_fold_in_filter(plan)
 
 
 def test_ngram_jaccard_semi_join_not_forced_broadcast(spark):
@@ -250,12 +260,18 @@ def test_sessionize_bucketed_read_no_exchange(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS t_ev_bkt")
 
 
-def test_sessionize_bucketed_reregistration(spark, tmp_path):
+def test_sessionize_bucketed_reregistration(spark, tmp_path, monkeypatch):
     """Second ensure_events_bucketed over existing files takes the
     external-table DDL branch (cross-session reuse pattern): same rows, same
-    exchange-free plan, no rewrite."""
+    exchange-free plan, no rewrite. It sizes from the marker's num_rows
+    (written once, at write time) and opens no parquet footer; a marker
+    without num_rows skips the sizing warning."""
     import datetime
+    import json
     import os
+    import warnings
+
+    import pyarrow.parquet as pq
 
     from ukeeper_readability_spark.pipeline.sessions import (
         ensure_events_bucketed,
@@ -273,7 +289,17 @@ def test_sessionize_bucketed_reregistration(spark, tmp_path):
     first = ensure_events_bucketed(spark, ev, path, table="t_ev_rereg", nbuckets=4)
     expected = sorted(map(tuple, sessionize(first, gap_minutes=30).collect()))
     mtimes = {f: os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)}
-    again = ensure_events_bucketed(spark, ev, path, table="t_ev_rereg", nbuckets=4)
+    marker = os.path.join(path, "_bucket_spec.json")
+    with open(marker) as f:
+        spec = json.load(f)
+    assert spec["num_rows"] == 100
+
+    def no_footer_reads(*a, **kw):
+        raise AssertionError("re-registration opened a parquet footer")
+
+    monkeypatch.setattr(pq, "ParquetFile", no_footer_reads)
+    with pytest.warns(UserWarning, match="100 rows across 4 buckets"):
+        again = ensure_events_bucketed(spark, ev, path, table="t_ev_rereg", nbuckets=4)
     out = sessionize(again, gap_minutes=30)
     assert "Exchange" not in _plan(out)
     assert sorted(map(tuple, out.collect())) == expected
@@ -281,6 +307,16 @@ def test_sessionize_bucketed_reregistration(spark, tmp_path):
     assert mtimes == {
         f: os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)
     }
+    # a marker from before num_rows was kept: layout still verified, no
+    # sizing warning
+    del spec["num_rows"]
+    with open(marker, "w") as f:
+        json.dump(spec, f)
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        old = ensure_events_bucketed(spark, ev, path, table="t_ev_rereg", nbuckets=4)
+    assert not [w for w in seen if "rows across" in str(w.message)]
+    assert sorted(map(tuple, sessionize(old, gap_minutes=30).collect())) == expected
     spark.sql("DROP TABLE IF EXISTS t_ev_rereg")
 
 
@@ -340,6 +376,7 @@ def test_sessionize_bucketed_marker_guards(spark, tmp_path):
         "nbuckets": 4,
         "bucket_col": "user_id",
         "sort_cols": ["user_id", "ts", "event_id"],
+        "num_rows": 60,
     }
     # different nbuckets than the files were written with → refuse
     with pytest.raises(ValueError, match="bucket layout mismatch"):

@@ -152,6 +152,8 @@ TOK_COMMENT = 3
 TOK_DOCTYPE = 4
 
 _NAME_END = frozenset(" \t\n\f/>")
+# a comment ends at "-->" or "--!>" (HTML5 comment-end-bang state)
+_COMMENT_END_RE = _re.compile(r"--!?>")
 _unescape = _htmlmod.unescape
 
 # Precompiled ASCII-case-insensitive close-tag matchers for raw-text/RCDATA
@@ -187,12 +189,14 @@ def _tokenize(s: str):
         c = s[i + 1]
         if c == "!":
             if s.startswith("<!--", i):
-                end = s.find("-->", i + 4)
-                if end == -1:
+                # from the opening "--" (x/net readComment's dash count
+                # starts at 2): "<!-->" and "<!--->" end at once, empty
+                m = _COMMENT_END_RE.search(s, i + 2)
+                if m is None:
                     yield (TOK_COMMENT, s[i + 4 :], None, False)
                     return
-                yield (TOK_COMMENT, s[i + 4 : end], None, False)
-                i = end + 3
+                yield (TOK_COMMENT, s[i + 4 : max(m.start(), i + 4)], None, False)
+                i = m.end()
             elif s[i + 2 : i + 9].lower() == "doctype":
                 end = s.find(">", i + 9)
                 if end == -1:

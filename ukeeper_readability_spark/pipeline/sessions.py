@@ -88,8 +88,9 @@ def ensure_events_bucketed(
     tests/test_plan_shape.py). Files written by a previous session are
     re-registered via external-table DDL — bucket metadata lives in the
     catalog, the bucket id lives in the file names Spark wrote. The first
-    write drops a `_bucket_spec.json` marker (nbuckets, bucket/sort columns)
-    next to the files; re-registration VERIFIES the marker and raises on a
+    write drops a `_bucket_spec.json` marker (nbuckets, bucket/sort columns,
+    and `num_rows` summed from the footers just written) next to the files;
+    re-registration VERIFIES the marker's layout keys and raises on a
     mismatch or an interrupted/foreign write — registering DDL the files
     don't satisfy would make the exchange-free sessionize silently wrong.
 
@@ -98,8 +99,10 @@ def ensure_events_bucketed(
     open/footer overhead of nbuckets near-empty parquet files costs more
     than the small shuffle it avoids (BENCH.md measures the crossover). A
     warning fires in that regime — shrink nbuckets or keep the plain
-    layout. At the 10^12-row target, size nbuckets so each bucket is a few
-    hundred MB of parquet.
+    layout. Re-registration sizes from the marker's `num_rows` without
+    listing or opening a bucket file; a marker without `num_rows` (written
+    before the count was kept) skips the check. At the 10^12-row target,
+    size nbuckets so each bucket is a few hundred MB of parquet.
 
     Iceberg equivalent (env has no Iceberg runtime jar, CLAUDE.md):
         CREATE TABLE events (...) USING iceberg
@@ -128,10 +131,21 @@ def ensure_events_bucketed(
             .option("path", path)
             .saveAsTable(table)
         )
+        # row count from the parquet FOOTERS just written (a metadata read,
+        # not a scan job), kept in the marker so that re-registration never
+        # lists or opens the bucket files — an O(files) cost at the
+        # 10^12-row target
+        import pyarrow.parquet as _pq
+
+        n_rows = sum(
+            _pq.ParquetFile(os.path.join(path, fn)).metadata.num_rows
+            for fn in os.listdir(path)
+            if fn.startswith("part-") and fn.endswith(".parquet")
+        )
         # marker LAST: an interrupted write leaves part- files with no
         # marker, which the re-registration branch refuses below
         with open(marker, "w") as f:
-            json.dump(spec, f)
+            json.dump({**spec, "num_rows": n_rows}, f)
     else:
         if not os.path.isfile(marker):
             raise ValueError(
@@ -142,13 +156,14 @@ def ensure_events_bucketed(
             )
         with open(marker) as f:
             existing = json.load(f)
-        if existing != spec:
+        if {k: existing.get(k) for k in spec} != spec:
             raise ValueError(
                 f"bucket layout mismatch at {path}: files were written with "
                 f"{existing}, caller asked for {spec} — registering the "
                 "requested DDL would silently corrupt exchange-free "
                 "sessionize results; delete the directory to rewrite"
             )
+        n_rows = existing.get("num_rows")
         spark.sql(
             f"""
             CREATE TABLE {table} ({ddl}) USING PARQUET
@@ -159,23 +174,10 @@ def ensure_events_bucketed(
             """
         )
     out = spark.table(table)
-    # Sizing check from parquet FOOTER row counts (ADVICE r5): Spark has no
-    # metadata-only count for parquet through this v1 table path — out.count()
-    # was a zero-column scan job that listed and opened every bucket file on
-    # EVERY re-registration, an O(files) cost at the 10^12-row target. The
-    # footers already hold num_rows; sum them directly (local/posix paths —
-    # on an object store, persist the row count in the _bucket_spec marker
-    # at write time instead).
-    import pyarrow.parquet as _pq
-
-    n = 0
-    for fn in os.listdir(path):
-        if fn.startswith("part-") and fn.endswith(".parquet"):
-            n += _pq.ParquetFile(os.path.join(path, fn)).metadata.num_rows
-    if n and n / nbuckets < MIN_AVG_ROWS_PER_BUCKET:
+    if n_rows and n_rows / nbuckets < MIN_AVG_ROWS_PER_BUCKET:
         warnings.warn(
-            f"events_bucketed: {n} rows across {nbuckets} buckets averages "
-            f"{n // nbuckets} rows/bucket (< {MIN_AVG_ROWS_PER_BUCKET}); at "
+            f"events_bucketed: {n_rows} rows across {nbuckets} buckets averages "
+            f"{n_rows // nbuckets} rows/bucket (< {MIN_AVG_ROWS_PER_BUCKET}); at "
             "this size the bucketed read's per-file overhead exceeds the "
             "shuffle it avoids (see BENCH.md) — shrink nbuckets or keep the "
             "plain layout",

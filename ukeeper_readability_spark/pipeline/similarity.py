@@ -19,8 +19,16 @@ projection; the core joins them (broadcasting the query side), drops the
 self pair, scores the 6 dp cosine and keeps rank <= k per query. A probe list
 never repeats a bucket and each corpus row lives in exactly one bucket, so a
 (query, neighbor) pair is scored at most once and no dedup pass is needed.
-Dot products run JVM-side via F.aggregate/F.zip_with — no Python in the hot
-loop.
+
+Every fold and literal vector is built as SQL text and handed to the JVM as
+ONE `F.expr`, which Spark parses, resolves and optimizes there. The Column
+API would build the same catalyst trees at one py4j round trip per `F.lit`
+(64 per 64-dim hyperplane or centroid) and ~90 per Python lambda given to
+`F.zip_with`/`F.aggregate`/`F.transform` — a driver-side cost that grows
+with dim x centroids x planes and rivals the scoring itself on small query
+sets. In the SQL text, identifiers are backtick-quoted and doubles are
+written as `repr(x) + "D"`, which Java parses back to the same bits. Dot
+products run JVM-side via aggregate/zip_with — no Python in the hot loop.
 
 At 100 TB scale: brute force is O(Q·N) — only for small Q against a broadcast
 query set; the IVF paths bound each query's candidate set to its probed
@@ -32,22 +40,37 @@ deterministic and oracle-comparable.
 from __future__ import annotations
 
 import hashlib
+import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def _zip_sum(a, b, f):
-    return F.aggregate(F.zip_with(a, b, f), F.lit(0.0), lambda acc, v: acc + v)
+def _ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def _dot(a, b):
-    return _zip_sum(a, b, lambda x, y: x.cast("double") * y.cast("double"))
+def _double(x: float) -> str:
+    """A double as an exact SQL literal (nan, inf and -inf as string casts)."""
+    x = float(x)
+    return repr(x) + "D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
 
 
-def _norm(a):
-    return F.sqrt(_dot(a, a))
+def _vector(xs) -> str:
+    """SQL: array<double> literal of the doubles `xs`."""
+    return "array(" + ", ".join(map(_double, xs)) + ")"
+
+
+def _zip_sum(a: str, b: str, f: str) -> str:
+    """SQL: the left fold from 0.0 of `f` over the zipped arrays `a`, `b`
+    (`f` is SQL over the lambda variables x, y)."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> {f}), 0D, (acc, v) -> acc + v)"
+
+
+def _dot(a: str, b: str) -> str:
+    return _zip_sum(a, b, "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)")
 
 
 def _normed(df: DataFrame, id_col: str, vec_col: str, names, *extra) -> DataFrame:
@@ -56,10 +79,11 @@ def _normed(df: DataFrame, id_col: str, vec_col: str, names, *extra) -> DataFram
     interpreted, and folding both norms per (query, neighbor) pair costs
     O(Q·N) norm evaluations instead of O(Q + N). Same doubles either way."""
     i, v, n = names
+    vec = _ident(vec_col)
     return df.select(
         F.col(id_col).alias(i),
         F.col(vec_col).alias(v),
-        _norm(F.col(vec_col)).alias(n),
+        F.expr(f"sqrt({_dot(vec, vec)})").alias(n),
         *extra,
     )
 
@@ -70,7 +94,8 @@ _Q = ("query_id", "qvec", "_qn")
 
 
 def _cosine(a: str, b: str, na: str, nb: str):
-    return F.round(_dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb)), 6)
+    a, b, na, nb = map(_ident, (a, b, na, nb))
+    return F.expr(f"round({_dot(a, b)} / ({na} * {nb}), 6)")
 
 
 def _score_topk(e: DataFrame, q: DataFrame, on, k: int) -> DataFrame:
@@ -206,22 +231,21 @@ def hyperplane_component(plane: int, dim: int) -> float:
     return int(h, 16) / 4294967295.0 * 2 - 1
 
 
-def _plane_lit(plane: int, dim: int):
-    return F.array(*[F.lit(hyperplane_component(plane, j)) for j in range(dim)])
+def _plane_dots(vec: str, n_planes: int, dim: int) -> list:
+    """SQL: v · plane_i for every plane, rounded to 6 dp so an
+    engine-vs-oracle ULP wobble near zero can't flip a sign bit."""
+    return [
+        f"round({_dot(vec, _vector(hyperplane_component(i, j) for j in range(dim)))}, 6)"
+        for i in range(n_planes)
+    ]
 
 
-def _plane_dots(vec, n_planes: int, dim: int) -> list:
-    """v · plane_i for every plane, rounded to 6 dp so an engine-vs-oracle
-    ULP wobble near zero can't flip a sign bit."""
-    return [F.round(_dot(vec, _plane_lit(i, dim)), 6) for i in range(n_planes)]
-
-
-def _sign_bucket(dots: list):
-    """Bucket id with bit i = (dots[i] >= 0)."""
-    bucket = F.lit(0)
-    for i, d in enumerate(dots):
-        bucket = bucket + F.when(d >= 0, F.lit(2**i)).otherwise(F.lit(0))
-    return bucket.cast("int")
+def _sign_bucket(dots: list) -> str:
+    """SQL: bucket id with bit i = (dots[i] >= 0)."""
+    bits = "".join(
+        f" + CASE WHEN {d} >= 0 THEN {2**i} ELSE 0 END" for i, d in enumerate(dots)
+    )
+    return f"CAST(0{bits} AS INT)"
 
 
 def with_hyperplane_bucket(
@@ -234,10 +258,33 @@ def with_hyperplane_bucket(
     """Add the random-hyperplane LSH bucket: bit i = sign(v · plane_i).
 
     The sign is taken on round(dot, 6) so an engine-vs-oracle ULP wobble near
-    zero can't flip a bit. Pure codegen expressions — no shuffle, no Python.
+    zero can't flip a bit. One JVM-side expression — no shuffle, no Python.
     """
     return df.withColumn(
-        out_col, _sign_bucket(_plane_dots(F.col(vec_col), n_planes, dim))
+        out_col, F.expr(_sign_bucket(_plane_dots(_ident(vec_col), n_planes, dim)))
+    )
+
+
+def _lsh_probes(vec: str, n_planes: int, dim: int, n_probes: int) -> str:
+    """SQL of the multi-probe bucket list (see hyperplane_probe_buckets).
+    The plane dots `d` and the home bucket `h` are LET-BOUND as lambda
+    variables (one-element-array transform, as in dedup._shingle_array), so
+    each is computed once per row: higher-order functions are interpreted
+    and a captured expression would be re-evaluated per array element."""
+    dots = "array(" + ", ".join(_plane_dots(vec, n_planes, dim)) + ")"
+    home = _sign_bucket([f"element_at(d, {i + 1})" for i in range(n_planes)])
+    # rank planes by |dot| ascending; flip the first (n_probes-1)
+    order = (
+        f"array_sort(transform(sequence(0, {n_planes - 1}), "
+        "i -> named_struct('a', abs(element_at(d, i + 1)), 'plane', i)))"
+    )
+    flips = (
+        f"transform(slice({order}, 1, {max(n_probes - 1, 0)}), "
+        "s -> CAST(h ^ CAST(pow(2D, s.plane) AS INT) AS INT))"
+    )
+    return (
+        f"element_at(transform(array({dots}), d -> element_at(transform("
+        f"array({home}), h -> array_union(array(h), {flips})), 1)), 1)"
     )
 
 
@@ -254,29 +301,17 @@ def hyperplane_probe_buckets(
     the standard multi-probe LSH recall lever without another index. Each
     flip clears or sets a different plane's bit, so the list never repeats a
     bucket."""
-    df = df.withColumn("_dots", F.array(*_plane_dots(F.col(vec_col), n_planes, dim)))
-    home = _sign_bucket(
-        [F.element_at(F.col("_dots"), i + 1) for i in range(n_planes)]
+    return df.withColumn(
+        out_col, F.expr(_lsh_probes(_ident(vec_col), n_planes, dim, n_probes))
     )
-    df = df.withColumn("_home", home)
-    # rank planes by |dot| ascending; flip the first (n_probes-1)
-    order = F.array_sort(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(n_planes - 1)),
-            lambda i: F.struct(
-                F.abs(F.element_at(F.col("_dots"), i + 1)).alias("a"),
-                i.alias("plane"),
-            ),
-        )
-    )
-    flips = F.transform(
-        F.slice(order, 1, max(n_probes - 1, 0)),
-        lambda s: F.col("_home")
-        .bitwiseXOR(F.pow(F.lit(2.0), s["plane"]).cast("int"))
-        .cast("int"),
-    )
-    probes = F.array_union(F.array(F.col("_home")), flips)
-    return df.withColumn(out_col, probes).drop("_dots", "_home")
+
+
+def _explode_probes(q: DataFrame, probes: str) -> DataFrame:
+    """(query_id, qvec, _qn, bucket), one row per probed bucket. The probe
+    list is exploded as an EXPRESSION: exploding a computed column makes
+    Spark infer size(col) > 0 and push that filter below the projection,
+    which evaluates every fold of the probe list a second time per query."""
+    return q.select(*_Q, F.explode(F.expr(probes)).alias("bucket"))
 
 
 def cosine_topk_ivf_lsh(
@@ -296,10 +331,10 @@ def cosine_topk_ivf_lsh(
     e = with_hyperplane_bucket(
         _normed(embeddings, id_col, vec_col, _E), "nvec", n_planes, dim, "bucket"
     )
-    q = hyperplane_probe_buckets(
+    q = _explode_probes(
         _normed(queries, query_id_col, vec_col, _Q),
-        "qvec", n_planes, dim, n_probes, "probe_buckets",
-    ).select(*_Q, F.explode("probe_buckets").alias("bucket"))
+        _lsh_probes(_ident("qvec"), n_planes, dim, n_probes),
+    )
     return _score_topk(e, q, "bucket", k)
 
 
@@ -333,7 +368,7 @@ def kmeans_fit(
     """
     base = embeddings.select(
         F.col(id_col).alias("_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+        F.expr(f"transform({_ident(vec_col)}, x -> CAST(x AS DOUBLE))").alias("_v"),
     )
     init = base.orderBy("_id").limit(n_clusters).select("_v").collect()
     centroids = [list(r._v) for r in init]
@@ -344,7 +379,7 @@ def kmeans_fit(
     n_clusters = len(centroids)
     for _ in range(iters):
         assigned = base.withColumn(
-            "cluster_id", F.array_min(_centroid_dists(centroids, F.col("_v")))["c"]
+            "cluster_id", F.expr(_nearest_centroid(centroids, _ident("_v")))
         )
         dim = len(centroids[0])
         upd = (
@@ -353,10 +388,8 @@ def kmeans_fit(
             .agg(F.round(F.avg("val"), 6).alias("m"))
             .groupBy("cluster_id")
             .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("cvec")
+                F.expr("transform(array_sort(collect_list(struct(`pos`, `m`))), s -> s.m)")
+                .alias("cvec")
             )
             .collect()
         )
@@ -367,27 +400,34 @@ def kmeans_fit(
     return centroids
 
 
-def _centroid_dists(centroids: list, vec):
-    """Array of (d, c) structs, one per literal centroid c: d is the squared
-    distance from `vec` (array<double>) rounded to 6 dp. The rounding makes
-    the ascending (d, c) order — argmin with cluster-id tie-break — and thus
-    assignment and probing engine-portable."""
-    return F.array(
-        *[
-            F.struct(
-                F.round(
-                    _zip_sum(
-                        vec,
-                        F.array(*[F.lit(x) for x in c]),
-                        lambda x, y: (x - y) * (x - y),
-                    ),
-                    6,
-                ).alias("d"),
-                F.lit(i).alias("c"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
+def _centroid_dists(centroids: list, vec: str) -> str:
+    """SQL: array of (d, c) structs, one per literal centroid c: d is the
+    squared distance from `vec` (array<float> or array<double>; float widens
+    to double exactly) rounded to 6 dp. The rounding makes the ascending
+    (d, c) order — argmin with cluster-id tie-break — and thus assignment and
+    probing engine-portable."""
+    if not centroids:
+        raise ValueError("empty centroid list")
+    return "array(" + ", ".join(
+        f"named_struct('d', round({_zip_sum(vec, _vector(c), '(x - y) * (x - y)')}, 6), 'c', {i})"
+        for i, c in enumerate(centroids)
+    ) + ")"
+
+
+def _nearest_centroid(centroids: list, vec: str) -> str:
+    """SQL: the id of the nearest centroid. array_min over non-null structs
+    is never null, but Spark cannot prove it; the coalesce makes the column
+    non-nullable, so a join on it infers no isnotnull() filter — that filter
+    is pushed below the projection and would evaluate every distance fold a
+    second time per row. -1 is unreachable (_centroid_dists rejects an empty
+    centroid list)."""
+    return f"coalesce(array_min({_centroid_dists(centroids, vec)}).c, -1)"
+
+
+def _centroid_probes(centroids: list, vec: str, n_probes: int) -> str:
+    """SQL of probe_centroids' probe list."""
+    nearest = f"array_sort({_centroid_dists(centroids, vec)})"
+    return f"transform(slice({nearest}, 1, {n_probes}), s -> s.c)"
 
 
 def probe_centroids(
@@ -399,11 +439,10 @@ def probe_centroids(
 ) -> DataFrame:
     """The n_probes nearest centroid ids per row (ascending rounded distance,
     cluster-id tie-break) — the k-means mirror of hyperplane_probe_buckets.
-    `vec_col` must be array<double>. A slice of distinct cluster ids, so the
-    list never repeats a cell."""
-    nearest = F.array_sort(_centroid_dists(centroids, F.col(vec_col)))
+    `vec_col` is array<float> or array<double>. A slice of distinct cluster
+    ids, so the list never repeats a cell."""
     return df.withColumn(
-        out_col, F.transform(F.slice(nearest, 1, n_probes), lambda s: s["c"])
+        out_col, F.expr(_centroid_probes(centroids, _ident(vec_col), n_probes))
     )
 
 
@@ -413,8 +452,7 @@ def with_kmeans_bucket(
     vec_col: str = "embedding",
     out_col: str = "km_bucket",
 ) -> DataFrame:
-    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    return df.withColumn(out_col, F.array_min(_centroid_dists(centroids, dbl))["c"])
+    return df.withColumn(out_col, F.expr(_nearest_centroid(centroids, _ident(vec_col))))
 
 
 def cosine_topk_ivf_kmeans(
@@ -434,11 +472,10 @@ def cosine_topk_ivf_kmeans(
     e = with_kmeans_bucket(
         _normed(embeddings, id_col, vec_col, _E), centroids, "nvec", "bucket"
     )
-    dbl = F.transform(F.col("qvec"), lambda x: x.cast("double"))
-    q = probe_centroids(
-        _normed(queries, query_id_col, vec_col, _Q).withColumn("_v", dbl),
-        centroids, "_v", n_probes, "probe_buckets",
-    ).select(*_Q, F.explode("probe_buckets").alias("bucket"))
+    q = _explode_probes(
+        _normed(queries, query_id_col, vec_col, _Q),
+        _centroid_probes(centroids, _ident("qvec"), n_probes),
+    )
     return _score_topk(e, q, "bucket", k)
 
 
