@@ -6,7 +6,6 @@ runs on a deterministic hash-generated clustered corpus, the regime IVF exists
 for. The exactness of the LSH-bucket composition is separately value-hash
 gated against DuckDB (ann_cosine_ivf_lsh)."""
 
-import gc
 import hashlib
 import math
 import random
@@ -25,7 +24,7 @@ from ukeeper_readability_spark.pipeline import (
     with_hyperplane_bucket,
     with_kmeans_bucket,
 )
-from ukeeper_readability_spark.pipeline.similarity import _vector
+from ukeeper_readability_spark.pipeline.sqltext import vector
 
 pytestmark = pytest.mark.spark
 
@@ -219,39 +218,13 @@ def test_double_literals_round_trip_exactly(spark):
         if not math.isnan(x):
             xs.append(x)
     xs.append(float("nan"))
-    got = spark.range(1).select(F.expr(_vector(xs)).alias("v")).collect()[0].v
+    got = spark.range(1).select(F.expr(vector(xs)).alias("v")).collect()[0].v
     assert len(got) == len(xs) and math.isnan(got[-1])
     bits = f">{len(xs) - 1}d"
     assert struct.pack(bits, *got[:-1]) == struct.pack(bits, *xs[:-1])
 
 
-def _py4j_calls(spark, build) -> int:
-    """py4j round trips made while `build()` constructs (not runs) a plan.
-    A first build resolves JVM classes and methods; only the second counts.
-    Memory-release commands ("m") are not counted: py4j sends them for
-    objects that died earlier, whenever the connection is next free."""
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    n = 0
-
-    def counting(command, *args, **kwargs):
-        nonlocal n
-        n += not command.startswith("m\n")
-        return send(command, *args, **kwargs)
-
-    build()
-    gc.collect()
-    gc.disable()
-    try:
-        with pytest.MonkeyPatch.context() as mp:
-            mp.setattr(client, "send_command", counting)
-            build()
-    finally:
-        gc.enable()
-    return n
-
-
-def test_operator_build_cost_is_independent_of_index_size(spark):
+def test_operator_build_cost_is_independent_of_index_size(spark, py4j_calls):
     """Building an operator costs the same number of py4j round trips at dim
     64 with 8 centroids and 4 planes as at dim 8 with 2 centroids and 2
     planes: literal vectors and folds cross to the JVM as one SQL string per
@@ -272,5 +245,5 @@ def test_operator_build_cost_is_independent_of_index_size(spark):
             ),
             "ivf_kmeans": lambda: cosine_topk_ivf_kmeans(emb, q, cents, k=3, n_probes=2),
         }
-        counts.append({name: _py4j_calls(spark, b) for name, b in builds.items()})
+        counts.append({name: py4j_calls(b) for name, b in builds.items()})
     assert counts[0] == counts[1], counts

@@ -326,10 +326,64 @@ def test_dedup_components_round_sec_every_path(spark):
     assert "round_sec" not in st
 
 
-@pytest.mark.parametrize("mode", ["propagate", "star"])
-def test_dedup_components_rejects_max_iters_below_one(spark, mode):
+@pytest.mark.parametrize(
+    "op,kwargs,match",
+    [
+        pytest.param("components", dict(max_iters=0, mode="propagate"), "max_iters", id="propagate"),
+        pytest.param("components", dict(max_iters=0, mode="star"), "max_iters", id="star"),
+        pytest.param("lsh", dict(k=8, bands=0), "bands", id="lsh-bands-0"),
+        pytest.param("lsh", dict(k=2, bands=4), "bands", id="lsh-k-below-bands"),
+        pytest.param("lsh", dict(k=10, bands=4), "bands", id="lsh-k-not-multiple"),
+        pytest.param("simhash", dict(bits=6, portable=True), "bits", id="simhash-portable-6"),
+        pytest.param("simhash", dict(bits=0, portable=True), "bits", id="simhash-portable-0"),
+        pytest.param("simhash", dict(bits=64, portable=True), "bits", id="simhash-portable-64"),
+        pytest.param("simhash", dict(bits=0), "bits", id="simhash-fast-0"),
+        pytest.param("simhash", dict(bits=63), "bits", id="simhash-fast-63"),
+    ],
+)
+def test_operators_reject_degenerate_parameters(spark, docs, op, kwargs, match):
+    """Parameters under which an operator would return wrong answers (an
+    empty band key pairs every document; portable simhash bits not a
+    multiple of 4 are never set) or die inside the JVM are refused at build
+    time."""
     from ukeeper_readability_spark.pipeline.dedup import dedup_components
 
     pairs = spark.createDataFrame([(2, 1)], "doc_a long, doc_b long")
-    with pytest.raises(ValueError, match="max_iters"):
-        dedup_components(pairs, max_iters=0, mode=mode)
+    build = {
+        "components": lambda: dedup_components(pairs, **kwargs),
+        "lsh": lambda: minhash_lsh_pairs(docs, **kwargs),
+        "simhash": lambda: simhash(docs, **kwargs),
+    }[op]
+    with pytest.raises(ValueError, match=match):
+        build()
+
+
+@pytest.mark.parametrize("bits,portable", [(4, True), (60, True), (1, False), (62, False)])
+def test_simhash_widest_and_narrowest_bits(spark, docs, bits, portable):
+    got = [r.simhash for r in simhash(docs, bits=bits, portable=portable).collect()]
+    assert len(got) == 5 and all(0 <= h < 2**bits for h in got)
+    assert bits < 60 or max(got) >= 2 ** (bits - 4)  # the top nibble is reached
+
+
+def test_dedup_build_cost_per_column_is_constant(spark, docs, py4j_calls):
+    """Signature columns and simhash bits are SQL text, so each one added
+    costs a few py4j round trips (one list element and at most one
+    `F.expr`), never the ~90 of a Python lambda or one per literal."""
+    lsh = {
+        k: py4j_calls(lambda: minhash_lsh_pairs(docs, k=k, bands=4, portable=True))
+        for k in (8, 32)
+    }
+    sim = {b: py4j_calls(lambda: simhash(docs, bits=b, portable=True)) for b in (16, 32)}
+    assert lsh[32] - lsh[8] <= 4 * (32 - 8), lsh
+    assert sim[32] - sim[16] <= 4 * (32 - 16), sim
+
+
+def test_string_literals_round_trip_exactly(spark):
+    """Stopword and trigram lists reach Spark as SQL text: quotes,
+    backslashes, escapes-lookalikes and non-ASCII must come back as given."""
+    from ukeeper_readability_spark.pipeline.sqltext import strings
+
+    xs = ["it's", "a\\b", "\\", "'", "\\'", '"q"', "\\n", "line\nbreak", "ção",
+          "日本", "%_", "", "${x}", "\\u0041"]
+    got = spark.range(1).select(F.expr(strings(xs)).alias("v")).collect()[0].v
+    assert got == xs

@@ -1,6 +1,7 @@
 """Deduplication operators over a document corpus — Spark-built-in-first.
 
 All stages are JVM-side (explode / groupBy / min / joins); no Python UDFs.
+Folds, maps and literal lists are SQL text (see sqltext).
 Two hash modes:
   - "fast": xxhash64 (Tungsten-native) — the production path at 100 TB;
   - "portable": md5 hex strings (identical in DuckDB) — lets the driver's
@@ -25,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .sqltext import ident, let, word_shingles
+
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
     """Exact dedup by full-text hash: (doc_id, canonical_id, group size).
@@ -43,27 +46,13 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text", key_col: str = "do
     )
 
 
-def _shingle_array(text_col: str, n: int):
-    """Distinct word n-gram shingles of a doc as an ARRAY expression —
-    deduplication happens inside the row (array_distinct), never via a
-    relational distinct, so no shuffle is ever needed to build shingles.
-
-    The token array is LET-BOUND through a one-element-array transform so the
-    inner lambda sees it as a lambda VARIABLE: higher-order functions are
-    interpreted (CodegenFallback, no subexpression elimination), so a lambda
-    body that captures the raw split() expression re-evaluates the split for
-    EVERY array element — O(tokens²) per document, measured 7× slower on the
-    bench corpus (3.7 s → 0.5 s noop at 20k docs, r06). Values are identical.
-    """
-    toks_raw = F.split(F.trim(F.col(text_col)), " +")
-
-    def _body(toks):
-        idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-        return F.array_distinct(
-            F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " "))
-        )
-
-    return F.element_at(F.transform(F.array(toks_raw), _body), 1)
+def _shingle_array(text_col: str, n: int) -> str:
+    """SQL: the distinct word n-gram shingles of a doc as an ARRAY —
+    deduplicated inside the row (array_distinct), never via a relational
+    distinct, so no shuffle is ever needed to build shingles. The token array
+    is let-bound."""
+    toks = f"split(trim({ident(text_col)}), ' +')"
+    return let("toks", toks, f"array_distinct({word_shingles('toks', n)})")
 
 
 def minhash_signatures(
@@ -88,22 +77,13 @@ def minhash_signatures(
     """
     base = docs.select(
         F.col(key_col).alias("doc_id"),
-        _shingle_array(text_col, shingle_n).alias("_sh"),
+        F.expr(_shingle_array(text_col, shingle_n)).alias("_sh"),
     )
-
-    # NB: close over the seed via a factory — `lambda s, i=i:` would make
-    # pyspark treat the lambda as the two-arg (element, index) form and bind
-    # the seed to the array index
-    def _hash_fn(i: int):
-        if portable:
-            return lambda s: F.md5(F.concat(s, F.lit(f"#{i}")))
-        return lambda s: F.xxhash64(s, F.lit(i))
-
-    cols = [
-        F.array_min(F.transform(F.col("_sh"), _hash_fn(i))).alias(f"mh_{i}")
+    seeded = "md5(concat(s, '#{i}'))" if portable else "xxhash64(s, {i})"
+    return base.selectExpr("doc_id", *(
+        f"array_min(transform(_sh, s -> {seeded.format(i=i)})) AS mh_{i}"
         for i in range(k)
-    ]
-    return base.select("doc_id", *cols)
+    ))
 
 
 def minhash_lsh_pairs(
@@ -121,19 +101,22 @@ def minhash_lsh_pairs(
     bands × rows-per-band = k. Pairs emerge join-free from in-row expansion
     of per-bucket id lists (two exchanges total — see the inline note);
     buckets larger than `max_bucket` (degenerate boilerplate) are dropped —
-    at web scale those are handled by exact dedup first.
+    at web scale those are handled by exact dedup first. k must be a
+    positive multiple of bands: an empty band key would pair every document.
     """
-    rows_per_band = k // bands
+    if bands < 1 or k < bands or k % bands:
+        raise ValueError(f"k must be a positive multiple of bands, got k={k}, bands={bands}")
+    r = k // bands
     sig = minhash_signatures(docs, text_col, key_col, shingle_n, k, portable)
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh_{i}").cast("string") for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), F.concat_ws("|", *parts).alias("band_key"))
-        )
-    buckets = sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
+    band_keys = ", ".join(
+        f"named_struct('band', {b}, 'band_key', concat_ws('|', "
+        + ", ".join(f"CAST(mh_{i} AS STRING)" for i in range(b * r, (b + 1) * r))
+        + "))"
+        for b in range(bands)
+    )
+    buckets = sig.selectExpr("doc_id", f"explode(array({band_keys})) AS bk").select(
+        "doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
+    )
 
     # TWO exchanges total, plan-pinned (tests/test_plan_shape.py): the band
     # key groupBy (map-side partial agg), then the final distinct's exchange
@@ -177,7 +160,7 @@ def _pruned_shingles(
         .distinct()
     )
     return docs.select(
-        F.col(key_col).alias("doc_id"), _shingle_array(text_col, n).alias("shingles")
+        F.col(key_col).alias("doc_id"), F.expr(_shingle_array(text_col, n)).alias("shingles")
     ).join(cand, "doc_id", "left_semi")
 
 
@@ -248,29 +231,28 @@ def simhash(
 ) -> DataFrame:
     """(doc_id, simhash int): sign-sum over token hash bits.
 
-    bits=16 portable mode uses the first 4 hex chars of md5 (verifiable in
-    DuckDB); fast mode uses the low `bits` of xxhash64.
+    Portable mode uses the first bits/4 hex chars of md5 (verifiable in
+    DuckDB), so bits is a multiple of 4 in 4..60; fast mode uses the low
+    `bits` of xxhash64, 1..62.
     """
+    if portable and not (4 <= bits <= 60 and bits % 4 == 0):
+        raise ValueError(f"portable simhash bits must be a multiple of 4 in 4..60, got {bits}")
+    if not portable and not 1 <= bits <= 62:
+        raise ValueError(f"fast simhash bits must be in 1..62, got {bits}")
     toks = (
         docs.select(F.col(key_col).alias("doc_id"), F.explode(F.split(F.trim(F.col(text_col)), " +")).alias("tok"))
     )
     if portable:
         # nibble j of md5 hex → 4 bits each; use first bits/4 hex chars
-        hexpart = F.substring(F.md5(F.col("tok")), 1, bits // 4)
-        toks = toks.withColumn("h", F.conv(hexpart, 16, 10).cast("long"))
+        h = f"CAST(conv(substring(md5(tok), 1, {bits // 4}), 16, 10) AS BIGINT)"
     else:
-        toks = toks.withColumn("h", F.pmod(F.xxhash64("tok"), F.lit(2 ** bits)))
-    bit_aggs = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), j).bitwiseAND(1) == 1, 1).otherwise(-1)
-        ).alias(f"s_{j}")
+        h = f"pmod(xxhash64(tok), {2 ** bits})"
+    agg = toks.withColumn("h", F.expr(h)).groupBy("doc_id").agg(*(
+        F.expr(f"sum(CASE WHEN (shiftright(h, {j}) & 1) = 1 THEN 1 ELSE -1 END) AS s_{j}")
         for j in range(bits)
-    ]
-    agg = toks.groupBy("doc_id").agg(*bit_aggs)
-    sim = F.lit(0).cast("long")
-    for j in range(bits):
-        sim = sim + F.when(F.col(f"s_{j}") > 0, F.lit(2 ** j)).otherwise(0)
-    return agg.select("doc_id", sim.alias("simhash"))
+    ))
+    sim = "".join(f" + CASE WHEN s_{j} > 0 THEN {2 ** j} ELSE 0 END" for j in range(bits))
+    return agg.selectExpr("doc_id", f"CAST(0 AS BIGINT){sim} AS simhash")
 
 
 @contextmanager

@@ -46,6 +46,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .sqltext import ident, strings
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -404,23 +406,13 @@ def synthesize_media(spark, docs: DataFrame, key_col: str = "doc_id", text_col: 
     PNG / WAV / MP4 / JPEG payloads built from the shared hex expression, so
     the DuckDB oracle can reproduce payload, dimensions, and checksum
     exactly. The video slot is a real ISO-BMFF MP4 (round 5)."""
-    kinds = F.element_at(
-        F.array(
-            F.lit("image"), F.lit("audio"), F.lit("video"), F.lit("image")
-        ),
-        (F.col(key_col) % 4 + 1).cast("int"),
-    )
-    mimes = F.element_at(
-        F.array(
-            F.lit("image/png"), F.lit("audio/wav"), F.lit("video/mp4"),
-            F.lit("image/jpeg"),
-        ),
-        (F.col(key_col) % 4 + 1).cast("int"),
-    )
+    slot = f"CAST({ident(key_col)} % 4 + 1 AS INT)"
+    kinds = f"element_at({strings(['image', 'audio', 'video', 'image'])}, {slot})"
+    mimes = f"element_at({strings(['image/png', 'audio/wav', 'video/mp4', 'image/jpeg'])}, {slot})"
     hex_expr = media_payload_hex_sql("spark", text_col=text_col, key_col=key_col)
     return docs.select(
         F.col(key_col).cast("long").alias("media_id"),
-        kinds.alias("kind"),
+        F.expr(kinds).alias("kind"),
         F.unhex(F.expr(hex_expr)).alias("payload"),
-        mimes.alias("mime"),
+        F.expr(mimes).alias("mime"),
     )

@@ -20,15 +20,10 @@ self pair, scores the 6 dp cosine and keeps rank <= k per query. A probe list
 never repeats a bucket and each corpus row lives in exactly one bucket, so a
 (query, neighbor) pair is scored at most once and no dedup pass is needed.
 
-Every fold and literal vector is built as SQL text and handed to the JVM as
-ONE `F.expr`, which Spark parses, resolves and optimizes there. The Column
-API would build the same catalyst trees at one py4j round trip per `F.lit`
-(64 per 64-dim hyperplane or centroid) and ~90 per Python lambda given to
-`F.zip_with`/`F.aggregate`/`F.transform` — a driver-side cost that grows
-with dim x centroids x planes and rivals the scoring itself on small query
-sets. In the SQL text, identifiers are backtick-quoted and doubles are
-written as `repr(x) + "D"`, which Java parses back to the same bits. Dot
-products run JVM-side via aggregate/zip_with — no Python in the hot loop.
+Every fold and literal vector is built as SQL text (see sqltext), so the
+build cost does not grow with dim x centroids x planes; doubles are written
+as `repr(x) + "D"`, which Java parses back to the same bits. Dot products
+run JVM-side via aggregate/zip_with — no Python in the hot loop.
 
 At 100 TB scale: brute force is O(Q·N) — only for small Q against a broadcast
 query set; the IVF paths bound each query's candidate set to its probed
@@ -40,27 +35,12 @@ deterministic and oracle-comparable.
 from __future__ import annotations
 
 import hashlib
-import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _ident(name: str) -> str:
-    """A column name as a backtick-quoted SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _double(x: float) -> str:
-    """A double as an exact SQL literal (nan, inf and -inf as string casts)."""
-    x = float(x)
-    return repr(x) + "D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
-
-
-def _vector(xs) -> str:
-    """SQL: array<double> literal of the doubles `xs`."""
-    return "array(" + ", ".join(map(_double, xs)) + ")"
+from .sqltext import ident, let, vector
 
 
 def _zip_sum(a: str, b: str, f: str) -> str:
@@ -79,7 +59,7 @@ def _normed(df: DataFrame, id_col: str, vec_col: str, names, *extra) -> DataFram
     interpreted, and folding both norms per (query, neighbor) pair costs
     O(Q·N) norm evaluations instead of O(Q + N). Same doubles either way."""
     i, v, n = names
-    vec = _ident(vec_col)
+    vec = ident(vec_col)
     return df.select(
         F.col(id_col).alias(i),
         F.col(vec_col).alias(v),
@@ -94,7 +74,7 @@ _Q = ("query_id", "qvec", "_qn")
 
 
 def _cosine(a: str, b: str, na: str, nb: str):
-    a, b, na, nb = map(_ident, (a, b, na, nb))
+    a, b, na, nb = map(ident, (a, b, na, nb))
     return F.expr(f"round({_dot(a, b)} / ({na} * {nb}), 6)")
 
 
@@ -235,7 +215,7 @@ def _plane_dots(vec: str, n_planes: int, dim: int) -> list:
     """SQL: v · plane_i for every plane, rounded to 6 dp so an
     engine-vs-oracle ULP wobble near zero can't flip a sign bit."""
     return [
-        f"round({_dot(vec, _vector(hyperplane_component(i, j) for j in range(dim)))}, 6)"
+        f"round({_dot(vec, vector(hyperplane_component(i, j) for j in range(dim)))}, 6)"
         for i in range(n_planes)
     ]
 
@@ -261,16 +241,14 @@ def with_hyperplane_bucket(
     zero can't flip a bit. One JVM-side expression — no shuffle, no Python.
     """
     return df.withColumn(
-        out_col, F.expr(_sign_bucket(_plane_dots(_ident(vec_col), n_planes, dim)))
+        out_col, F.expr(_sign_bucket(_plane_dots(ident(vec_col), n_planes, dim)))
     )
 
 
 def _lsh_probes(vec: str, n_planes: int, dim: int, n_probes: int) -> str:
     """SQL of the multi-probe bucket list (see hyperplane_probe_buckets).
-    The plane dots `d` and the home bucket `h` are LET-BOUND as lambda
-    variables (one-element-array transform, as in dedup._shingle_array), so
-    each is computed once per row: higher-order functions are interpreted
-    and a captured expression would be re-evaluated per array element."""
+    The plane dots `d` and the home bucket `h` are let-bound, so each is
+    computed once per row."""
     dots = "array(" + ", ".join(_plane_dots(vec, n_planes, dim)) + ")"
     home = _sign_bucket([f"element_at(d, {i + 1})" for i in range(n_planes)])
     # rank planes by |dot| ascending; flip the first (n_probes-1)
@@ -282,10 +260,7 @@ def _lsh_probes(vec: str, n_planes: int, dim: int, n_probes: int) -> str:
         f"transform(slice({order}, 1, {max(n_probes - 1, 0)}), "
         "s -> CAST(h ^ CAST(pow(2D, s.plane) AS INT) AS INT))"
     )
-    return (
-        f"element_at(transform(array({dots}), d -> element_at(transform("
-        f"array({home}), h -> array_union(array(h), {flips})), 1)), 1)"
-    )
+    return let("d", dots, let("h", home, f"array_union(array(h), {flips})"))
 
 
 def hyperplane_probe_buckets(
@@ -302,7 +277,7 @@ def hyperplane_probe_buckets(
     flip clears or sets a different plane's bit, so the list never repeats a
     bucket."""
     return df.withColumn(
-        out_col, F.expr(_lsh_probes(_ident(vec_col), n_planes, dim, n_probes))
+        out_col, F.expr(_lsh_probes(ident(vec_col), n_planes, dim, n_probes))
     )
 
 
@@ -333,7 +308,7 @@ def cosine_topk_ivf_lsh(
     )
     q = _explode_probes(
         _normed(queries, query_id_col, vec_col, _Q),
-        _lsh_probes(_ident("qvec"), n_planes, dim, n_probes),
+        _lsh_probes(ident("qvec"), n_planes, dim, n_probes),
     )
     return _score_topk(e, q, "bucket", k)
 
@@ -366,38 +341,42 @@ def kmeans_fit(
     is vanishing, but if ann_ivf_kmeans ever hash-mismatches on a new corpus,
     check for a ...X5000000-shaped centroid mean before suspecting the logic.
     """
-    base = embeddings.select(
-        F.col(id_col).alias("_id"),
-        F.expr(f"transform({_ident(vec_col)}, x -> CAST(x AS DOUBLE))").alias("_v"),
-    )
-    init = base.orderBy("_id").limit(n_clusters).select("_v").collect()
-    centroids = [list(r._v) for r in init]
+    init = embeddings.orderBy(id_col).limit(n_clusters).select(vec_col).collect()
+    centroids = [list(r[0]) for r in init]
     if not centroids:
         raise ValueError("kmeans_fit: empty input")
     # clamp when the corpus has fewer rows than n_clusters (ADVICE r2: the
     # empty-cluster fallback would otherwise index past the init list)
     n_clusters = len(centroids)
     for _ in range(iters):
-        assigned = base.withColumn(
-            "cluster_id", F.expr(_nearest_centroid(centroids, _ident("_v")))
-        )
         dim = len(centroids[0])
-        upd = (
-            assigned.select("cluster_id", F.posexplode("_v").alias("pos", "val"))
-            .groupBy("cluster_id", "pos")
-            .agg(F.round(F.avg("val"), 6).alias("m"))
-            .groupBy("cluster_id")
-            .agg(
-                F.expr("transform(array_sort(collect_list(struct(`pos`, `m`))), s -> s.m)")
-                .alias("cvec")
-            )
-            .collect()
-        )
+        upd = _kmeans_update(embeddings, centroids, vec_col).collect()
         new = {r.cluster_id: list(r.cvec) for r in upd}
         # empty clusters keep their previous centroid
         centroids = [new.get(c, centroids[c]) for c in range(n_clusters)]
         assert all(len(c) == dim for c in centroids)
     return centroids
+
+
+def _kmeans_update(embeddings: DataFrame, centroids: list, vec_col: str) -> DataFrame:
+    """(cluster_id, cvec): the updated centroids of one Lloyd iteration, as
+    kmeans_fit collects them. The raw float vector is exploded, not a double
+    cast of it: posexplode makes Spark infer size(v) > 0 AND isnotnull(v) and
+    push that below the projection, where a cast fold would run again. Float
+    widens to double exactly in the distance fold and in avg."""
+    assigned = embeddings.select(F.col(vec_col).alias("_v")).withColumn(
+        "cluster_id", F.expr(_nearest_centroid(centroids, ident("_v")))
+    )
+    return (
+        assigned.select("cluster_id", F.posexplode("_v").alias("pos", "val"))
+        .groupBy("cluster_id", "pos")
+        .agg(F.round(F.avg("val"), 6).alias("m"))
+        .groupBy("cluster_id")
+        .agg(
+            F.expr("transform(array_sort(collect_list(struct(`pos`, `m`))), s -> s.m)")
+            .alias("cvec")
+        )
+    )
 
 
 def _centroid_dists(centroids: list, vec: str) -> str:
@@ -409,7 +388,7 @@ def _centroid_dists(centroids: list, vec: str) -> str:
     if not centroids:
         raise ValueError("empty centroid list")
     return "array(" + ", ".join(
-        f"named_struct('d', round({_zip_sum(vec, _vector(c), '(x - y) * (x - y)')}, 6), 'c', {i})"
+        f"named_struct('d', round({_zip_sum(vec, vector(c), '(x - y) * (x - y)')}, 6), 'c', {i})"
         for i, c in enumerate(centroids)
     ) + ")"
 
@@ -442,7 +421,7 @@ def probe_centroids(
     `vec_col` is array<float> or array<double>. A slice of distinct cluster
     ids, so the list never repeats a cell."""
     return df.withColumn(
-        out_col, F.expr(_centroid_probes(centroids, _ident(vec_col), n_probes))
+        out_col, F.expr(_centroid_probes(centroids, ident(vec_col), n_probes))
     )
 
 
@@ -452,7 +431,7 @@ def with_kmeans_bucket(
     vec_col: str = "embedding",
     out_col: str = "km_bucket",
 ) -> DataFrame:
-    return df.withColumn(out_col, F.expr(_nearest_centroid(centroids, _ident(vec_col))))
+    return df.withColumn(out_col, F.expr(_nearest_centroid(centroids, ident(vec_col))))
 
 
 def cosine_topk_ivf_kmeans(
@@ -474,7 +453,7 @@ def cosine_topk_ivf_kmeans(
     )
     q = _explode_probes(
         _normed(queries, query_id_col, vec_col, _Q),
-        _centroid_probes(centroids, _ident("qvec"), n_probes),
+        _centroid_probes(centroids, ident("qvec"), n_probes),
     )
     return _score_topk(e, q, "bucket", k)
 

@@ -1,13 +1,16 @@
 """Text-analysis operators for a training-data pipeline — all JVM-side SQL
-expressions (no UDFs): language-ID heuristic, quality scoring, token counting,
-document fingerprinting. Each is a narrow projection + at most one aggregation,
-so they pushdown/prune cleanly and scale linearly.
+expressions (no UDFs), built as SQL text (see sqltext): language-ID
+heuristic, quality scoring, token counting, document fingerprinting. Each is
+a narrow projection + at most one aggregation, so they pushdown/prune cleanly
+and scale linearly.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .sqltext import ident, let, strings, word_shingles
 
 # tiny built-in stopword lists for the n-gram/stopword language heuristic
 STOPWORDS = {
@@ -34,8 +37,25 @@ TRIGRAMS = {
 }
 
 
-def _tokens(text_col):
-    return F.split(F.trim(F.lower(text_col)), " +")
+def _tokens(text_col: str) -> str:
+    """SQL: the lowercased whitespace tokens of `text_col`."""
+    return f"split(trim(lower({ident(text_col)})), ' +')"
+
+
+def _hits(arr: str, words) -> str:
+    """SQL: how many elements of the array `arr` are in `words`."""
+    return f"size(filter({arr}, t -> array_contains({strings(words)}, t)))"
+
+
+def _ranked_langs(arr: str, table: dict) -> str:
+    """SQL: one (neg_hits, lang, hits) struct per language of `table`, hits
+    counted over `arr`, sorted ascending: a struct sorts field-by-field, so
+    the first is the argmax with language-code tiebreak."""
+    structs = []
+    for lang in sorted(table):
+        h = _hits(arr, table[lang])
+        structs.append(f"named_struct('neg_hits', -{h}, 'lang', '{lang}', 'hits', {h})")
+    return f"array_sort(array({', '.join(structs)}))"
 
 
 def token_counts(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
@@ -47,19 +67,15 @@ def token_counts(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id
     staged = docs.select(
         F.col(key_col).alias("doc_id"),
         F.length(F.col(text_col)).cast("long").alias("_nchars"),
-        _tokens(F.col(text_col)).alias("_toks"),
+        F.expr(_tokens(text_col)).alias("_toks"),
     )
     # BPE-ish: every token contributes ceil(len/4) subword units
-    subwords = F.aggregate(
-        F.col("_toks"),
-        F.lit(0).cast("long"),
-        lambda acc, t: acc + F.ceil(F.length(t) / 4.0).cast("long"),
-    )
-    return staged.select(
+    return staged.selectExpr(
         "doc_id",
-        F.size("_toks").cast("long").alias("n_tokens"),
-        subwords.alias("n_subwords"),
-        F.col("_nchars").alias("n_chars_measured"),
+        "CAST(size(_toks) AS BIGINT) AS n_tokens",
+        "aggregate(_toks, CAST(0 AS BIGINT), "
+        "(acc, t) -> acc + CAST(ceil(length(t) / 4.0D) AS BIGINT)) AS n_subwords",
+        "_nchars AS n_chars_measured",
     )
 
 
@@ -73,53 +89,30 @@ def language_id(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id"
     """
     # Staged projections (r06): higher-order functions are interpreted with
     # no subexpression elimination, so the old single-select form re-built
-    # the trigram array per filter (7×) and re-ran lower(trim(text)) for
-    # EVERY substr inside it — O(len²) per document. Each expensive value is
-    # now computed once per row as a multi-referenced (hence un-collapsed)
-    # alias; values are identical.
-    s_raw = F.lower(F.trim(F.col(text_col)))
-
-    def _make_tris(s):
-        tri_idx = F.sequence(F.lit(1), F.greatest(F.length(s) - 2, F.lit(1)))
-        return F.transform(tri_idx, lambda i: s.substr(i, F.lit(3)))
-
-    tris_bound = F.element_at(F.transform(F.array(s_raw), _make_tris), 1)
-    staged = docs.select(
+    # the trigram array per filter (7×). The token and trigram arrays are now
+    # computed once per row as multi-referenced (hence un-collapsed) aliases,
+    # and the lowercased text the trigrams slice is let-bound.
+    tris = let(
+        "s", f"lower(trim({ident(text_col)}))",
+        "transform(sequence(1, greatest(length(s) - 2, 1)), i -> substr(s, i, 3))",
+    )
+    scored = docs.select(
         F.col(key_col).alias("doc_id"),
-        _tokens(F.col(text_col)).alias("_toks"),
-        tris_bound.alias("_tris"),
-    )
-
-    toks, tris = F.col("_toks"), F.col("_tris")
-    sw_scores, tri_scores = [], []
-    for lang, words in sorted(STOPWORDS.items()):
-        arr = F.array(*[F.lit(w) for w in words])
-        hits = F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-        # struct sorts field-by-field: (-hits, lang) ascending ≡ argmax with
-        # language-code tiebreak
-        sw_scores.append(
-            F.struct((-hits).alias("neg_hits"), F.lit(lang).alias("lang"), hits.alias("hits"))
-        )
-        tri_arr = F.array(*[F.lit(t) for t in TRIGRAMS[lang]])
-        thits = F.size(F.filter(tris, lambda t: F.array_contains(tri_arr, t)))
-        tri_scores.append(
-            F.struct((-thits).alias("neg_hits"), F.lit(lang).alias("lang"), thits.alias("hits"))
-        )
-    scored = staged.select(
+        F.expr(_tokens(text_col)).alias("_toks"),
+        F.expr(tris).alias("_tris"),
+    ).selectExpr(
         "doc_id",
-        F.array_sort(F.array(*sw_scores)).alias("_sw"),
-        F.element_at(F.array_sort(F.array(*tri_scores)), F.lit(1)).alias("_tri"),
+        f"{_ranked_langs('_toks', STOPWORDS)} AS _sw",
+        f"element_at({_ranked_langs('_tris', TRIGRAMS)}, 1) AS _tri",
     )
-    best = F.element_at(F.col("_sw"), F.lit(1))
-    second = F.element_at(F.col("_sw"), F.lit(2))
-    tri_best = F.col("_tri")
-    ambiguous = (best["hits"] == 0) | (best["hits"] == second["hits"])
-    return scored.select(
+    best, second = "element_at(_sw, 1)", "element_at(_sw, 2)"
+    ambiguous = f"({best}.hits = 0 OR {best}.hits = {second}.hits)"
+    return scored.selectExpr(
         "doc_id",
-        F.when(ambiguous, tri_best["lang"]).otherwise(best["lang"]).alias("detected_lang"),
-        best["hits"].alias("stopword_hits"),
-        F.when(ambiguous, tri_best["hits"]).otherwise(F.lit(0)).alias("trigram_hits"),
-        ambiguous.alias("used_trigram_fallback"),
+        f"CASE WHEN {ambiguous} THEN _tri.lang ELSE {best}.lang END AS detected_lang",
+        f"{best}.hits AS stopword_hits",
+        f"CASE WHEN {ambiguous} THEN _tri.hits ELSE 0 END AS trigram_hits",
+        f"{ambiguous} AS used_trigram_fallback",
     )
 
 
@@ -127,33 +120,26 @@ def quality_score(docs: DataFrame, text_col: str = "text", key_col: str = "doc_i
     """Heuristic quality features + a composite score: length, mean word
     length, punctuation ratio, stopword ratio, repetition (distinct/total
     token ratio). All ratios rounded to 6 dp for determinism."""
-    t = F.col(text_col)
     # token array bound once per row (see language_id): the old form re-split
     # the text for each of the four token-derived features
     staged = docs.select(
         F.col(key_col).alias("doc_id"),
-        t.alias("_t"),
-        _tokens(t).alias("_toks"),
+        F.col(text_col).alias("_t"),
+        F.expr(_tokens(text_col)).alias("_toks"),
     )
-    t = F.col("_t")
-    toks = F.col("_toks")
-    n_tok = F.size(toks)
-    n_chars = F.length(t)
-    punct = F.length(F.regexp_replace(t, "[^.,;:!?]", ""))
-    en = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
-    stop_hits = F.size(F.filter(toks, lambda x: F.array_contains(en, x)))
-    distinct_ratio = F.size(F.array_distinct(toks)) / F.greatest(n_tok, F.lit(1))
-    return staged.select(
-        F.col("doc_id"),
-        n_chars.cast("long").alias("n_chars_measured"),
-        n_tok.cast("long").alias("n_tokens"),
-        F.round(n_chars / F.greatest(n_tok, F.lit(1)), 6).alias("mean_word_len"),
-        F.round(punct / F.greatest(n_chars, F.lit(1)), 6).alias("punct_ratio"),
-        F.round(stop_hits / F.greatest(n_tok, F.lit(1)), 6).alias("stopword_ratio"),
-        F.round(distinct_ratio, 6).alias("distinct_token_ratio"),
-        F.round(
-            F.least(n_tok / F.lit(100.0), F.lit(1.0)) * distinct_ratio, 6
-        ).alias("quality"),
+    n_tok, n_chars = "size(_toks)", "length(_t)"
+    punct = "length(regexp_replace(_t, '[^.,;:!?]', ''))"
+    stop_hits = _hits("_toks", STOPWORDS["en"])
+    distinct_ratio = f"(size(array_distinct(_toks)) / greatest({n_tok}, 1))"
+    return staged.selectExpr(
+        "doc_id",
+        f"CAST({n_chars} AS BIGINT) AS n_chars_measured",
+        f"CAST({n_tok} AS BIGINT) AS n_tokens",
+        f"round({n_chars} / greatest({n_tok}, 1), 6) AS mean_word_len",
+        f"round({punct} / greatest({n_chars}, 1), 6) AS punct_ratio",
+        f"round({stop_hits} / greatest({n_tok}, 1), 6) AS stopword_ratio",
+        f"round({distinct_ratio}, 6) AS distinct_token_ratio",
+        f"round(least({n_tok} / 100.0D, 1.0D) * {distinct_ratio}, 6) AS quality",
     )
 
 
@@ -188,17 +174,8 @@ def fingerprint(
     """Document fingerprint: lexicographic-min md5 over word n-gram shingles
     (a winnowing-style content fingerprint, stable under whitespace changes
     and portable to the DuckDB oracle)."""
-    # let-bind the token array (see dedup._shingle_array): higher-order
-    # functions are interpreted, so a lambda capturing the raw split()
-    # re-evaluates it per element — O(tokens²) per document
-    toks_raw = _tokens(F.col(text_col))
-
-    def _fp(toks):
-        idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - shingle_n, F.lit(0)))
-        shingles = F.transform(
-            idx, lambda i: F.array_join(F.slice(toks, i + 1, shingle_n), " ")
-        )
-        return F.array_min(F.transform(shingles, F.md5))
-
-    fp = F.element_at(F.transform(F.array(toks_raw), _fp), 1)
-    return docs.select(F.col(key_col).alias("doc_id"), fp.alias("fingerprint"))
+    fp = let(
+        "toks", _tokens(text_col),
+        f"array_min(transform({word_shingles('toks', shingle_n)}, s -> md5(s)))",
+    )
+    return docs.select(F.col(key_col).alias("doc_id"), F.expr(fp).alias("fingerprint"))
