@@ -327,10 +327,49 @@ def test_dedup_components_round_sec_every_path(spark):
 
 
 @pytest.mark.parametrize(
+    "n,kw",
+    [
+        pytest.param(20, {}, id="propagate-20-rounds"),
+        pytest.param(20, {"mode": "star"}, id="star"),
+        pytest.param(64, {"max_iters": 8}, id="propagate-star-fallback"),
+    ],
+)
+def test_dedup_components_pins_one_snapshot(spark, n, kw):
+    """Every superseded round snapshot and the edge snapshot are released
+    once consumed: across a call, the session's persisted RDDs gain at most
+    the one snapshot the result reads (a 20-node path is 20 propagate
+    rounds; 64 nodes at max_iters=8 exhausts propagate and falls back to
+    star), and the result still collects afterwards."""
+    import warnings
+
+    from ukeeper_readability_spark.pipeline.dedup import dedup_components
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, n)], "doc_a long, doc_b long"
+    )
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    stats: dict = {}
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        out = dedup_components(pairs, stats=stats, **kw)
+    assert len(persisted() - before) <= 1
+    assert stats["converged"]
+    if not kw:
+        assert stats["rounds"] == n
+    got = {r.doc_id: r.component_id for r in out.collect()}
+    assert got == {i: 1 for i in range(1, n + 1)}
+
+
+@pytest.mark.parametrize(
     "op,kwargs,match",
     [
         pytest.param("components", dict(max_iters=0, mode="propagate"), "max_iters", id="propagate"),
         pytest.param("components", dict(max_iters=0, mode="star"), "max_iters", id="star"),
+        pytest.param("components", dict(mode="bogus"), "mode", id="mode-bogus"),
         pytest.param("lsh", dict(k=8, bands=0), "bands", id="lsh-bands-0"),
         pytest.param("lsh", dict(k=2, bands=4), "bands", id="lsh-k-below-bands"),
         pytest.param("lsh", dict(k=10, bands=4), "bands", id="lsh-k-not-multiple"),

@@ -103,6 +103,9 @@ def test_manifest_resume(spark, tmp_path):
     extracted = run_extraction(joined, snippet_size=200)
 
     nb = 4
+    # the sink's dynamic overwrite is a writer option, not a session setting
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    session_mode = spark.conf.get(mode_key)
     # simulate a partial run: only the first populated bucket written on attempt 1
     bucket = F.pmod(F.xxhash64("conv_id"), F.lit(nb)).cast("int")
     present = sorted(
@@ -126,6 +129,7 @@ def test_manifest_resume(spark, tmp_path):
     assert final.count() == 36
     assert final.select("conv_id", "turn_idx").distinct().count() == 36
     assert pending_buckets(spark, out_dir, nb) == []
+    assert spark.conf.get(mode_key) == session_mode
 
 
 def test_extract_by_rule_preview(spark):

@@ -291,17 +291,19 @@ def write_with_manifest(
     """Resumable sink: output partitioned by a stable conv_id hash bucket with
     dynamic partition overwrite (idempotent per-bucket restart) + a manifest row
     per bucket (FIXTURES.md §4). In production both are Iceberg tables and the
-    write is `writeTo(...).overwritePartitions()`."""
+    write is `writeTo(...).overwritePartitions()`. Dynamic overwrite is a
+    writer option, so the session's partitionOverwriteMode is left as is."""
     run_id = run_id or uuid.uuid4().hex
     spark = extracted.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     metric_cols = [f.name for f in extracted.schema if f.name.startswith("m_")]
     to_write = extracted.withColumn(
         "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(nbuckets)).cast("int")
     ).select(*EXTRACTED_COLS, *metric_cols, "bucket")
     data_path = os.path.join(output_path, "extracted")
-    to_write.write.mode("overwrite").partitionBy("bucket").parquet(data_path)
+    to_write.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("bucket").parquet(data_path)
 
     # manifest from what was actually written (read-back: metrics reflect the
     # committed files, not a possibly-retried in-flight computation); explicit

@@ -198,6 +198,13 @@ def ngram_jaccard(
     dedup_components already materializes. On a real cluster point
     spark.checkpoint.dir at durable storage and use checkpoint() for fault
     tolerance of long chains.
+
+    Both lazy snapshots stay pinned while the returned DataFrame is
+    referenced; Spark's ContextCleaner frees them only after the caller
+    drops it. This function cannot release them itself (unlike
+    dedup_components' loops): the result reads them lazily, so every action
+    on it scans them, and no action of this function's own ever consumes
+    them.
     """
     pairs = pairs.select("doc_a", "doc_b").localCheckpoint(eager=False)
     # the pruned (doc, shingle-array) table is joined on BOTH pair sides
@@ -286,6 +293,18 @@ def _constraint_propagation_off(df: DataFrame):
         spark.conf.set(key, prev)
 
 
+def _release(snapshot: DataFrame) -> None:
+    """Unpersist a localCheckpoint snapshot's RDD now instead of at GC.
+
+    DataFrame.unpersist() does nothing for a checkpoint (it only drops
+    cache-manager entries), so this goes to the snapshot's LogicalRDD.
+    Call it only after the action that consumes the snapshot has run, and
+    never on the snapshot a returned DataFrame reads: a plan that still
+    reads a released snapshot fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
+    (it does not recompute silently)."""
+    snapshot._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def dedup_components(
     pairs: DataFrame,
     key_a: str = "doc_a",
@@ -311,12 +330,19 @@ def dedup_components(
     arbitrary/adversarial graphs (a crawl-chain corpus can legally produce a
     path graph, where propagation needs n rounds).
     tests/test_pipeline.py demonstrates the separation on a 64-node path.
+    Any other mode is a ValueError.
 
-    Each round is join + groupBy keyed on node id (AQE picks the strategy);
-    lineage is cut per round with localCheckpoint so the plan stays
-    constant-size across iterations — on a real cluster point
-    spark.checkpoint.dir at durable storage and use checkpoint() instead.
-    Only the CONVERGENCE COUNTER crosses the driver, never labels/edges.
+    The (u, v) edge list is snapshot ONCE (eager localCheckpoint) and both
+    algorithms read that snapshot — the caller's pair plan runs once per
+    call, fallback included. Each round is join + groupBy keyed on node id
+    (AQE picks the strategy); lineage is cut per round with localCheckpoint
+    so the plan stays constant-size across iterations — on a real cluster
+    point spark.checkpoint.dir at durable storage and use checkpoint()
+    instead. Only the CONVERGENCE COUNTER crosses the driver, never
+    labels/edges. Every superseded snapshot, the edge snapshot included, is
+    released (_release) once the action that consumes it has run, so on
+    return exactly one snapshot is still pinned: the one the result reads,
+    freed by Spark's ContextCleaner after the caller drops the result.
 
     Propagation that EXHAUSTS max_iters without converging has wrong labels
     for any component wider than max_iters hops — never returned silently
@@ -337,127 +363,106 @@ def dedup_components(
     """
     if max_iters < 1:
         raise ValueError(f"max_iters must be >= 1, got {max_iters}")
-    if stats is None:
-        stats = {}
-    if mode == "star":
-        return _components_star(pairs, key_a, key_b, max_iters, stats)
+    if mode not in ("propagate", "star"):
+        raise ValueError(f"mode must be 'propagate' or 'star', got {mode!r}")
+    round_sec: list = []
+    fallback_rounds = None
     with _constraint_propagation_off(pairs):
-        # materialize the directed edge list ONCE, then symmetrize from the
-        # cached copy (r06): the former union-of-two-selects shape computed
-        # the full upstream candidate/verify chain once per union branch
-        p0 = pairs.select(
+        edges = pairs.select(
             F.col(key_a).alias("u"), F.col(key_b).alias("v")
         ).localCheckpoint(eager=True)
-        sym = p0.union(p0.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        converged = False
-        rounds = 0
-        # DELTA ITERATION (round 5): labels are monotone non-increasing, so a
-        # node's label can only drop when a NEIGHBOR'S label dropped — each
-        # round joins edges against the FRONTIER (nodes changed last round),
-        # not the full label table. Round 1's frontier is everyone
-        # (equivalent to the full recompute); on LSH clique graphs the
-        # frontier collapses after a round or two and late rounds shuffle
-        # almost nothing instead of re-sending every edge's message.
-        #
-        # ONE action per round (r06): the checkpoint is LAZY and the
-        # convergence probe is a count over the changed-flag column of the
-        # same DataFrame, so the counting job is ALSO the job that
-        # materializes the checkpoint (local checkpointing is cache-based —
-        # the first action through the marked RDD persists it). The round-5
-        # shape paid two jobs per round: an eager-checkpoint materialization
-        # plus a separate limit(1) existence probe.
-        # FUSED ROUND 1 (r06): with identity labels, round 1's message to u
-        # is simply min(N(u)) — one aggregation over the edge list replaces
-        # the old init chain (distinct-nodes checkpoint, then a full
-        # frontier join + groupBy + labels join for the first round). The
-        # node set falls out of the same groupBy (sym is symmetric, so its
-        # u column covers every endpoint). Labels after this block are
-        # bit-identical to the old code's state after round 1.
-        round_sec: list = []
-        _t0 = time.perf_counter()
-        rounds = 1
-        stepped = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("nb_min"))
-            .select(
-                F.col("u").alias("node"),
-                F.least(F.col("u"), F.col("nb_min")).alias("new_label"),
-                (F.col("nb_min") < F.col("u")).alias("_chg"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        n_changed = stepped.filter("_chg").count()
-        round_sec.append(round(time.perf_counter() - _t0, 3))
-        labels = stepped.select("node", F.col("new_label").alias("label"))
-        frontier = stepped.filter("_chg").select(
-            "node", F.col("new_label").alias("label")
-        )
-        converged = n_changed == 0
-        while not converged and rounds < max_iters:
-            rounds += 1
-            _t0 = time.perf_counter()
-            msgs = (
-                sym.join(
-                    frontier.select(
-                        F.col("node").alias("v"), F.col("label").alias("vlab")
-                    ),
-                    "v",
-                )
-                .groupBy("u")
-                .agg(F.min("vlab").alias("nb_min"))
-                .withColumnRenamed("u", "node")
-            )
-            stepped = (
-                labels.join(msgs, "node", "left")
-                .select(
-                    "node",
-                    F.least(F.col("label"), F.coalesce("nb_min", "label")).alias(
-                        "new_label"
-                    ),
-                    (F.coalesce("nb_min", "label") < F.col("label")).alias("_chg"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            n_changed = stepped.filter("_chg").count()
-            round_sec.append(round(time.perf_counter() - _t0, 3))
-            labels = stepped.select("node", F.col("new_label").alias("label"))
-            frontier = stepped.filter("_chg").select(
-                "node", F.col("new_label").alias("label")
-            )
-            if n_changed == 0:
-                converged = True
-        if "round_sec" in stats:
-            stats["round_sec"] = round_sec
-        stats.update(mode="propagate", rounds=rounds, converged=converged)
-        if not converged:
+        solve = _components_star if mode == "star" else _components_propagate
+        out, rounds, converged = solve(edges, max_iters, round_sec)
+        if out is None:
             warnings.warn(
                 f"dedup_components(mode='propagate') did not converge in "
                 f"{max_iters} rounds — a component is wider than max_iters hops"
                 "; falling back to mode='star' (O(log^2 n) rounds)",
                 stacklevel=2,
             )
-            fb: dict = {"round_sec": []}
-            out = _components_star(pairs, key_a, key_b, max_iters, fb)
-            stats.update(
-                mode="propagate->star", fallback_rounds=fb["rounds"],
-                converged=fb["converged"],
+            mode = "propagate->star"
+            out, fallback_rounds, converged = _components_star(
+                edges, max_iters, round_sec
             )
-            if "round_sec" in stats:
-                stats["round_sec"] = round_sec + fb["round_sec"]
-            return out
-        return labels.select(
-            F.col("node").alias("doc_id"), F.col("label").alias("component_id")
-        )
+        _release(edges)
+    if stats is not None:
+        if "round_sec" in stats:
+            stats["round_sec"] = round_sec
+        stats.update(mode=mode, rounds=rounds, converged=converged)
+        if fallback_rounds is not None:
+            stats["fallback_rounds"] = fallback_rounds
+    return out
+
+
+def _components_propagate(
+    edges: DataFrame, max_iters: int, round_sec: list
+) -> tuple[DataFrame | None, int, bool]:
+    """Min-label propagation over the (u, v) edge snapshot:
+    (components, rounds, converged). Components is None when max_iters
+    rounds did not converge — its labels would be wrong, so its snapshot is
+    released here and nothing reads it.
+
+    DELTA ITERATION (round 5): labels are monotone non-increasing, so a
+    node's label can only drop when a NEIGHBOR'S label dropped — each round
+    joins edges against the FRONTIER (nodes changed last round), not the
+    full label table; on LSH clique graphs the frontier collapses after a
+    round or two. FUSED ROUND 1 (r06): with identity labels, round 1's
+    message to u is simply min(N(u)), one aggregation over the edge list
+    whose groupBy also yields the node set (the edges are symmetrized, so u
+    covers every endpoint).
+
+    ONE action per round (r06): the snapshot is LAZY and the convergence
+    probe is a count over its changed-flag column, so the counting job is
+    ALSO the job that materializes it (local checkpointing is cache-based —
+    the first action through the marked RDD persists it). Under AQE the
+    localCheckpoint call itself already runs the round's shuffle-map
+    stages, which read the previous snapshot; it is released after the
+    count, once nothing can read it.
+    """
+    sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    snap = None
+    for rounds in range(1, max_iters + 1):
+        t0 = time.perf_counter()
+        if snap is None:
+            step = sym.groupBy("u").agg(F.min("v").alias("nb_min")).select(
+                F.col("u").alias("node"),
+                F.least("u", "nb_min").alias("label"),
+                (F.col("nb_min") < F.col("u")).alias("_chg"),
+            )
+        else:
+            frontier = snap.filter("_chg").select(
+                F.col("node").alias("v"), F.col("label").alias("vlab")
+            )
+            msgs = (
+                sym.join(frontier, "v")
+                .groupBy("u")
+                .agg(F.min("vlab").alias("nb_min"))
+                .withColumnRenamed("u", "node")
+            )
+            step = snap.select("node", "label").join(msgs, "node", "left").select(
+                "node",
+                F.least("label", F.coalesce("nb_min", "label")).alias("label"),
+                (F.coalesce("nb_min", "label") < F.col("label")).alias("_chg"),
+            )
+        prev, snap = snap, step.localCheckpoint(eager=False)
+        n_changed = snap.filter("_chg").count()
+        round_sec.append(round(time.perf_counter() - t0, 3))
+        if prev is not None:
+            _release(prev)
+        if n_changed == 0:
+            out = snap.select(
+                F.col("node").alias("doc_id"), F.col("label").alias("component_id")
+            )
+            return out, rounds, True
+    _release(snap)
+    return None, max_iters, False
 
 
 def _components_star(
-    pairs: DataFrame,
-    key_a: str,
-    key_b: str,
-    max_iters: int,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Alternating large-star/small-star rounds (Kiveris et al. 2014 §3).
+    edges: DataFrame, max_iters: int, round_sec: list
+) -> tuple[DataFrame, int, bool]:
+    """Alternating large-star/small-star rounds (Kiveris et al. 2014 §3)
+    over the (u, v) edge snapshot: (components, rounds, converged).
 
     Edges are kept canonical as (u, v) with u > v. Per round:
       large-star: for each node u over its FULL neighborhood N(u),
@@ -472,96 +477,84 @@ def _components_star(
     set. Nodes that lose all edges en route (already-rooted singleton
     stars) are re-attached from the original node set at the end.
     """
-    with _constraint_propagation_off(pairs):
-        # materialize the pair input ONCE — nodes and e both derive from it,
-        # and each eager checkpoint used to recompute the full upstream
-        # candidate/verify chain independently (r06)
-        pairs0 = pairs.select(
-            F.col(key_a).alias("a"), F.col(key_b).alias("b")
-        ).localCheckpoint(eager=True)
-        nodes = (
-            pairs0.select(F.col("a").alias("n"))
-            .union(pairs0.select(F.col("b").alias("n")))
-            .distinct()
-            .localCheckpoint(eager=True)
+    nodes = (
+        edges.select(F.col("u").alias("n"))
+        .union(edges.select(F.col("v").alias("n")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    e = (
+        edges.select(
+            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
-        e = (
-            pairs0.select(
-                F.greatest(F.col("a"), F.col("b")).alias("u"),
-                F.least(F.col("a"), F.col("b")).alias("v"),
-            )
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+    def fingerprint(g):
+        row = g.select(
+            F.count(F.lit(1)).alias("n"),
+            F.bit_xor(F.xxhash64("u", "v")).alias("x"),
+        ).collect()[0]
+        return row.n, row.x
+
+    fp = fingerprint(e)
+    converged = False
+    for rounds in range(1, max_iters + 1):
+        t0 = time.perf_counter()
+        # ---- large-star over the symmetric neighborhood ----
+        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        mins = (
+            sym.groupBy("u")
+            .agg(F.min("v").alias("mv"))
+            .select("u", F.least("u", "mv").alias("m"))
+        )
+        # LAZY snapshots (r06): the round's single materializing action is
+        # the fingerprint collect below — it persists both the large-star
+        # and small-star RDDs in one job (local checkpointing is
+        # cache-based), where the round-5 shape paid three jobs per round
+        large = (
+            sym.join(mins, "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
-
-        def fingerprint(edges):
-            row = edges.select(
-                F.count(F.lit(1)).alias("n"),
-                F.bit_xor(F.xxhash64("u", "v")).alias("x"),
-            ).collect()[0]
-            return row.n, row.x
-
-        fp = fingerprint(e)
-        converged = False
-        rounds = 0
-        round_sec: list = []
-        for _ in range(max_iters):
-            rounds += 1
-            _t0 = time.perf_counter()
-            # ---- large-star over the symmetric neighborhood ----
-            sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            mins = (
-                sym.groupBy("u")
-                .agg(F.min("v").alias("mv"))
-                .select("u", F.least("u", "mv").alias("m"))
+        # ---- small-star over the smaller-neighbor lists (u > v already) ----
+        mins = (
+            large.groupBy("u")
+            .agg(F.min("v").alias("m"))  # m = min(N⁻(u)) < u = min(N⁻ ∪ {u})
+        )
+        joined = large.join(mins, "u")
+        small = (
+            joined.select(
+                F.greatest(F.col("v"), F.col("m")).alias("u"),
+                F.least(F.col("v"), F.col("m")).alias("v"),
             )
-            # LAZY checkpoints (r06): the round's single materializing action
-            # is the fingerprint collect below — it persists both the
-            # large-star and small-star RDDs in one job (local checkpointing
-            # is cache-based), where the round-5 shape paid three jobs per
-            # round (two eager materializations + the fingerprint)
-            e = (
-                sym.join(mins, "u")
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-            # ---- small-star over the smaller-neighbor lists (u > v already) ----
-            mins = (
-                e.groupBy("u")
-                .agg(F.min("v").alias("m"))  # m = min(N⁻(u)) < u = min(N⁻ ∪ {u})
-            )
-            joined = e.join(mins, "u")
-            e = (
-                joined.select(
-                    F.greatest(F.col("v"), F.col("m")).alias("u"),
-                    F.least(F.col("v"), F.col("m")).alias("v"),
-                )
-                .union(
-                    joined.select(F.col("u"), F.col("m").alias("v")).distinct()
-                )
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-            new_fp = fingerprint(e)
-            round_sec.append(round(time.perf_counter() - _t0, 3))
-            if new_fp == fp:
-                converged = True
-                break
-            fp = new_fp
-        if stats is not None:
-            if "round_sec" in stats:
-                stats["round_sec"] = round_sec
-            stats.update(mode="star", rounds=rounds, converged=converged)
-        # at the fixpoint e = {(member, root)}; singletons have no edge
-        roots = e.select(F.col("u").alias("doc_id"), F.col("v").alias("component_id"))
-        singles = nodes.join(
-            e.select(F.col("u").alias("n")), "n", "left_anti"
-        ).select(F.col("n").alias("doc_id"), F.col("n").alias("component_id"))
-        # materialize INSIDE the scope: the closing union must not be
-        # analyzed after constraint propagation is restored
-        return roots.union(singles).localCheckpoint(eager=True)
+            .union(joined.select(F.col("u"), F.col("m").alias("v")).distinct())
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
+        new_fp = fingerprint(small)
+        round_sec.append(round(time.perf_counter() - t0, 3))
+        _release(e)
+        _release(large)
+        e = small
+        if new_fp == fp:
+            converged = True
+            break
+        fp = new_fp
+    # at the fixpoint e = {(member, root)}; singletons have no edge
+    roots = e.select(F.col("u").alias("doc_id"), F.col("v").alias("component_id"))
+    singles = nodes.join(
+        e.select(F.col("u").alias("n")), "n", "left_anti"
+    ).select(F.col("n").alias("doc_id"), F.col("n").alias("component_id"))
+    # materialize INSIDE the caller's scope: the closing union must not be
+    # analyzed after constraint propagation is restored
+    out = roots.union(singles).localCheckpoint(eager=True)
+    _release(e)
+    _release(nodes)
+    return out, rounds, converged
