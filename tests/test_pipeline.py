@@ -237,13 +237,16 @@ def test_dedup_components_star_mode_low_rounds_on_path(spark):
     assert stats["rounds"] == 8
 
 
-def test_dedup_components_on_filter_derived_pairs(spark, docs):
+def test_dedup_components_on_filter_derived_pairs(spark, docs, monkeypatch):
     """Regression (round 5): Catalyst's UnionBase.rewriteConstraints throws
-    'key not found: <attr>' on the component loops' self-union plans when the
-    edge input carries filter-derived constraints — exactly what the
-    production chain feeds them (jaccard >= threshold). Both modes must run
-    on that shape; dedup.py scopes constraint propagation off for the loop
-    and restores the session setting after."""
+    'key not found: <attr>' on self-union plans over an edge input that
+    carries filter-derived constraints — exactly what the production chain
+    feeds the component loops (jaccard >= threshold). Both modes must run
+    on that shape, agree, and do it without writing session config (a
+    session-wide toggle would also change every query planned concurrently
+    on the session): the loops build no Union at all."""
+    from pyspark.sql.conf import RuntimeConfig
+
     from ukeeper_readability_spark.pipeline.dedup import dedup_components
 
     pairs = minhash_lsh_pairs(docs, shingle_n=3, k=8, bands=4)
@@ -252,19 +255,21 @@ def test_dedup_components_on_filter_derived_pairs(spark, docs):
         .filter(F.col("jaccard") >= 0.5)
         .select("doc_a", "doc_b")
     )
+
+    def no_config_writes(self, *args):
+        raise AssertionError(f"session config written: {args}")
+
+    monkeypatch.setattr(RuntimeConfig, "set", no_config_writes)
     stats_p, stats_s = {}, {}
     a = sorted(map(tuple, dedup_components(verified, stats=stats_p).collect()))
     b = sorted(
         map(tuple, dedup_components(verified, mode="star", stats=stats_s).collect())
     )
+    monkeypatch.undo()
     assert a == b and len(a) > 0
     assert stats_p["converged"] and stats_s["converged"]
     assert stats_p["mode"] == "propagate" and stats_s["mode"] == "star"
     assert stats_p["rounds"] >= 1 and stats_s["rounds"] >= 1
-    # the scope restored the caller's session setting
-    assert (
-        spark.conf.get("spark.sql.constraintPropagation.enabled") == "true"
-    )
 
 
 def test_dedup_components_exhaustion_never_silent(spark):
@@ -281,6 +286,31 @@ def test_dedup_components_exhaustion_never_silent(spark):
             for r in dedup_components(pairs, max_iters=8).collect()
         }
     assert got == {i: 1 for i in range(1, 65)}  # fallback result is CORRECT
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        pytest.param({"mode": "star", "max_iters": 1}, id="star"),
+        pytest.param({"max_iters": 4}, id="propagate-star-fallback"),
+    ],
+)
+def test_dedup_components_star_exhaustion_raises(spark, kw):
+    """Star rounds that end without a stable fingerprint have wrong labels
+    (on the 64-node path, 61 of 64 at mode='star', max_iters=1; 47 of 64
+    after the fallback at max_iters=4), so the call raises instead of
+    returning them — also when star runs as propagate's fallback."""
+    import warnings
+
+    from ukeeper_readability_spark.pipeline.dedup import dedup_components
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 64)], "doc_a long, doc_b long"
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        with pytest.raises(RuntimeError, match=f"max_iters={kw['max_iters']}"):
+            dedup_components(pairs, **kw)
 
 
 def test_dedup_components_modes_agree(spark):

@@ -5,10 +5,12 @@ are reviewable without running Spark."""
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ukeeper_readability_spark.data.synth import fixture_transcripts_df
 from ukeeper_readability_spark.jobs.extract_job import (
@@ -167,7 +169,7 @@ def main():
     ]
     for title, plan in sections:
         out += [f"## {title}", "", "```", plan.rstrip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print("wrote PLANS.md")
     spark.stop()

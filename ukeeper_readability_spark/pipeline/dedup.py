@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import time
 import warnings
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -192,8 +191,11 @@ def ngram_jaccard(
     replicated the entire upstream LSH candidate pipeline per occurrence
     (measured at 20k docs: the verify plan went from 7 parquet-scan /
     12 shuffle-Exchange / 5 posexplode nodes to 0 scans / 0 shuffle
-    Exchanges over 3 snapshot scans — the LSH pipeline now runs exactly
-    once, inside the checkpoint materialization).
+    Exchanges over 3 snapshot scans — the LSH pipeline now runs once, for
+    the pair snapshot). "Lazy" does not mean no work at the call: under AQE
+    each localCheckpoint(eager=False) call below already runs its plan's
+    shuffle-map stages (the LSH pipeline's, the prune's), and the first
+    action on the result runs the rest.
     The checkpoint is sized by the candidate-pair count — the same bound
     dedup_components already materializes. On a real cluster point
     spark.checkpoint.dir at durable storage and use checkpoint() for fault
@@ -262,37 +264,6 @@ def simhash(
     return agg.selectExpr("doc_id", f"CAST(0 AS BIGINT){sim} AS simhash")
 
 
-@contextmanager
-def _constraint_propagation_off(df: DataFrame):
-    """Catalyst's UnionBase.rewriteConstraints throws NoSuchElementException
-    ('key not found: <attr>') on the iterated self-union plans the component
-    algorithms build when the edge input carries filter-derived constraints
-    (reproduced on Spark 4.1.2 with jaccard-filtered candidate pairs; the
-    crash survives a localCheckpoint of the input). Constraint propagation
-    only adds inferred filters these loops don't need, so scope it OFF for
-    the iteration and restore the caller's setting after. Every DataFrame the
-    loop returns is materialized (localCheckpoint) inside the scope, so no
-    un-analyzed Union escapes it.
-
-    Single-threaded assumption (ADVICE r5): the toggle is session-global, so
-    a query PLANNED concurrently on the same SparkSession (another driver
-    thread, a streaming micro-batch) inside this scope would also lose
-    constraint propagation for that window — harmless to correctness (the
-    setting only adds inferred filters) but a potential plan regression.
-    The engine's drivers are single-threaded; revisit if that changes."""
-    spark = df.sparkSession
-    key = "spark.sql.constraintPropagation.enabled"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = "true"
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
-
-
 def _release(snapshot: DataFrame) -> None:
     """Unpersist a localCheckpoint snapshot's RDD now instead of at GC.
 
@@ -343,11 +314,14 @@ def dedup_components(
     released (_release) once the action that consumes it has run, so on
     return exactly one snapshot is still pinned: the one the result reads,
     freed by Spark's ContextCleaner after the caller drops the result.
+    The loops build no Union (both directions of an edge come from one
+    `inline` over a single scan) and write no session config.
 
-    Propagation that EXHAUSTS max_iters without converging has wrong labels
-    for any component wider than max_iters hops — never returned silently
-    (ADVICE r4): it warns and re-solves with the diameter-independent star
-    mode (stats report mode "propagate->star").
+    A solve that EXHAUSTS max_iters without converging has wrong labels, so
+    it is never returned silently (ADVICE r4): propagation warns and
+    re-solves with the diameter-independent star mode (stats report mode
+    "propagate->star"); star rounds that exhaust max_iters, in either mode,
+    raise RuntimeError.
 
     Pass `stats={}` to receive rounds-to-convergence instrumentation:
     {"mode", "rounds", "converged"} — the numbers BENCH.md reports for the
@@ -367,40 +341,48 @@ def dedup_components(
         raise ValueError(f"mode must be 'propagate' or 'star', got {mode!r}")
     round_sec: list = []
     fallback_rounds = None
-    with _constraint_propagation_off(pairs):
-        edges = pairs.select(
-            F.col(key_a).alias("u"), F.col(key_b).alias("v")
-        ).localCheckpoint(eager=True)
-        solve = _components_star if mode == "star" else _components_propagate
-        out, rounds, converged = solve(edges, max_iters, round_sec)
-        if out is None:
-            warnings.warn(
-                f"dedup_components(mode='propagate') did not converge in "
-                f"{max_iters} rounds — a component is wider than max_iters hops"
-                "; falling back to mode='star' (O(log^2 n) rounds)",
-                stacklevel=2,
-            )
-            mode = "propagate->star"
-            out, fallback_rounds, converged = _components_star(
-                edges, max_iters, round_sec
-            )
-        _release(edges)
+    edges = pairs.select(
+        F.col(key_a).alias("u"), F.col(key_b).alias("v")
+    ).localCheckpoint(eager=True)
+    solve = _components_star if mode == "star" else _components_propagate
+    out, rounds = solve(edges, max_iters, round_sec)
+    if out is None and mode == "propagate":
+        warnings.warn(
+            f"dedup_components(mode='propagate') did not converge in "
+            f"{max_iters} rounds — a component is wider than max_iters hops"
+            "; falling back to mode='star' (O(log^2 n) rounds)",
+            stacklevel=2,
+        )
+        mode = "propagate->star"
+        out, fallback_rounds = _components_star(edges, max_iters, round_sec)
+    _release(edges)
+    if out is None:
+        raise RuntimeError(
+            f"dedup_components(mode={mode!r}): star rounds did not converge "
+            f"in max_iters={max_iters} rounds; raise max_iters"
+        )
     if stats is not None:
         if "round_sec" in stats:
             stats["round_sec"] = round_sec
-        stats.update(mode=mode, rounds=rounds, converged=converged)
+        stats.update(mode=mode, rounds=rounds, converged=True)
         if fallback_rounds is not None:
             stats["fallback_rounds"] = fallback_rounds
     return out
 
 
+# both directions of each (u, v) edge from ONE scan, with no Union: on
+# filter-derived edges, a self-union over a round snapshot that a Union
+# built crashes Catalyst's UnionBase.rewriteConstraints ("key not found")
+_BOTH_WAYS = "inline(array(named_struct('u', u, 'v', v), named_struct('u', v, 'v', u)))"
+
+
 def _components_propagate(
     edges: DataFrame, max_iters: int, round_sec: list
-) -> tuple[DataFrame | None, int, bool]:
+) -> tuple[DataFrame | None, int]:
     """Min-label propagation over the (u, v) edge snapshot:
-    (components, rounds, converged). Components is None when max_iters
-    rounds did not converge — its labels would be wrong, so its snapshot is
-    released here and nothing reads it.
+    (components, rounds). Components is None when max_iters rounds did not
+    converge — its labels would be wrong, so its snapshot is released here
+    and nothing reads it.
 
     DELTA ITERATION (round 5): labels are monotone non-increasing, so a
     node's label can only drop when a NEIGHBOR'S label dropped — each round
@@ -419,7 +401,7 @@ def _components_propagate(
     stages, which read the previous snapshot; it is released after the
     count, once nothing can read it.
     """
-    sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    sym = edges.selectExpr(_BOTH_WAYS)
     snap = None
     for rounds in range(1, max_iters + 1):
         t0 = time.perf_counter()
@@ -453,16 +435,18 @@ def _components_propagate(
             out = snap.select(
                 F.col("node").alias("doc_id"), F.col("label").alias("component_id")
             )
-            return out, rounds, True
+            return out, rounds
     _release(snap)
-    return None, max_iters, False
+    return None, max_iters
 
 
 def _components_star(
     edges: DataFrame, max_iters: int, round_sec: list
-) -> tuple[DataFrame, int, bool]:
+) -> tuple[DataFrame | None, int]:
     """Alternating large-star/small-star rounds (Kiveris et al. 2014 §3)
-    over the (u, v) edge snapshot: (components, rounds, converged).
+    over the (u, v) edge snapshot: (components, rounds). Components is None
+    when max_iters rounds did not reach the fixpoint — its labels would be
+    wrong, so the round's edges are released here and nothing reads them.
 
     Edges are kept canonical as (u, v) with u > v. Per round:
       large-star: for each node u over its FULL neighborhood N(u),
@@ -470,26 +454,22 @@ def _components_star(
       small-star: for each node u over its smaller neighbors
         N⁻(u) = {v : v < u}, m = min(N⁻(u) ∪ {u}); emit (v, m) for
         v ∈ N⁻(u) ∪ {u}, v ≠ m.
-    At the fixpoint every component is a star rooted at its minimum; labels
-    read directly off the edges. Fixpoint detection compares the canonical
-    edge set's (count, xor-of-hashes) fingerprint between rounds — the
-    operators converge monotonically, so a stable fingerprint is a stable
-    set. Nodes that lose all edges en route (already-rooted singleton
-    stars) are re-attached from the original node set at the end.
+    At the fixpoint every component is a star rooted at its minimum: each
+    member has exactly one edge, to its root. Fixpoint detection compares
+    the canonical edge set's (count, xor-of-hashes) fingerprint between
+    rounds — the operators converge monotonically, so a stable fingerprint
+    is a stable set. Labels are read off the edges by a left join from the
+    node set (derived from the edge snapshot), so roots and nodes that lost
+    all edges en route label themselves.
     """
-    nodes = (
-        edges.select(F.col("u").alias("n"))
-        .union(edges.select(F.col("v").alias("n")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    # lazy: the first fingerprint collect materializes it
     e = (
         edges.select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
 
     def fingerprint(g):
@@ -500,20 +480,20 @@ def _components_star(
         return row.n, row.x
 
     fp = fingerprint(e)
-    converged = False
     for rounds in range(1, max_iters + 1):
         t0 = time.perf_counter()
         # ---- large-star over the symmetric neighborhood ----
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        sym = e.selectExpr(_BOTH_WAYS)
         mins = (
             sym.groupBy("u")
             .agg(F.min("v").alias("mv"))
             .select("u", F.least("u", "mv").alias("m"))
         )
-        # LAZY snapshots (r06): the round's single materializing action is
-        # the fingerprint collect below — it persists both the large-star
-        # and small-star RDDs in one job (local checkpointing is
-        # cache-based), where the round-5 shape paid three jobs per round
+        # LAZY snapshots (r06): no job only materializes a snapshot — the
+        # fingerprint collect below persists both the large-star and
+        # small-star RDDs (local checkpointing is cache-based). Under AQE
+        # each lazy localCheckpoint call already runs its plan's
+        # shuffle-map stages, so a round still runs more than one job.
         large = (
             sym.join(mins, "u")
             .filter(F.col("v") > F.col("u"))
@@ -527,13 +507,12 @@ def _components_star(
             large.groupBy("u")
             .agg(F.min("v").alias("m"))  # m = min(N⁻(u)) < u = min(N⁻ ∪ {u})
         )
-        joined = large.join(mins, "u")
         small = (
-            joined.select(
-                F.greatest(F.col("v"), F.col("m")).alias("u"),
-                F.least(F.col("v"), F.col("m")).alias("v"),
+            large.join(mins, "u")
+            .selectExpr(
+                "inline(array(named_struct('u', greatest(v, m), 'v', least(v, m)),"
+                " named_struct('u', u, 'v', m)))"
             )
-            .union(joined.select(F.col("u"), F.col("m").alias("v")).distinct())
             .filter(F.col("u") != F.col("v"))
             .distinct()
             .localCheckpoint(eager=False)
@@ -544,17 +523,17 @@ def _components_star(
         _release(large)
         e = small
         if new_fp == fp:
-            converged = True
             break
         fp = new_fp
-    # at the fixpoint e = {(member, root)}; singletons have no edge
-    roots = e.select(F.col("u").alias("doc_id"), F.col("v").alias("component_id"))
-    singles = nodes.join(
-        e.select(F.col("u").alias("n")), "n", "left_anti"
-    ).select(F.col("n").alias("doc_id"), F.col("n").alias("component_id"))
-    # materialize INSIDE the caller's scope: the closing union must not be
-    # analyzed after constraint propagation is restored
-    out = roots.union(singles).localCheckpoint(eager=True)
+    else:
+        _release(e)
+        return None, max_iters
+    # eager: the caller releases the edge snapshot the node set reads
+    nodes = edges.selectExpr("explode(array(u, v)) AS n").distinct()
+    out = (
+        nodes.join(e.select(F.col("u").alias("n"), F.col("v").alias("root")), "n", "left")
+        .selectExpr("n AS doc_id", "coalesce(root, n) AS component_id")
+        .localCheckpoint(eager=True)
+    )
     _release(e)
-    _release(nodes)
-    return out, rounds, converged
+    return out, rounds
