@@ -17,7 +17,7 @@ from ..htmldom import find_all, inner_html, parse
 from ..htmldom.gostr import utf8_len
 from ..htmldom.parser import parse_head
 from .links import normalize_links
-from .pics import extract_pics
+from .pics import extract_pics, img_start_tag_srcs, pick_pics
 from .readability import Document, preprocessing_is_identity
 from .sanitize_text import (
     detect_type_charset,
@@ -27,6 +27,11 @@ from .sanitize_text import (
 )
 
 DEFAULT_SNIPPET_SIZE = 300  # reference main.go:83
+
+# markup with which the tree builder renames (<image> -> img) or reorders
+# (table foster parenting) an <img>; svg, math, select and template, where
+# HTML5 tree construction treats an <img> specially, stay on the tree path too
+_IMG_TREE_TAGS = ("<table", "<svg", "<math", "<image", "<select", "<template")
 
 
 class ExtractError(Exception):
@@ -54,6 +59,17 @@ def _custom_parser(raw_doc, rule_selector: str):
     # custom path applies getText with empty title here AND again in the
     # orchestrator — double application is load-bearing (SURVEY §7)
     return get_text(joined, ""), joined
+
+
+def _article_pics(rich: str):
+    """extract_pics(parse(rich)), reading the img start tags off the token
+    stream where the tree cannot change which imgs there are or their order."""
+    low = rich.lower()
+    if "<im" not in low:  # no <img, no <image
+        return "", None, False
+    if any(tag in low for tag in _IMG_TREE_TAGS):
+        return extract_pics(parse(rich))
+    return pick_pics(img_start_tag_srcs(rich))
 
 
 def get_content(body: str, rule_selector: Optional[str], raw_doc=None):
@@ -151,8 +167,7 @@ def extract_document(
     rich, all_links = normalize_links(rich, url)
     excerpt = get_snippet(content, snippet_size)
 
-    article_doc = parse(rich)
-    image, all_images, _ = extract_pics(article_doc)
+    image, all_images, _ = _article_pics(rich)
 
     return {
         "content": content,

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from ..htmldom import find_all
 from ..htmldom.node import Node
+from ..htmldom.parser import TOK_START, _tokenize
 
 
 def extract_pics(article_root: Node):
@@ -21,8 +22,29 @@ def extract_pics(article_root: Node):
         src = img.get_attr("src")
         if src is not None:
             srcs.append(src)
+    return pick_pics(srcs)
+
+
+def pick_pics(srcs: list):
+    """(main_image, all_images, ok) from the img srcs in document order."""
     if not srcs:
         return "", None, False
     all_images = sorted(srcs)
     main_image = srcs[0]  # deterministic: first in document order
     return main_image, all_images, True
+
+
+def img_start_tag_srcs(html: str) -> list:
+    """The first src of every <img> start tag, in token order. Equal to the
+    srcs extract_pics finds in parse(html) as long as the tree builder
+    neither drops, renames nor reorders an img — the caller's job to
+    ensure. The tokenizer keeps an attribute's first occurrence, as the
+    tree does; raw-text, RCDATA and comment content yields no start tag."""
+    srcs = []
+    for kind, name, attrs, _ in _tokenize(html):
+        if kind == TOK_START and name == "img":
+            for k, v in attrs:
+                if k == "src":
+                    srcs.append(v)
+                    break
+    return srcs

@@ -27,13 +27,16 @@ from ..htmldom import (
     siblings_then_self,
 )
 from ..htmldom.gostr import utf8_len
-from ..htmldom.query import count_descendant_tags, link_and_text_bytes
+from ..htmldom.query import descendants, link_and_text_bytes
 from ..htmldom.node import Node
 
 f32 = np.float32
 
-# regex set (readability.go:19-34); Go (?i) → re.I, (?s) → re.S
-RE_REPLACE_BRS = re.compile(r"(<br[^>]*>[ \n\r\t]*){2,}", re.I)
+# regex set (readability.go:19-34); Go (?i) → re.I, (?s) → re.S.
+# RE_REPLACE_BRS is Go's `(<br[^>]*>[ \n\r\t]*){2,}` unrolled so that every
+# match attempt starts at a literal "<br": the same language and the same
+# greedy leftmost matches, without the group retry at every position.
+RE_REPLACE_BRS = re.compile(r"<br[^>]*>[ \n\r\t]*(?:<br[^>]*>[ \n\r\t]*)+", re.I)
 RE_REPLACE_FONTS = re.compile(r"<(\/?)\s*font[^>]*?>", re.I)
 RE_BLACKLIST = re.compile(r"popupbody", re.I)
 RE_OK_MAYBE = re.compile(r"and|article|body|column|main|shadow", re.I)
@@ -58,7 +61,7 @@ _REPLACE_WITH_WHITESPACE = frozenset(
 )
 
 _SELECTOR_PTD = "p,td"
-_SELECTOR_CLEAN = "table,ul,div"
+_CLEAN_TAGS = frozenset(("table", "ul", "div"))
 
 
 def _blen(s: str) -> int:
@@ -224,20 +227,22 @@ class Document:
             if nd.data in ("html", "body"):
                 continue
             s = nd.attr_or("class", "") + nd.attr_or("id", "")
+            if not s:
+                continue  # no pattern matches ""
             if RE_BLACKLIST.search(s) or (RE_UNLIKELY.search(s) and not RE_OK_MAYBE.search(s)):
                 self.stats["candidates_rejected"] += 1
                 _remove_node(nd)
 
     # R4 — transformMisusedDivsIntoParagraphs (readability.go:237-255).
-    # The reference regex-tests the SERIALIZED inner HTML for block-level open
-    # tags; equivalently (and without serializing every div): any element
-    # descendant with one of those tags, or — since raw-text children render
-    # literally — the regex matching inside script/style/etc. text. Normal text
-    # and attribute values are escaped on render ('<' → '&lt;') so they can
-    # never produce a match.
+    # The reference regex-tests the SERIALIZED inner HTML of each div (in
+    # pre-order) for block-level open tags. Renaming a div never changes the
+    # subtree of a div visited after it, so the test is evaluated for every
+    # div up front, in one pass (_divs_with_block_level).
     def _transform_misused_divs_into_paragraphs(self):
-        for nd in find_all(self.document, "div"):
-            if not _contains_block_level(nd):
+        nodes = descendants(self.document)
+        blocky = _divs_with_block_level(nodes)
+        for nd in nodes:
+            if nd.type == ELEMENT_NODE and nd.data == "div" and id(nd) not in blocky:
                 nd.data = "p"
 
     # R5 — scoreParagraphs (readability.go:257-304)
@@ -282,10 +287,7 @@ class Document:
 
     # R7 — getLinkDensity (readability.go:306-315); byte lengths, single walk
     def _get_link_density(self, nd: Node):
-        link_length, text_length = link_and_text_bytes(nd)
-        if text_length == 0:
-            return f32(0)
-        return f32(f32(link_length) / f32(text_length))
+        return _link_density(*link_and_text_bytes(nd))
 
     # R6 — classWeight (readability.go:317-347)
     def _class_weight(self, nd: Node) -> int:
@@ -340,7 +342,7 @@ class Document:
                 if _children_whitespace_only(nd):
                     _remove_node(nd)
 
-        self._clean_conditionally(body, _SELECTOR_CLEAN)
+        self._clean_conditionally(body)
 
         replace_with_whitespace = set(_REPLACE_WITH_WHITESPACE)
         whitelist = set()
@@ -375,12 +377,21 @@ class Document:
 
         return RE_NORMALIZE_WS.sub("\n", text)
 
-    # R11 — cleanConditionally (readability.go:460-525)
-    def _clean_conditionally(self, root: Node, selector: str):
+    # R11 — cleanConditionally (readability.go:460-525) over table/ul/div.
+    # The candidates lookup always misses (sanitize works on a fresh parse);
+    # kept as the reference has it. Each candidate's text, link and tag
+    # figures come from one pass over the tree (_clean_stats): the loop
+    # visits a pre-order snapshot and only removes whole subtrees, so when a
+    # candidate is reached its own subtree is as it was before the loop.
+    def _clean_conditionally(self, root: Node):
         if not self.clean_conditionally:
             return
 
-        for nd in find_all(root, selector):
+        nodes = descendants(root)
+        stats = _clean_stats(nodes)
+        for nd in nodes:
+            if nd.type != ELEMENT_NODE or nd.data not in _CLEAN_TAGS:
+                continue
             weight = f32(self._class_weight(nd))
             c = self.candidates.get(id(nd))
             content_score = c.score if c is not None and c.node is nd else f32(0)
@@ -390,31 +401,27 @@ class Document:
                 _remove_node(nd)
                 continue
 
-            text = node_text(nd)
-            if text.count(",") < 10:
-                counts = count_descendant_tags(
-                    nd, ("p", "img", "li", "a", "embed", "input")
-                )
-                counts["li"] -= 100
-                content_length = _trim_bytes_len(text)
-                link_density = self._get_link_density(nd)
+            (text_bytes, commas, link_bytes, lead, trail,
+             p, img, li, embed, input_) = stats[id(nd)]
+            if commas < 10:
+                li -= 100
+                content_length = text_bytes - lead - trail if lead < text_bytes else 0
+                link_density = _link_density(link_bytes, text_bytes)
                 remove = False
 
-                if counts["img"] > counts["p"]:
+                if img > p:
                     remove = True
-                elif counts["li"] > counts["p"] and nd.data not in ("ul", "ol"):
+                elif li > p and nd.data not in ("ul", "ol"):
                     remove = True
-                elif counts["input"] > counts["p"] / 3.0:
+                elif input_ > p / 3.0:
                     remove = True
-                elif content_length < self.min_text_length and (
-                    counts["img"] == 0 or counts["img"] > 2
-                ):
+                elif content_length < self.min_text_length and (img == 0 or img > 2):
                     remove = True
                 elif weight < f32(25) and link_density > f32(0.2):
                     remove = True
                 elif weight >= f32(25) and link_density > f32(0.5):
                     remove = True
-                elif (counts["embed"] == 1 and content_length < 75) or counts["embed"] > 1:
+                elif (embed == 1 and content_length < 75) or embed > 1:
                     remove = True
 
                 if remove:
@@ -438,28 +445,95 @@ _RAW_TEXT_TAGS = frozenset(
 )
 
 
-def _contains_block_level(root: Node) -> bool:
-    """Whether RE_DIV_TO_P would match the rendered inner HTML of root."""
-    node = root.first_child
-    while node is not None and node is not root:
-        if node.type == ELEMENT_NODE:
-            if node.data in _BLOCK_LEVEL:
-                return True
-            if node.data in _RAW_TEXT_TAGS:
-                c = node.first_child
-                while c is not None:
-                    if c.type == TEXT_NODE and RE_DIV_TO_P.search(c.data):
-                        return True
-                    c = c.next_sibling
-        if node.first_child is not None:
-            node = node.first_child
+def _divs_with_block_level(nodes: list) -> set:
+    """ids of the divs among `nodes` (a pre-order list of a whole tree)
+    whose rendered inner HTML RE_DIV_TO_P matches: a descendant element
+    with a block-level tag, or — raw-text children render literally — a
+    match inside the text of a script/style/... descendant. Other text and
+    attribute values render escaped ('<' → '&lt;'), so they never match.
+    One post-order pass: a node marks its parent when it is such an
+    element, such a text, or already marked."""
+    marked = set()
+    for nd in reversed(nodes):  # every node after all of its descendants
+        parent = nd.parent
+        if parent is None:
             continue
-        while node is not None and node is not root and node.next_sibling is None:
-            node = node.parent
-        if node is None or node is root:
-            break
-        node = node.next_sibling
-    return False
+        if id(nd) in marked:
+            marked.add(id(parent))
+        elif nd.type == ELEMENT_NODE:
+            if nd.data in _BLOCK_LEVEL:
+                marked.add(id(parent))
+        elif (
+            nd.type == TEXT_NODE
+            and parent.type == ELEMENT_NODE
+            and parent.data in _RAW_TEXT_TAGS
+            and RE_DIV_TO_P.search(nd.data)
+        ):
+            marked.add(id(parent))
+    return marked
+
+
+_COUNTED = {"p": 5, "img": 6, "li": 7, "embed": 8, "input": 9}  # _clean_stats slots
+
+
+def _clean_stats(nodes: list) -> dict:
+    """For every table/ul/div among `nodes` (a pre-order list of a subtree),
+    id -> [text bytes, commas, link bytes, leading-space bytes, trailing-space
+    bytes, p, img, li, embed, input]: what node_text, its trimmed length,
+    link_and_text_bytes and Find(tag).Length() give, summed bottom-up in one
+    pass. Spaces are str.strip()'s; a whitespace-only text has leading ==
+    trailing == text bytes. Text-node children are not entered: a fresh
+    parse has none."""
+    acc: dict = {}  # id -> figures summed over the children seen so far
+    out: dict = {}
+    for nd in reversed(nodes):  # every node after all of its descendants
+        t = nd.type
+        if t == TEXT_NODE:
+            data = nd.data
+            b = utf8_len(data)
+            rest = data.lstrip()
+            if not rest:
+                rec = [b, 0, 0, b, b, 0, 0, 0, 0, 0]
+            else:
+                lead = utf8_len(data[: len(data) - len(rest)])
+                trail = utf8_len(rest[len(rest.rstrip()):])
+                rec = [b, data.count(","), 0, lead, trail, 0, 0, 0, 0, 0]
+        elif t == ELEMENT_NODE:
+            rec = acc.pop(id(nd), None) or [0] * 10
+            tag = nd.data
+            if tag in _CLEAN_TAGS:
+                out[id(nd)] = list(rec)
+            if tag == "a":
+                rec[2] += rec[0]  # its text is link text once more
+            elif tag in _COUNTED:
+                rec[_COUNTED[tag]] += 1
+        else:
+            continue
+        parent = nd.parent
+        if parent is None:
+            continue
+        # children arrive last first: prepend rec to what the parent has
+        sib = acc.get(id(parent))
+        if sib is None:
+            acc[id(parent)] = rec
+            continue
+        if sib[3] == sib[0]:  # the later siblings are all whitespace
+            sib[4] += rec[4]
+        if rec[3] < rec[0]:
+            sib[3] = rec[3]
+        else:
+            sib[3] += rec[0]
+        sib[0] += rec[0]
+        for i in (1, 2, 5, 6, 7, 8, 9):
+            sib[i] += rec[i]
+    return out
+
+
+
+def _link_density(link_length: int, text_length: int):
+    if text_length == 0:
+        return f32(0)
+    return f32(f32(link_length) / f32(text_length))
 
 
 def _children_whitespace_only(nd: Node) -> bool:

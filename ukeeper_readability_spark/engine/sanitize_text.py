@@ -23,9 +23,36 @@ from ..htmldom.node import Node
 DEFAULT_CONTENT_TYPE = "text/html"  # extractor/text.go:17
 DEFAULT_ENCODING = "utf-8"  # extractor/text.go:19
 
-# Go regexp classes are ASCII: \s = [\t\n\f\r ], \D = [^0-9], \S = [^\t\n\f\r ]
-_RE_SPACES = re.compile(r"[\t\n\f\r ]+")  # extractor/readability.go:89 reSpaces
-_RE_DOT = re.compile(r"[^0-9](\.)[^\t\n\f\r ]")  # extractor/readability.go:90 reDot
+# Go regexp classes are ASCII: \s = [\t\n\f\r ], \D = [^0-9], \S = [^\t\n\f\r ].
+# reSpaces `\s+` and reDot `\D(\.)\S` (extractor/readability.go:89-90) run as
+# _collapse_spaces and _dot_matches: the same results, without a regex that
+# has to be tried at every position of the text.
+_SPACE_RUN = re.compile("  +")
+_GO_DIGITS = frozenset("0123456789")
+_GO_SPACES = frozenset("\t\n\f\r ")
+
+
+def _collapse_spaces(s: str) -> str:
+    """reSpaces.ReplaceAllString(s, " "): map the class to ' ', then collapse
+    the runs of ' ' (single spaces, the common case, are left untouched)."""
+    s = s.replace("\t", " ").replace("\n", " ").replace("\f", " ").replace("\r", " ")
+    return _SPACE_RUN.sub(" ", s)
+
+
+def _dot_matches(s: str) -> list:
+    """reDot.FindAllString(s, -1): the leftmost non-overlapping three-char
+    matches, found from the dots (str.find) instead of from every char."""
+    out = []
+    n = len(s)
+    i = s.find(".", 1)
+    while i != -1 and i + 1 < n:
+        if s[i - 1] not in _GO_DIGITS and s[i + 1] not in _GO_SPACES:
+            out.append(s[i - 1 : i + 2])
+            i = s.find(".", i + 3)  # the next match starts after this one ends
+        else:
+            i = s.find(".", i + 1)
+    return out
+
 
 # C-level equivalent of sanitize.go:121-135's char walk: drop a '<'-to-'>'
 # span (the '>' optional — an unterminated '<' swallows to EOS, exactly like
@@ -90,10 +117,9 @@ def get_text(content: str, title: str) -> str:
         clean = clean.replace(title, "", 1)
     clean = clean.replace("\t", " ")
     clean = clean.strip()
-    clean = _RE_SPACES.sub(" ", clean)
+    clean = _collapse_spaces(clean)
     # fix joined sentences (first sentence.Second -> first sentence. Second)
-    for m in _RE_DOT.finditer(clean):
-        src = m.group(0)
+    for src in _dot_matches(clean):
         dst = src.replace(".", ". ", 1)
         clean = clean.replace(src, dst, 1)
     return clean

@@ -23,6 +23,8 @@ not hit these.
 from __future__ import annotations
 
 import html as _htmlmod
+from collections import defaultdict
+
 from .node import (
     COMMENT_NODE,
     DOCTYPE_NODE,
@@ -266,9 +268,9 @@ def _scan_tag(s: str, i: int, n: int):
     name = s[start:i].lower()
     if i < n and s[i] == ">":  # fast path: attribute-less tag
         return name, [], False, i + 1
-    attrs = []
-    seen = set()
+    attrs = {}  # first occurrence of each name wins, in order
     self_closing = False
+    match = _ATTR_FULL_RE.match
     while i < n:
         ch = s[i]
         if ch == ">":
@@ -281,19 +283,18 @@ def _scan_tag(s: str, i: int, n: int):
                 break
             i += 1
             continue
-        m = _ATTR_FULL_RE.match(s, i)
+        m = match(s, i)
         if m is None or m.end() == i:
             # whitespace-only run before '>' or a stray '=' — advance one
             i += 1
             continue
-        aname = m.group(1).lower()
-        g2, g3, g4 = m.group(2), m.group(3), m.group(4)
-        val = g2 if g2 is not None else (g3 if g3 is not None else (g4 or ""))
+        aname, g2, g3, g4 = m.groups()
+        aname = aname.lower()
         i = m.end()
-        if aname not in seen:
-            seen.add(aname)
-            attrs.append((aname, _unescape(val) if "&" in val else val))
-    return name, attrs, self_closing, i
+        if aname not in attrs:
+            val = g2 if g2 is not None else (g3 if g3 is not None else (g4 or ""))
+            attrs[aname] = _unescape(val) if "&" in val else val
+    return name, list(attrs.items()), self_closing, i
 
 
 # ---------------------------------------------------------------------------
@@ -302,7 +303,7 @@ def _scan_tag(s: str, i: int, n: int):
 
 
 class _TreeBuilder:
-    __slots__ = ("doc", "html", "head", "body", "stack", "phase", "afe", "_saw_foreign")
+    __slots__ = ("doc", "html", "head", "body", "stack", "open", "phase", "afe")
 
     # phases
     INITIAL = 0
@@ -316,13 +317,13 @@ class _TreeBuilder:
         self.head = None
         self.body = None
         self.stack = []  # open elements
+        # tag name -> how many open elements carry it: a scope, table or
+        # foreign-content query whose targets are not open answers without
+        # walking the stack, so deep nesting parses in linear time
+        self.open = defaultdict(int)
         self.phase = self.INITIAL
         # active formatting elements: [node, name, attrs] entries or None markers
         self.afe = []
-        # monotone flag: only set when an <svg>/<math> root is pushed; lets
-        # _foreign_context skip the per-start-tag stack walk for the vast
-        # majority of documents (measured ~9% of parse time)
-        self._saw_foreign = False
 
     # -- skeleton ----------------------------------------------------------
     def _ensure_html(self, attrs=None):
@@ -342,9 +343,44 @@ class _TreeBuilder:
             self.body = Node(ELEMENT_NODE, "body", list(attrs) if attrs else [])
             self.html.append_child(self.body)
             self.stack = [self.body]
+            self.open = defaultdict(int, body=1)
         self.phase = self.IN_BODY
 
     # -- helpers -------------------------------------------------------------
+    # every change to the open-element stack updates `open` with it: through
+    # _push/_pop/_pop_to/_unstack, inline in the hottest paths
+    # (_insert_element, _generate_implied_end, _pop_until), or by swapping
+    # an entry for a same-named clone (adoption agency)
+    def _push(self, el: Node):
+        self.stack.append(el)
+        self.open[el.data] += 1
+
+    def _pop(self) -> Node:
+        nd = self.stack.pop()
+        self.open[nd.data] -= 1
+        return nd
+
+    def _pop_to(self, idx: int):
+        """Pop the open elements from stack[idx] up."""
+        stack, o = self.stack, self.open
+        while len(stack) > idx:
+            o[stack.pop().data] -= 1
+
+    def _unstack(self, nd: Node, idx=None):
+        """Take one open element out of the stack (at idx when known)."""
+        if idx is None:
+            self.stack.remove(nd)
+        else:
+            del self.stack[idx]
+        self.open[nd.data] -= 1
+
+    def _any_open(self, names) -> bool:
+        o = self.open
+        for name in names:
+            if o[name]:
+                return True
+        return False
+
     def _current(self) -> Node:
         return self.stack[-1] if self.stack else self.body
 
@@ -371,6 +407,8 @@ class _TreeBuilder:
         self._add_text(cur, text)
 
     def _foster_target(self):
+        if not self.open["table"]:
+            return self._current(), None
         for idx in range(len(self.stack) - 1, -1, -1):
             if self.stack[idx].data == "table":
                 table = self.stack[idx]
@@ -381,7 +419,14 @@ class _TreeBuilder:
 
     def _in_scope(self, target, extra_boundary=()):
         """True if an element named in `target` (str or set) is in scope."""
-        names = (target,) if isinstance(target, str) else target
+        if isinstance(target, str):
+            if not self.open[target]:
+                return False
+            names = (target,)
+        else:
+            if not self._any_open(target):
+                return False
+            names = target
         for nd in reversed(self.stack):
             if nd.data in names:
                 return True
@@ -390,18 +435,22 @@ class _TreeBuilder:
         return False
 
     def _generate_implied_end(self, except_tag=None):
-        while self.stack:
-            d = self.stack[-1].data
+        stack = self.stack
+        while stack:
+            d = stack[-1].data
             if d in IMPLIED_END and d != except_tag:
-                self.stack.pop()
+                stack.pop()
+                self.open[d] -= 1
             else:
                 return
 
     def _pop_until(self, names):
         names = (names,) if isinstance(names, str) else names
-        while self.stack:
-            nd = self.stack.pop()
-            if nd.data in names:
+        stack, o = self.stack, self.open
+        while stack:
+            d = stack.pop().data
+            o[d] -= 1
+            if d in names:
                 return
 
     def _close_p(self):
@@ -419,6 +468,7 @@ class _TreeBuilder:
             cur.append_child(el)
         if push:
             self.stack.append(el)
+            self.open[name] += 1
         return el
 
     # -- active formatting elements (HTML5 §13.2.4.3, §13.2.6.4.7) ------------
@@ -457,7 +507,7 @@ class _TreeBuilder:
             node, name, attrs = afe[i]
             clone = Node(ELEMENT_NODE, name, list(attrs))
             self._current().append_child(clone)
-            self.stack.append(clone)
+            self._push(clone)
             afe[i] = [clone, name, attrs]
             i += 1
 
@@ -469,7 +519,8 @@ class _TreeBuilder:
     def _foreign_context(self):
         """'svg'/'math' when the insertion point is inside foreign content
         (no intervening HTML integration point), else None."""
-        if not self._saw_foreign:
+        o = self.open
+        if not (o["svg"] or o["math"]):
             return None
         for nd in reversed(self.stack):
             dl = nd.data.lower()
@@ -496,7 +547,7 @@ class _TreeBuilder:
             and cur.data == subject
             and not any(e is not None and e[0] is cur for e in self.afe)
         ):
-            self.stack.pop()
+            self._pop()
             return
 
         for _outer in range(8):
@@ -526,7 +577,7 @@ class _TreeBuilder:
                     fb_idx = j
                     break
             if furthest is None:
-                del self.stack[si:]
+                self._pop_to(si)
                 self.afe.pop(fmt_idx)
                 return
 
@@ -553,7 +604,7 @@ class _TreeBuilder:
                         bookmark -= 1
                     ni = None
                 if ni is None:
-                    self.stack.pop(node_idx)
+                    self._unstack(node, node_idx)
                     continue
                 entry_attrs = self.afe[ni][2]
                 clone = Node(ELEMENT_NODE, node.data, list(entry_attrs))
@@ -590,16 +641,19 @@ class _TreeBuilder:
                 bookmark -= 1
             self.afe.insert(bookmark, [clone, fmt_el.data, entry_attrs])
 
+            # the clone takes fmt_el's stack slot under the same name: the
+            # open counts stay as they are
             self.stack.remove(fmt_el)
             self.stack.insert(self.stack.index(furthest) + 1, clone)
 
     def _any_other_end_tag(self, name: str):
+        if not self.open[name]:
+            return
         for idx in range(len(self.stack) - 1, -1, -1):
             nd = self.stack[idx]
             if nd.data == name:
                 self._generate_implied_end(name)
-                while len(self.stack) > idx:
-                    self.stack.pop()
+                self._pop_to(idx)
                 return
             if nd.data in SPECIAL:
                 return
@@ -671,9 +725,9 @@ class _TreeBuilder:
                 el = Node(ELEMENT_NODE, name, attrs or [])
                 self.head.append_child(el)
                 if name not in VOID_ELEMENTS and name not in RAW_TEXT and name not in RCDATA and not self_closing:
-                    self.stack.append(el)
+                    self._push(el)
                 elif not self_closing and (name in RAW_TEXT or name in RCDATA):
-                    self.stack.append(el)
+                    self._push(el)
                 return
             self._ensure_body()
         elif self.phase == self.AFTER_HEAD:
@@ -682,7 +736,7 @@ class _TreeBuilder:
                 el = Node(ELEMENT_NODE, name, attrs or [])
                 self.head.append_child(el)
                 if not self_closing and (name in RAW_TEXT or name in RCDATA):
-                    self.stack.append(el)
+                    self._push(el)
                 return
             self._ensure_body(attrs if name == "body" else None)
 
@@ -693,9 +747,9 @@ class _TreeBuilder:
             if name in FOREIGN_BREAKOUT:
                 # break out: pop the foreign subtree, reprocess as HTML
                 while self.stack and self.stack[-1].data not in ("svg", "math"):
-                    self.stack.pop()
+                    self._pop()
                 if self.stack:
-                    self.stack.pop()
+                    self._pop()
                 # fall through to normal HTML handling below
             else:
                 if fctx == "svg":
@@ -705,14 +759,13 @@ class _TreeBuilder:
                 el = Node(ELEMENT_NODE, name, attrs or [])
                 self._current().append_child(el)
                 if not self_closing:  # foreign content honors self-closing
-                    self.stack.append(el)
+                    self._push(el)
                 return
 
         if name == "image":
             name = "img"
 
         if name in ("svg", "math"):
-            self._saw_foreign = True
             if self.afe:
                 self._reconstruct_afe()
             if name == "svg" and attrs:
@@ -720,7 +773,7 @@ class _TreeBuilder:
             el = Node(ELEMENT_NODE, name, attrs or [])
             self._current().append_child(el)
             if not self_closing:
-                self.stack.append(el)
+                self._push(el)
             return
 
         if name in TABLE_ONLY_TAGS:
@@ -732,7 +785,7 @@ class _TreeBuilder:
 
         if name in HEADINGS:
             if self.stack and self.stack[-1].data in HEADINGS:
-                self.stack.pop()
+                self._pop()
         elif name == "li":
             self._close_list_item(("li",))
             self._close_p()
@@ -750,17 +803,17 @@ class _TreeBuilder:
                     if e in self.afe:
                         self.afe.remove(e)
                     if e[0] in self.stack:
-                        self.stack.remove(e[0])
+                        self._unstack(e[0])
                     break
         elif name == "nobr":
             if self._in_scope("nobr"):
                 self._adoption_agency("nobr")
         elif name == "option":
             if self.stack and self.stack[-1].data == "option":
-                self.stack.pop()
+                self._pop()
         elif name == "optgroup":
             while self.stack and self.stack[-1].data in ("option", "optgroup"):
-                self.stack.pop()
+                self._pop()
 
         if self.afe and name not in NO_RECONSTRUCT:
             self._reconstruct_afe()
@@ -779,7 +832,9 @@ class _TreeBuilder:
             self.afe.append(None)  # marker
 
     def _close_list_item(self, names):
-        for nd in reversed(list(self.stack)):
+        if not self._any_open(names):
+            return
+        for nd in reversed(self.stack):
             if nd.data in names:
                 self._generate_implied_end(nd.data)
                 self._pop_until(nd.data)
@@ -798,6 +853,8 @@ class _TreeBuilder:
 
     # -- table-context start tags ---------------------------------------------
     def _table_nearby(self):
+        if not self.open["table"]:
+            return None
         for nd in reversed(self.stack):
             if nd.data == "table":
                 return nd
@@ -805,7 +862,7 @@ class _TreeBuilder:
 
     def _clear_back_to(self, names):
         while self.stack and self.stack[-1].data not in names and self.stack[-1].data != "html":
-            self.stack.pop()
+            self._pop()
 
     def _table_start(self, name, attrs):
         table = self._table_nearby()
@@ -845,12 +902,13 @@ class _TreeBuilder:
             if name == "head":
                 self.phase = self.AFTER_HEAD
                 self.stack = []
+                self.open = defaultdict(int)
                 return
             if name in ("body", "html"):
                 self._ensure_body()
                 return
             if self.stack and self.stack[-1].data == name:
-                self.stack.pop()
+                self._pop()
             return
         if self.phase in (self.INITIAL, self.AFTER_HEAD):
             if name in ("head", "body", "html", "br"):
@@ -865,7 +923,7 @@ class _TreeBuilder:
             for idx in range(len(self.stack) - 1, -1, -1):
                 nd = self.stack[idx]
                 if nd.data.lower() == name:
-                    del self.stack[idx:]
+                    self._pop_to(idx)
                     return
                 if nd.data in ("svg", "math"):
                     return

@@ -43,8 +43,8 @@ def compile_selector(sel: str):
     return group
 
 
-def _iter_descendants(root: Node):
-    """Pre-order descendants of root (excluding root)."""
+def descendants(root: Node) -> list:
+    """Pre-order descendants of root (excluding root), as a snapshot."""
     out = []
     node = root.first_child
     while node is not None and node is not root:
@@ -89,16 +89,16 @@ def find_all(root: Node, selector) -> list:
     if tags is not None:
         # fast path: plain tag-set selectors ("p,td", "div", "script,style,…")
         return [
-            n for n in _iter_descendants(root)
+            n for n in descendants(root)
             if n.type == ELEMENT_NODE and n.data in tags
         ]
     match = group.match
-    return [n for n in _iter_descendants(root) if match(n)]
+    return [n for n in descendants(root) if match(n)]
 
 
 def find_elements(root: Node) -> list:
     """Find("*"): all element descendants, document order, snapshot."""
-    return [n for n in _iter_descendants(root) if n.type == ELEMENT_NODE]
+    return [n for n in descendants(root) if n.type == ELEMENT_NODE]
 
 
 def node_text(n: Node) -> str:
@@ -122,24 +122,6 @@ def node_text(n: Node) -> str:
                 c = c.next_sibling
             stack.extend(reversed(kids))
     return "".join(buf)
-
-
-def count_descendant_tags(n: Node, tags) -> dict:
-    """Count element descendants by tag in one walk (Find(tag).Length())."""
-    counts = dict.fromkeys(tags, 0)
-    walk = [n]
-    while walk:
-        nd = walk.pop()
-        c = nd.first_child
-        while c is not None:
-            if c.type == ELEMENT_NODE:
-                if c.data in counts:
-                    counts[c.data] += 1
-                walk.append(c)
-            elif c.first_child is not None:
-                walk.append(c)
-            c = c.next_sibling
-    return counts
 
 
 def link_and_text_bytes(n: Node) -> tuple:

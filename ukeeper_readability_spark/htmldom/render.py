@@ -34,6 +34,7 @@ _text_trans = str.maketrans(_ESCAPES)
 
 # x/net/html render.go childTextNodesAreLiteral tags
 _LITERAL_CHILD_TAGS = RAW_TEXT
+_NEWLINE_TAGS = frozenset(("pre", "listing", "textarea"))
 
 
 import re as _re
@@ -49,66 +50,70 @@ def escape_text(s: str) -> str:
 
 
 def render(n: Node, out: list) -> None:
-    t = n.type
-    if t == TEXT_NODE:
-        out.append(escape_text(n.data))
-        return
-    if t == DOCUMENT_NODE:
-        c = n.first_child
-        while c is not None:
-            render(c, out)
-            c = c.next_sibling
-        return
-    if t == COMMENT_NODE:
-        out.append("<!--")
-        out.append(n.data)
-        out.append("-->")
-        return
-    if t == DOCTYPE_NODE:
-        out.append("<!DOCTYPE ")
-        out.append(n.data)
-        out.append(">")
-        return
-    if t != ELEMENT_NODE:
-        return
-
-    out.append("<")
-    out.append(n.data)
-    for k, v in n.attrs:
-        out.append(" ")
-        out.append(k)
-        out.append('="')
-        out.append(escape_text(v))
-        out.append('"')
-    if n.data in VOID_ELEMENTS:
-        # x/net/html renders void elements with a trailing slash
-        out.append("/>")
-        return
-    out.append(">")
-
-    # x/net/html: re-add a leading newline that parsing would ignore
-    c = n.first_child
-    if c is not None and c.type == TEXT_NODE and c.data.startswith("\n"):
-        if n.data in ("pre", "listing", "textarea"):
-            out.append("\n")
-
-    if n.data in _LITERAL_CHILD_TAGS:
-        c = n.first_child
-        while c is not None:
-            if c.type == TEXT_NODE:
-                out.append(c.data)
+    """x/net/html Render of n and its subtree, without recursion: `open_`
+    holds (element, end tag, literal flag) for the elements whose children
+    are being written, so depth costs list entries, not stack frames.
+    Children are reached only through first_child/next_sibling (never
+    parent pointers, which the sanitize walk leaves stale)."""
+    append = out.append
+    open_: list = []
+    literal = False  # the element being written keeps text children verbatim
+    node = n
+    while True:
+        t = node.type
+        if t == TEXT_NODE:
+            append(node.data if literal else escape_text(node.data))
+        elif t == ELEMENT_NODE:
+            tag = node.data
+            append("<")
+            append(tag)
+            for k, v in node.attrs:
+                append(" ")
+                append(k)
+                append('="')
+                append(escape_text(v))
+                append('"')
+            if tag in VOID_ELEMENTS:
+                # x/net/html renders void elements with a trailing slash
+                append("/>")
             else:
-                render(c, out)
-            c = c.next_sibling
-    else:
-        c = n.first_child
-        while c is not None:
-            render(c, out)
-            c = c.next_sibling
-
-    out.append("</")
-    out.append(n.data)
-    out.append(">")
+                append(">")
+                c = node.first_child
+                if c is not None:
+                    # x/net/html: re-add a leading newline that parsing would ignore
+                    if c.type == TEXT_NODE and tag in _NEWLINE_TAGS and c.data.startswith("\n"):
+                        append("\n")
+                    open_.append((node, "</" + tag + ">", literal))
+                    literal = tag in _LITERAL_CHILD_TAGS
+                    node = c
+                    continue
+                append("</" + tag + ">")
+        elif t == DOCUMENT_NODE:
+            c = node.first_child
+            if c is not None:
+                open_.append((node, "", literal))
+                literal = False
+                node = c
+                continue
+        elif t == COMMENT_NODE:
+            append("<!--")
+            append(node.data)
+            append("-->")
+        elif t == DOCTYPE_NODE:
+            append("<!DOCTYPE ")
+            append(node.data)
+            append(">")
+        # node is written: go on with its next sibling, closing every
+        # element whose last child it was
+        while open_:
+            nxt = node.next_sibling
+            if nxt is not None:
+                node = nxt
+                break
+            node, end, literal = open_.pop()
+            append(end)
+        else:
+            return
 
 
 def outer_html(n: Node) -> str:

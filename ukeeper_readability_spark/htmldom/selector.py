@@ -382,21 +382,22 @@ class _Group:
 # --- pseudo-classes (pseudo_classes.go) ------------------------------------
 
 
-def _pc_text(n: Node, buf: list) -> None:
-    """writeNodeText (pseudo_classes.go:127-136): text nodes append data,
-    recursion only into ELEMENT children."""
-    if n.type == TEXT_NODE:
-        buf.append(n.data)
-    elif n.type == ELEMENT_NODE:
-        c = n.first_child
-        while c is not None:
-            _pc_text(c, buf)
-            c = c.next_sibling
-
-
 def _node_text(n: Node) -> str:
+    """writeNodeText (pseudo_classes.go:127-136): text nodes append data,
+    descent only into ELEMENT children (pre-order, iterative)."""
     buf: list = []
-    _pc_text(n, buf)
+    stack = [n]
+    while stack:
+        nd = stack.pop()
+        if nd.type == TEXT_NODE:
+            buf.append(nd.data)
+        elif nd.type == ELEMENT_NODE:
+            kids = []
+            c = nd.first_child
+            while c is not None:
+                kids.append(c)
+                c = c.next_sibling
+            stack.extend(reversed(kids))
     return "".join(buf)
 
 
@@ -433,11 +434,18 @@ class _RelativePseudo:
         return self._has(n)
 
     def _has(self, n: Node) -> bool:
-        c = n.first_child
-        while c is not None:
-            if self.group.match(c) or (c.type == ELEMENT_NODE and self._has(c)):
-                return True
-            c = c.next_sibling
+        """Any descendant matches, entering only ELEMENT children; an
+        explicit stack, so depth costs no recursion."""
+        match = self.group.match
+        stack = [n]
+        while stack:
+            c = stack.pop().first_child
+            while c is not None:
+                if match(c):
+                    return True
+                if c.type == ELEMENT_NODE:
+                    stack.append(c)
+                c = c.next_sibling
         return False
 
 
