@@ -3,8 +3,10 @@ straightforward computation it replaces, on seeded inputs.
 
   - RE_REPLACE_BRS (unrolled) against the reference's `(<br[^>]*>[ \\n\\r\\t]*){2,}`;
   - the token-stream image list against extract_pics(parse(rich));
-  - the one-pass clean-conditionally figures and block-level flags against
-    per-node walks (node_text, link_and_text_bytes, Find(tag).Length());
+  - the one-pass clean-conditionally figures against per-node walks
+    (node_text, link_and_text_bytes, Find(tag).Length());
+  - the block-level flags against the reference's regex over inner HTML;
+  - the sanitize walk's text spans against node_text;
   - the iterative render against a recursive one;
   - the tree builder's open-element counts against its stack;
   - engine output on the benchmark inputs against value digests.
@@ -23,13 +25,17 @@ from ukeeper_readability_spark.engine.extract import (
 )
 from ukeeper_readability_spark.engine.pics import extract_pics, img_start_tag_srcs
 from ukeeper_readability_spark.engine.readability import (
-    _BLOCK_LEVEL,
     _CLEAN_TAGS,
-    _RAW_TEXT_TAGS,
+    _REPLACE_WITH_WHITESPACE,
+    _WHITELIST_TAGS,
     RE_DIV_TO_P,
+    RE_NORMALIZE_WS,
     RE_REPLACE_BRS,
     _clean_stats,
     _divs_with_block_level,
+    _replace_node_with_children,
+    _text_spans,
+    _whitelist_walk,
 )
 from ukeeper_readability_spark.htmldom import (
     COMMENT_NODE,
@@ -37,6 +43,7 @@ from ukeeper_readability_spark.htmldom import (
     DOCUMENT_NODE,
     ELEMENT_NODE,
     TEXT_NODE,
+    Node,
     find_all,
     inner_html,
     node_text,
@@ -126,20 +133,6 @@ def _subtree_text_figures(nd):
     return [utf8_len(text.strip()), text.count(","), link, total] + counts
 
 
-def _contains_block_level_walk(root):
-    for nd in descendants(root):
-        if nd.type == ELEMENT_NODE:
-            if nd.data in _BLOCK_LEVEL:
-                return True
-            if nd.data in _RAW_TEXT_TAGS:
-                c = nd.first_child
-                while c is not None:
-                    if c.type == TEXT_NODE and RE_DIV_TO_P.search(c.data):
-                        return True
-                    c = c.next_sibling
-    return False
-
-
 def test_one_pass_subtree_figures_match_per_node_walks():
     rng = random.Random(22)
     tags = _SOUP_TAGS + ["table", "td", "tr", "ol", "blockquote", "dl"]
@@ -152,13 +145,106 @@ def test_one_pass_subtree_figures_match_per_node_walks():
             if nd.type != ELEMENT_NODE or nd.data not in _CLEAN_TAGS:
                 continue
             seen += 1
-            text_bytes, commas, link, lead, trail, *counts = stats[id(nd)]
+            text_bytes, commas, link, lead, trail, *counts = stats[nd]
             trimmed = text_bytes - lead - trail if lead < text_bytes else 0
             assert [trimmed, commas, link, text_bytes] + counts == _subtree_text_figures(nd)
-        blocky = _divs_with_block_level(nodes)
-        for div in find_all(doc, "div"):
-            assert (id(div) in blocky) == _contains_block_level_walk(div)
     assert seen > 800  # table/ul/div candidates checked
+
+
+# names the regex matches only as a prefix, raw-text elements, foreign
+# content, custom elements, and names and attribute keys holding a "<"
+_R4_TAGS = _SOUP_TAGS + [
+    "article", "aside", "abbr", "address", "area", "param", "picture", "progress",
+    "svg", "path", "polygon", "math", "xmp", "iframe", "noembed", "noframes",
+    "my-el", "x-p", "dlx", "olive", "table", "blockquote", "x<p", "q<a", "x<b",
+]
+_R4_TEXTS = _TEXTS + ["<?x <p ?>", "<!x <div>", "<!-- <ul> -->", "<?a?>", "x<", "p",
+                      "<p", "a<img", "< p", "</p x>"]
+
+
+def _r4_soup(rng, n):
+    out = []
+    for _ in range(n):
+        r = rng.random()
+        tag = rng.choice(_R4_TAGS)
+        if r < 0.15:
+            out.append("<div>")
+        elif r < 0.45:
+            key = rng.choice(["class", "id", "a<p", "b<c", "x"])
+            out.append(f"<{tag} {key}={rng.choice(['v', '<p', 'a'])}>")
+        elif r < 0.65:
+            out.append(f"</{tag}>")
+        else:
+            out.append(rng.choice(_R4_TEXTS))
+    return "".join(out)
+
+
+def test_block_level_flags_match_the_reference_regex():
+    """R4's flag is the reference's own test, RE_DIV_TO_P over the div's
+    rendered inner HTML, for every div of a tree, after removals too."""
+    rng = random.Random(26)
+    divs = flagged = 0
+    for i in range(3000):
+        doc = parse(_r4_soup(rng, rng.randrange(1, 40)))
+        if i % 2:  # removals leave adjacent text nodes behind
+            for nd in find_all(doc, "g,b,i,span"):
+                nd.parent.remove_child(nd)
+        blocky = _divs_with_block_level(descendants(doc))
+        for div in find_all(doc, "div"):
+            expected = RE_DIV_TO_P.search(inner_html(div)) is not None
+            assert (div in blocky) == expected, inner_html(div)
+            divs += 1
+            flagged += expected
+    assert flagged > 2000 and divs - flagged > 300
+    # adjacent literal texts match across their boundary
+    doc = parse("<div><xmp>x<</xmp></div>")
+    xmp = find_all(doc, "xmp")[0]
+    assert xmp.parent not in _divs_with_block_level(descendants(doc))
+    xmp.append_child(Node(TEXT_NODE, "p"))
+    assert xmp.parent in _divs_with_block_level(descendants(doc))
+
+
+def test_text_spans_match_node_text():
+    rng = random.Random(27)
+    for _ in range(1500):
+        doc = parse(_soup(rng, _SOUP_TAGS + ["dl", "dd", "ol", "h2"], rng.randrange(1, 100)))
+        joined, spans = _text_spans(doc)
+        assert joined == node_text(doc)
+        for nd in descendants(doc):
+            start, end = spans.get(nd, (0, 0))
+            assert joined[start:end] == (node_text(nd) if nd.first_child else ""), nd.data
+
+
+def _whitelist_walk_by_node_text(doc, body):
+    """The sanitize walk reading node_text at each visit, as the reference does."""
+    text = ""
+    for nd in find_all(body, "*"):
+        if text != "":
+            break
+        if nd.data in _WHITELIST_TAGS:
+            nd.attrs = []
+        elif nd.data in _REPLACE_WITH_WHITESPACE:
+            nd.data = f" {node_text(nd)} "
+            nd.type = TEXT_NODE
+            nd.first_child = None
+            nd.last_child = None
+        elif nd.parent is None:
+            text = node_text(nd)
+        else:
+            _replace_node_with_children(nd)
+    if text == "":
+        text = inner_html(doc)
+    return RE_NORMALIZE_WS.sub("\n", text)
+
+
+def test_sanitize_walk_matches_the_node_text_walk():
+    rng = random.Random(28)
+    tags = _SOUP_TAGS + ["dl", "dd", "ol", "h2", "blockquote", "center", "hr", "address"]
+    for _ in range(1500):
+        s = _soup(rng, tags, rng.randrange(1, 100))
+        ours, theirs = parse(s), parse(s)
+        assert (_whitelist_walk(ours, find_all(ours, "body")[0])
+                == _whitelist_walk_by_node_text(theirs, find_all(theirs, "body")[0])), s
 
 
 def _render_recursive(n, out):
@@ -260,6 +346,9 @@ def test_engine_output_digests_on_benchmark_inputs():
 
     rows, _ = inputs.articles(7, 480)
     assert _digest(extract_document(r[3], r[4]) for r in rows) == "25b45029f175b3c7"
+    # a rule that matches nothing: the general parser on real pages
+    misses = (extract_document(r[3], r[4], rule_selector="#nomatch") for r in rows)
+    assert _digest(misses) == "25b45029f175b3c7"
     crawl, _, _ = inputs.crawl_small(7, 1500)
     for rule, digest in ((None, "127e67e2468dd966"), ("#content p", "2f0abc1d11538288")):
         results = (

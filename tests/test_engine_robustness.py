@@ -94,6 +94,7 @@ def test_deep_nesting_parses_in_linear_time():
 HOSTILE = {
     "deep-divs": "<div>" * 5000 + "deep, text." + "</div>" * 5000,
     "deep-spans-in-p": "<p>" + "<span>" * 5000 + "hello, world. " * 20 + "</span>" * 5000 + "</p>",
+    "nested-lists": "<ul><li>" * 5000 + "deep, text." + "</li></ul>" * 5000,
     "wide-siblings": "<div>" + "<p>para, text.</p>" * 20_000 + "</div>",
     "attribute-flood": "<div " + " ".join(f"a{i}=v{i}" for i in range(10_000)) + ">text, here.</div>",
     "entity-heavy": "<p>" + "&amp;&lt;&#x41;&eacute;&nbsp;" * 40_000 + "</p>",

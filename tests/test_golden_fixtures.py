@@ -95,7 +95,7 @@ def test_apple_maps_rule_path_end_to_end():
 
 
 # a page the R1 preprocessing regexes leave unchanged (no comments, no <br>
-# runs, no <font>): on a rule miss the general parser reuses the rule's parse
+# runs, no <font>): the rule's parse and the general parser's trees agree
 CLEAN_PAGE = (
     "<html><head><title>Clean Page</title></head><body>"
     '<div class="content"><p>' + "Plain words about a clean page, again. " * 12
@@ -106,9 +106,10 @@ CLEAN_PAGE = (
 
 def test_rule_selector_miss_falls_back_to_general():
     # readability_test.go:214-219: rule matching nothing → general parser output.
-    # The clean page takes the parse-reuse branch. The commented one must not:
-    # R1's comment regex strips from the "<!--" inside the title attribute to
-    # the "-->" in the text, link included, which the rule's parse keeps.
+    # The general parser builds its trees from the preprocessed page, never
+    # from the rule's parse. On the commented page the two differ: R1's
+    # comment regex strips from the "<!--" inside the title attribute to the
+    # "-->" in the text, link included, which the rule's parse keeps.
     commented = CLEAN_PAGE.replace(
         '<a href="/more">', '<a title="<!--" href="/more">'
     ).replace('<div class="footer">', '<p>Closing words. --></p><div class="footer">')

@@ -18,7 +18,7 @@ from ..htmldom.gostr import utf8_len
 from ..htmldom.parser import parse_head
 from .links import normalize_links
 from .pics import extract_pics, img_start_tag_srcs, pick_pics
-from .readability import Document, preprocessing_is_identity
+from .readability import Document
 from .sanitize_text import (
     detect_type_charset,
     first_title_text,
@@ -36,12 +36,6 @@ _IMG_TREE_TAGS = ("<table", "<svg", "<math", "<image", "<select", "<template")
 
 class ExtractError(Exception):
     pass
-
-
-def _general_parser(body: str, preparsed=None):
-    doc = Document(body, preparsed=preparsed)
-    content, rich = doc.content_with_html()
-    return content, rich, doc.stats
 
 
 def _custom_parser(raw_doc, rule_selector: str):
@@ -78,13 +72,10 @@ def get_content(body: str, rule_selector: Optional[str], raw_doc=None):
     Returns (content, rich, meta) where meta carries per-document extraction
     metrics (rule_hit / general_parse / Document.stats counters).
 
-    raw_doc is a full parse of `body` for the rule selector (parsed here when
-    absent; unused without a rule). On a rule miss the general parser takes
-    ownership of it (and mutates it) when R1 preprocessing provably wouldn't
-    change `body`, saving a second parse — callers must not read raw_doc
-    after a rule miss.
+    raw_doc is a full parse of `body` for the rule selector, which only reads
+    it (parsed here when absent; unused without a rule). On a rule miss the
+    general parser builds its own trees from `body`.
     """
-    preparsed = None
     if rule_selector:
         if raw_doc is None:
             raw_doc = parse(body)
@@ -93,12 +84,9 @@ def get_content(body: str, rule_selector: Optional[str], raw_doc=None):
             return content, rich, {"rule_hit": 1, "general_parse": 0}
         except ExtractError:
             pass
-        if preprocessing_is_identity(body):
-            preparsed = raw_doc
-    content, rich, stats = _general_parser(body, preparsed=preparsed)
-    meta = {"rule_hit": 0, "general_parse": 1}
-    meta.update(stats)
-    return content, rich, meta
+    doc = Document(body)
+    content, rich = doc.content_with_html()
+    return content, rich, {"rule_hit": 0, "general_parse": 1, **doc.stats}
 
 
 def extract_document_bytes(
@@ -118,10 +106,7 @@ def extract_document_bytes(
     content_type, charset, text = to_utf8(
         body if body is not None else b"", header_content_type
     )
-    res = extract_document(
-        text, url, rule_selector=rule_selector, snippet_size=snippet_size,
-        header_content_type=header_content_type,
-    )
+    res = extract_document(text, url, rule_selector=rule_selector, snippet_size=snippet_size)
     res["type"] = content_type
     res["charset"] = charset
     return res
@@ -132,27 +117,20 @@ def extract_document(
     url: str,
     rule_selector: Optional[str] = None,
     snippet_size: int = DEFAULT_SNIPPET_SIZE,
-    header_content_type: Optional[str] = None,
 ) -> dict:
     """Full per-document pipeline → Response dict (extractor/readability.go:73-85)."""
     body = text if text is not None else ""
     url = url or ""
 
-    # Raw-body parse (read-only until get_content; the reference parses the
-    # same string three times — extractor/text.go:78, readability.go:135,
-    # readability.go:182):
-    #   rule present → full parse: the selector needs the body, and on a rule
-    #     miss get_content hands the tree to the general parser when R1
-    #     preprocessing is a no-op
+    # Raw-body parse (read only; the reference parses the same string three
+    # times — extractor/text.go:78, readability.go:135, readability.go:182):
+    #   rule present → full parse: the selector needs the body
     #   no rule      → head-only parse: complete for Find("head meta") and for
-    #     head titles (the general parser builds its own tree from the
+    #     head titles (the general parser builds its own trees from the
     #     preprocessed string); full-parse fallback for the title-in-body case
     raw_doc = parse(body) if rule_selector else parse_head(body)
 
-    content_type, charset = detect_type_charset(raw_doc, header_content_type)
-    # title read before get_content: the general parser may take ownership of
-    # raw_doc and mutate it; reading first yields the same value the reference
-    # gets from its own fresh parse (extractor/readability.go:135-140)
+    content_type, charset = detect_type_charset(raw_doc)
     title = first_title_text(raw_doc)
     if not title and not rule_selector and "<title" in body.lower():
         title = first_title_text(parse(body))

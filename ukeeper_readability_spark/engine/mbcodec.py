@@ -441,9 +441,6 @@ _FAMILIES = {
     "iso-2022-jp": _decode_iso2022jp,
 }
 
-GO_MB_FAMILIES = frozenset(_FAMILIES)
-
-
 def decode_mb(data: bytes, family: str) -> str:
     """Decode `data` with the Go/x-text decoder for `family` (atEOF=true)."""
     return _FAMILIES[family](data)

@@ -17,6 +17,7 @@ import re
 import numpy as np
 
 from ..htmldom import (
+    COMMENT_NODE,
     ELEMENT_NODE,
     TEXT_NODE,
     find_all,
@@ -27,8 +28,9 @@ from ..htmldom import (
     siblings_then_self,
 )
 from ..htmldom.gostr import utf8_len
-from ..htmldom.query import descendants, link_and_text_bytes
 from ..htmldom.node import Node
+from ..htmldom.parser import RAW_TEXT
+from ..htmldom.query import descendants, link_and_text_bytes
 
 f32 = np.float32
 
@@ -56,6 +58,15 @@ RE_STRIP_COMMENT = re.compile(r"<!\-{2}.+?-{2}>", re.S)
 RE_SENTENCE = re.compile(r"\.( |$)")
 RE_NORMALIZE_WS = re.compile(r"[\r\n\f]+")
 
+# RE_DIV_TO_P after its "<": it has no word boundary, so it matches every
+# element name that starts with one of its words (article, abbr, svg path...)
+_RE_DIV_TO_P_NAME = re.compile(RE_DIV_TO_P.pattern[1:], re.I)
+
+# Document options that NewDocument sets and no caller changes: RetryLength,
+# MinTextLength, WhitelistTags (RemoveEmptyNodes is always on)
+RETRY_LENGTH = 250
+MIN_TEXT_LENGTH = 25
+_WHITELIST_TAGS = frozenset(("div", "p"))
 _REPLACE_WITH_WHITESPACE = frozenset(
     "br hr h1 h2 h3 h4 h5 h6 dl dd ol li ul address blockquote center".split()
 )
@@ -64,166 +75,57 @@ _SELECTOR_PTD = "p,td"
 _CLEAN_TAGS = frozenset(("table", "ul", "div"))
 
 
-def _blen(s: str) -> int:
-    """Go len(string): UTF-8 byte length; invalid input bytes count as 1."""
-    return utf8_len(s)
-
-
-def _trim_bytes_len(s: str) -> int:
-    return _blen(s.strip())
-
-
-class Candidate:
-    __slots__ = ("node", "score")
-
-    def __init__(self, node: Node, score):
-        self.node = node
-        self.score = score  # np.float32
-
-
 class Document:
     """Port of go-readability Document (readability.go:46-145)."""
 
-    def __init__(self, input_html: str, preparsed: Node = None):
-        """`preparsed` hands over an existing full parse of input_html. Only
-        get_content passes one: the tree its rule selector missed on, when
-        preprocessing_is_identity holds (the R1 regexes — br-runs, font tags,
-        comments — cannot modify the input), so the tree IS what
-        _initialize_html would build. We take ownership (we mutate it).
-        Retries always re-parse from the original string."""
+    def __init__(self, input_html: str):
         self.input = input_html
-        self.document: Node = None  # document root
-        self.content = ""
-        self.candidates: dict = {}  # id(node) -> Candidate (node ref kept alive)
-        self.best_candidate: Candidate = None
-        self._last_article = None  # rich-HTML cache for content_with_html
-
-        # extraction metrics (north_rule: nodes scored / candidates rejected /
-        # retries), accumulated across retry rounds
+        # extraction metrics (nodes scored / candidates rejected / retries),
+        # accumulated across attempts
         self.stats = {"nodes_scored": 0, "candidates_rejected": 0, "retries_relaxed": 0}
-
         self.remove_unlikely_candidates = True
         self.weight_classes = True
         self.clean_conditionally = True
-        self.retry_length = 250
-        self.min_text_length = 25
-        self.remove_empty_nodes = True
-        self.whitelist_tags = ("div", "p")
 
-        if preparsed is not None:
-            self.document = preparsed
-        else:
-            self._initialize_html(input_html)
-
-    # R1 — initializeHtml (readability.go:82-105)
-    def _initialize_html(self, s: str) -> None:
-        s = RE_REPLACE_BRS.sub("</p><p>", s)
-        s = RE_REPLACE_FONTS.sub(r"<\1span>", s)
-        s = RE_STRIP_COMMENT.sub("", s)
-        self.document = parse(s)
-        # x/net/html always synthesizes a <body>, so the reference's no-body
-        # re-init (readability.go:98-101) is unreachable with a document parse;
-        # our parser matches that invariant.
-
-    # --- public API ---------------------------------------------------------
     def content_with_html(self):
-        """ContentWithHTML (readability.go:107-140).
+        """ContentWithHTML (readability.go:107-140): (text, article HTML).
 
-        The reference calls getArticle() again for the rich return value
-        (line 139); since sanitize() works on its own re-parse, self.document
-        and self.candidates are unchanged between the two calls, so the cached
-        string is byte-identical — we skip the recomputation.
+        Each attempt builds its own tree from the input. When the text is
+        shorter than RETRY_LENGTH bytes, the first flag still on is turned
+        off and the next attempt starts over; with none left the short text
+        stands. The reference calls getArticle() once more for the HTML
+        (line 139); sanitize works on its own parse, so the attempt's tree
+        and candidates are unchanged and that article is the one built here.
         """
-        if self.content == "":
-            self._prepare_candidates()
-            article = self._get_article()
-            self._last_article = article
-            article_text = self._sanitize(article)
-
-            length = _trim_bytes_len(article_text)
-            if length < self.retry_length:
-                retry = True
-                if self.remove_unlikely_candidates:
-                    self.remove_unlikely_candidates = False
-                elif self.weight_classes:
-                    self.weight_classes = False
-                elif self.clean_conditionally:
-                    self.clean_conditionally = False
-                else:
-                    self.content = article_text
-                    retry = False
-
-                if retry:
-                    self.stats["retries_relaxed"] += 1
-                    self._initialize_html(self.input)
-                    article_text, _ = self.content_with_html()
-
-            self.content = article_text
-
-        if self._last_article is None:
-            self._last_article = self._get_article()
-        return self.content, self._last_article
+        while True:
+            doc = _initialize_html(self.input)
+            candidates = self._prepare_candidates(doc)
+            article = _get_article(doc, candidates)
+            text = self._sanitize(article)
+            if utf8_len(text.strip()) >= RETRY_LENGTH:
+                return text, article
+            if self.remove_unlikely_candidates:
+                self.remove_unlikely_candidates = False
+            elif self.weight_classes:
+                self.weight_classes = False
+            elif self.clean_conditionally:
+                self.clean_conditionally = False
+            else:
+                return text, article
+            self.stats["retries_relaxed"] += 1
 
     # --- candidate preparation (readability.go:147-160) ---------------------
-    def _prepare_candidates(self):
-        for nd in find_all(self.document, "script,style,noscript"):
+    def _prepare_candidates(self, doc: Node) -> dict:
+        for nd in find_all(doc, "script,style,noscript"):
             _remove_node(nd)
         if self.remove_unlikely_candidates:
-            self._remove_unlikely_candidates()
-        self._transform_misused_divs_into_paragraphs()
-        self._score_paragraphs(self.min_text_length)
-        self._select_best_candidate()
-
-    # R8 — selectBestCandidate (readability.go:162-178); Go map iteration is
-    # random so ties there are nondeterministic; dict insertion order gives us
-    # deterministic first-seen (document-order) tie-breaking.
-    def _select_best_candidate(self):
-        best = None
-        for c in self.candidates.values():
-            if best is None or best.score < c.score:
-                best = c
-        if best is None:
-            bodies = find_all(self.document, "body")
-            body = bodies[0] if bodies else self.document
-            best = Candidate(body, f32(0))
-        self.best_candidate = best
-
-    # R9 — getArticle (readability.go:180-221)
-    def _get_article(self) -> str:
-        out = ["<div>"]
-        best = self.best_candidate
-        sibling_score_threshold = f32(max(10.0, float(best.score * f32(0.2))))
-
-        for nd in siblings_then_self(best.node):
-            append = False
-            if nd is best.node:
-                append = True
-            else:
-                c = self.candidates.get(id(nd))
-                if c is not None and c.node is nd and c.score >= sibling_score_threshold:
-                    append = True
-
-            if nd.type == ELEMENT_NODE and nd.data == "p":
-                link_density = self._get_link_density(nd)
-                content = node_text(nd)
-                content_length = _blen(content)
-                if content_length >= 80 and link_density < f32(0.25):
-                    append = True
-                elif content_length < 80 and link_density == f32(0):
-                    append = RE_SENTENCE.search(content) is not None
-
-            if append:
-                tag = "div"
-                if nd.type == ELEMENT_NODE and nd.data == "p":
-                    tag = nd.data
-                out.append(f"<{tag}>{inner_html(nd)}</{tag}>")
-
-        out.append("</div>")
-        return "".join(out)
+            self._remove_unlikely_candidates(doc)
+        _transform_misused_divs_into_paragraphs(doc)
+        return self._score_paragraphs(doc)
 
     # R3 — removeUnlikelyCandidates (readability.go:223-235)
-    def _remove_unlikely_candidates(self):
-        for nd in find_elements(self.document):
+    def _remove_unlikely_candidates(self, doc: Node):
+        for nd in find_elements(doc):
             if nd.data in ("html", "body"):
                 continue
             s = nd.attr_or("class", "") + nd.attr_or("id", "")
@@ -233,25 +135,13 @@ class Document:
                 self.stats["candidates_rejected"] += 1
                 _remove_node(nd)
 
-    # R4 — transformMisusedDivsIntoParagraphs (readability.go:237-255).
-    # The reference regex-tests the SERIALIZED inner HTML of each div (in
-    # pre-order) for block-level open tags. Renaming a div never changes the
-    # subtree of a div visited after it, so the test is evaluated for every
-    # div up front, in one pass (_divs_with_block_level).
-    def _transform_misused_divs_into_paragraphs(self):
-        nodes = descendants(self.document)
-        blocky = _divs_with_block_level(nodes)
-        for nd in nodes:
-            if nd.type == ELEMENT_NODE and nd.data == "div" and id(nd) not in blocky:
-                nd.data = "p"
-
-    # R5 — scoreParagraphs (readability.go:257-304)
-    def _score_paragraphs(self, minimum_text_length: int):
+    # R5 — scoreParagraphs (readability.go:257-304): {node: float32 score}
+    def _score_paragraphs(self, doc: Node) -> dict:
         candidates: dict = {}
-
-        for nd in find_all(self.document, _SELECTOR_PTD):
+        for nd in find_all(doc, _SELECTOR_PTD):
             text = node_text(nd).strip()
-            if _blen(text) < minimum_text_length:
+            text_len = utf8_len(text)
+            if text_len < MIN_TEXT_LENGTH:
                 continue
 
             parent = nd.parent
@@ -263,31 +153,26 @@ class Document:
                 # node terminates the chain
                 grandparent = None
 
-            if id(parent) not in candidates:
-                candidates[id(parent)] = self._score_node(parent)
-            if grandparent is not None and id(grandparent) not in candidates:
-                candidates[id(grandparent)] = self._score_node(grandparent)
+            if parent not in candidates:
+                candidates[parent] = self._score_node(parent)
+            if grandparent is not None and grandparent not in candidates:
+                candidates[grandparent] = self._score_node(grandparent)
 
             content_score = f32(1.0)
             content_score = f32(content_score + f32(text.count(",") + 1))
             # Go: math.Min(float64(len(text)/100.0), 3) — len/100.0 is INTEGER
             # division (untyped constant with int operand), see SURVEY §7
-            content_score = f32(content_score + f32(min(_blen(text) // 100, 3)))
+            content_score = f32(content_score + f32(min(text_len // 100, 3)))
 
-            candidates[id(parent)].score = f32(candidates[id(parent)].score + content_score)
+            candidates[parent] = f32(candidates[parent] + content_score)
             if grandparent is not None:
-                gp = candidates[id(grandparent)]
-                gp.score = f32(gp.score + content_score / f32(2.0))
+                candidates[grandparent] = f32(candidates[grandparent] + content_score / f32(2.0))
 
-        for cand in candidates.values():
-            cand.score = f32(cand.score * (f32(1) - self._get_link_density(cand.node)))
+        for nd, score in candidates.items():
+            candidates[nd] = f32(score * (f32(1) - _link_density(*link_and_text_bytes(nd))))
 
         self.stats["nodes_scored"] += len(candidates)
-        self.candidates = candidates
-
-    # R7 — getLinkDensity (readability.go:306-315); byte lengths, single walk
-    def _get_link_density(self, nd: Node):
-        return _link_density(*link_and_text_bytes(nd))
+        return candidates
 
     # R6 — classWeight (readability.go:317-347)
     def _class_weight(self, nd: Node) -> int:
@@ -310,7 +195,7 @@ class Document:
 
     # R6 — scoreNode (readability.go:349-360); note blockquote/form/fieldset
     # ASSIGN 3 (discarding classWeight) — reference quirk kept
-    def _score_node(self, nd: Node) -> Candidate:
+    def _score_node(self, nd: Node):
         content_score = self._class_weight(nd)
         tag = nd.data if nd.type == ELEMENT_NODE else ""
         if tag == "div":
@@ -319,7 +204,7 @@ class Document:
             content_score = 3
         elif tag == "th":
             content_score -= 5
-        return Candidate(nd, f32(content_score))
+        return f32(content_score)
 
     # R10 — sanitize (readability.go:362-458)
     def _sanitize(self, article: str) -> str:
@@ -328,81 +213,48 @@ class Document:
         body = bodies[0] if bodies else doc
 
         for header in find_all(body, "h1,h2,h3,h4,h5,h6"):
-            if self._class_weight(header) < 0 or self._get_link_density(header) > f32(0.33):
+            if (self._class_weight(header) < 0
+                    or _link_density(*link_and_text_bytes(header)) > f32(0.33)):
                 _remove_node(header)
 
         for nd in find_all(body, "input,select,textarea,button,object,iframe,embed"):
             _remove_node(nd)
 
-        if self.remove_empty_nodes:
-            for nd in find_all(body, "p"):
-                # serialized inner HTML is whitespace-only iff every child is a
-                # text node whose data is whitespace (comments/elements emit
-                # markup; escaping never changes whitespace-ness)
-                if _children_whitespace_only(nd):
-                    _remove_node(nd)
+        for nd in find_all(body, "p"):
+            # serialized inner HTML is whitespace-only iff every child is a
+            # text node whose data is whitespace (comments/elements emit
+            # markup; escaping never changes whitespace-ness)
+            if _children_whitespace_only(nd):
+                _remove_node(nd)
 
-        self._clean_conditionally(body)
+        if self.clean_conditionally:
+            self._clean_conditionally(body)
 
-        replace_with_whitespace = set(_REPLACE_WITH_WHITESPACE)
-        whitelist = set()
-        for tag in self.whitelist_tags:
-            tag = tag.lower()
-            whitelist.add(tag)
-            replace_with_whitespace.discard(tag)
-
-        text = ""
-        for nd in find_elements(body):  # pre-order snapshot; tree mutates under us
-            if text != "":
-                break
-            if nd.type != ELEMENT_NODE:
-                continue
-            if nd.data in whitelist:
-                nd.attrs = []
-            elif nd.data in replace_with_whitespace:
-                # convert to a text node in place (readability.go:435-440);
-                # children keep stale parent pointers, exactly like the Go code
-                nd.data = f" {node_text(nd)} "
-                nd.type = TEXT_NODE
-                nd.first_child = None
-                nd.last_child = None
-            else:
-                if nd.parent is None:
-                    text = node_text(nd)
-                else:
-                    _replace_node_with_children(nd)
-
-        if text == "":
-            text = inner_html(doc)  # goquery doc.Html(): full <html>…</html>
-
-        return RE_NORMALIZE_WS.sub("\n", text)
+        return _whitelist_walk(doc, body)
 
     # R11 — cleanConditionally (readability.go:460-525) over table/ul/div.
-    # The candidates lookup always misses (sanitize works on a fresh parse);
-    # kept as the reference has it. Each candidate's text, link and tag
-    # figures come from one pass over the tree (_clean_stats): the loop
-    # visits a pre-order snapshot and only removes whole subtrees, so when a
-    # candidate is reached its own subtree is as it was before the loop.
+    # Each candidate's text, link and tag figures come from one pass over the
+    # tree (_clean_stats): the loop visits a pre-order snapshot and only
+    # removes whole subtrees, so when a candidate is reached its own subtree
+    # is as it was before the loop.
     def _clean_conditionally(self, root: Node):
-        if not self.clean_conditionally:
-            return
-
         nodes = descendants(root)
         stats = _clean_stats(nodes)
         for nd in nodes:
             if nd.type != ELEMENT_NODE or nd.data not in _CLEAN_TAGS:
                 continue
-            weight = f32(self._class_weight(nd))
-            c = self.candidates.get(id(nd))
-            content_score = c.score if c is not None and c.node is nd else f32(0)
-
-            if float(f32(weight + content_score)) < 0:
+            weight = self._class_weight(nd)
+            # the reference adds the node's candidate score to the weight; it
+            # looks the node up among the candidates, but sanitize works on a
+            # fresh parse, so the lookup always misses and the content score is
+            # always 0 (reference quirk, kept)
+            if weight < 0:
                 self.stats["candidates_rejected"] += 1
                 _remove_node(nd)
                 continue
 
             (text_bytes, commas, link_bytes, lead, trail,
-             p, img, li, embed, input_) = stats[id(nd)]
+             p, img, li, embed, input_) = stats[nd]
             if commas < 10:
                 li -= 100
                 content_length = text_bytes - lead - trail if lead < text_bytes else 0
@@ -415,11 +267,11 @@ class Document:
                     remove = True
                 elif input_ > p / 3.0:
                     remove = True
-                elif content_length < self.min_text_length and (img == 0 or img > 2):
+                elif content_length < MIN_TEXT_LENGTH and (img == 0 or img > 2):
                     remove = True
-                elif weight < f32(25) and link_density > f32(0.2):
+                elif weight < 25 and link_density > f32(0.2):
                     remove = True
-                elif weight >= f32(25) and link_density > f32(0.5):
+                elif weight >= 25 and link_density > f32(0.5):
                     remove = True
                 elif (embed == 1 and content_length < 75) or embed > 1:
                     remove = True
@@ -429,48 +281,170 @@ class Document:
                     _remove_node(nd)
 
 
-def preprocessing_is_identity(s: str) -> bool:
-    """True when R1's three regex substitutions cannot change `s` — then a
-    plain parse(s) equals _initialize_html's tree and may be shared."""
-    return (
-        RE_REPLACE_BRS.search(s) is None
-        and RE_REPLACE_FONTS.search(s) is None
-        and RE_STRIP_COMMENT.search(s) is None
-    )
+# R1 — initializeHtml (readability.go:82-105). x/net/html always synthesizes
+# a <body>, so the reference's no-body re-init (readability.go:98-101) is
+# unreachable with a document parse; our parser matches that invariant.
+def _initialize_html(s: str) -> Node:
+    s = RE_REPLACE_BRS.sub("</p><p>", s)
+    s = RE_REPLACE_FONTS.sub(r"<\1span>", s)
+    s = RE_STRIP_COMMENT.sub("", s)
+    return parse(s)
 
 
-_BLOCK_LEVEL = frozenset("a blockquote dl div img ol p pre table ul".split())
-_RAW_TEXT_TAGS = frozenset(
-    "iframe noembed noframes noscript plaintext script style xmp".split()
-)
+# R4 — transformMisusedDivsIntoParagraphs (readability.go:237-255).
+# The reference regex-tests the SERIALIZED inner HTML of each div (in
+# pre-order) for block-level open tags. Renaming a div never changes the
+# subtree of a div visited after it, so the test is evaluated for every
+# div up front, in one pass (_divs_with_block_level).
+def _transform_misused_divs_into_paragraphs(doc: Node):
+    nodes = descendants(doc)
+    blocky = _divs_with_block_level(nodes)
+    for nd in nodes:
+        if nd.type == ELEMENT_NODE and nd.data == "div" and nd not in blocky:
+            nd.data = "p"
+
+
+# R8 — selectBestCandidate (readability.go:162-178) and R9 — getArticle
+# (readability.go:180-221). Go map iteration is random, so ties there are
+# nondeterministic; max() over the dict keeps the first-seen (document
+# order) best.
+def _get_article(doc: Node, candidates: dict) -> str:
+    if candidates:
+        best = max(candidates, key=candidates.__getitem__)
+        best_score = candidates[best]
+    else:
+        bodies = find_all(doc, "body")
+        best = bodies[0] if bodies else doc
+        best_score = f32(0)
+    sibling_score_threshold = f32(max(10.0, float(best_score * f32(0.2))))
+
+    out = ["<div>"]
+    for nd in siblings_then_self(best):
+        if nd is best:
+            append = True
+        else:
+            score = candidates.get(nd)
+            append = score is not None and score >= sibling_score_threshold
+
+        is_p = nd.type == ELEMENT_NODE and nd.data == "p"
+        if is_p:
+            link_density = _link_density(*link_and_text_bytes(nd))
+            content = node_text(nd)
+            content_length = utf8_len(content)
+            if content_length >= 80 and link_density < f32(0.25):
+                append = True
+            elif content_length < 80 and link_density == f32(0):
+                append = RE_SENTENCE.search(content) is not None
+
+        if append:
+            tag = "p" if is_p else "div"
+            out.append(f"<{tag}>{inner_html(nd)}</{tag}>")
+
+    out.append("</div>")
+    return "".join(out)
+
+
+# The end of sanitize (readability.go:425-455) over a pre-order snapshot of
+# `body`: whitelisted elements lose their attributes, REPLACE_WITH_WHITESPACE
+# elements become text nodes holding their text, the rest are replaced by
+# their children. The walk only renames, empties or splices out nodes it has
+# already visited, so each node's text when it is reached is its text before
+# the walk, read off one pre-order pass (_text_spans).
+def _whitelist_walk(doc: Node, body: Node) -> str:
+    joined, spans = _text_spans(body)
+    text = ""
+    for nd in find_elements(body):
+        if text != "":
+            break
+        if nd.data in _WHITELIST_TAGS:
+            nd.attrs = []
+        elif nd.data in _REPLACE_WITH_WHITESPACE:
+            # convert to a text node in place (readability.go:435-440);
+            # children keep stale parent pointers, exactly like the Go code
+            start, end = spans.get(nd, (0, 0))
+            nd.data = f" {joined[start:end]} "
+            nd.type = TEXT_NODE
+            nd.first_child = None
+            nd.last_child = None
+        elif nd.parent is None:
+            start, end = spans.get(nd, (0, 0))
+            text = joined[start:end]
+        else:
+            _replace_node_with_children(nd)
+
+    if text == "":
+        text = inner_html(doc)  # goquery doc.Html(): full <html>…</html>
+
+    return RE_NORMALIZE_WS.sub("\n", text)
+
+
+def _text_spans(root: Node):
+    """node_text of every node under `root` from one pre-order walk: the
+    joined text of the subtree and {node: (start, end)} of each node with
+    children in it (a childless element's text is empty)."""
+    pieces = []
+    spans = {}
+    open_ = []  # (node, start) for the nodes whose children are being walked
+    offset = 0
+    nd = root.first_child
+    while nd is not None:
+        start = offset
+        if nd.type == TEXT_NODE:
+            pieces.append(nd.data)
+            offset += len(nd.data)
+        if nd.first_child is not None:
+            open_.append((nd, start))
+            nd = nd.first_child
+            continue
+        while nd.next_sibling is None and open_:
+            nd, start = open_.pop()
+            spans[nd] = (start, offset)
+        nd = nd.next_sibling
+    return "".join(pieces), spans
 
 
 def _divs_with_block_level(nodes: list) -> set:
-    """ids of the divs among `nodes` (a pre-order list of a whole tree)
-    whose rendered inner HTML RE_DIV_TO_P matches: a descendant element
-    with a block-level tag, or — raw-text children render literally — a
-    match inside the text of a script/style/... descendant. Other text and
-    attribute values render escaped ('<' → '&lt;'), so they never match.
-    One post-order pass: a node marks its parent when it is such an
-    element, such a text, or already marked."""
+    """The divs among `nodes` (a pre-order list of a whole tree) whose
+    rendered inner HTML RE_DIV_TO_P matches. One post-order pass: a node
+    marks its parent when what it writes itself matches
+    (_renders_div_to_p) or when it is already marked."""
     marked = set()
     for nd in reversed(nodes):  # every node after all of its descendants
         parent = nd.parent
-        if parent is None:
-            continue
-        if id(nd) in marked:
-            marked.add(id(parent))
-        elif nd.type == ELEMENT_NODE:
-            if nd.data in _BLOCK_LEVEL:
-                marked.add(id(parent))
-        elif (
-            nd.type == TEXT_NODE
-            and parent.type == ELEMENT_NODE
-            and parent.data in _RAW_TEXT_TAGS
-            and RE_DIV_TO_P.search(nd.data)
+        if parent is not None and (
+            nd in marked or (nd.type != TEXT_NODE and _renders_div_to_p(nd))
         ):
-            marked.add(id(parent))
+            marked.add(parent)
     return marked
+
+
+def _renders_div_to_p(nd: Node) -> bool:
+    """RE_DIV_TO_P matches what the render of `nd` writes besides its
+    element children. Render writes "<" before an element's name and the
+    name, attribute keys, comment data and the text children of a raw-text
+    element as they are; other text and attribute values are escaped
+    ('<' → '&lt;') and cannot match. A text node writes nothing of its own
+    that can match."""
+    if nd.type == COMMENT_NODE:
+        return RE_DIV_TO_P.search(nd.data) is not None
+    if nd.type != ELEMENT_NODE:
+        return False
+    tag = nd.data
+    if _RE_DIV_TO_P_NAME.match(tag) or ("<" in tag and RE_DIV_TO_P.search(tag)):
+        return True
+    for key, _ in nd.attrs:
+        if "<" in key and RE_DIV_TO_P.search(key):
+            return True
+    if tag in RAW_TEXT:
+        # adjacent text children are written as one literal string; any
+        # other child starts with "<" and is tested on its own
+        literal = []
+        c = nd.first_child
+        while c is not None:
+            literal.append(c.data if c.type == TEXT_NODE else " ")
+            c = c.next_sibling
+        return RE_DIV_TO_P.search("".join(literal)) is not None
+    return False
 
 
 _COUNTED = {"p": 5, "img": 6, "li": 7, "embed": 8, "input": 9}  # _clean_stats slots
@@ -478,13 +452,13 @@ _COUNTED = {"p": 5, "img": 6, "li": 7, "embed": 8, "input": 9}  # _clean_stats s
 
 def _clean_stats(nodes: list) -> dict:
     """For every table/ul/div among `nodes` (a pre-order list of a subtree),
-    id -> [text bytes, commas, link bytes, leading-space bytes, trailing-space
-    bytes, p, img, li, embed, input]: what node_text, its trimmed length,
-    link_and_text_bytes and Find(tag).Length() give, summed bottom-up in one
-    pass. Spaces are str.strip()'s; a whitespace-only text has leading ==
-    trailing == text bytes. Text-node children are not entered: a fresh
-    parse has none."""
-    acc: dict = {}  # id -> figures summed over the children seen so far
+    node -> [text bytes, commas, link bytes, leading-space bytes,
+    trailing-space bytes, p, img, li, embed, input]: what node_text, its
+    trimmed length, link_and_text_bytes and Find(tag).Length() give, summed
+    bottom-up in one pass. Spaces are str.strip()'s; a whitespace-only text
+    has leading == trailing == text bytes. Text-node children are not
+    entered: a fresh parse has none."""
+    acc: dict = {}  # node -> figures summed over the children seen so far
     out: dict = {}
     for nd in reversed(nodes):  # every node after all of its descendants
         t = nd.type
@@ -499,10 +473,10 @@ def _clean_stats(nodes: list) -> dict:
                 trail = utf8_len(rest[len(rest.rstrip()):])
                 rec = [b, data.count(","), 0, lead, trail, 0, 0, 0, 0, 0]
         elif t == ELEMENT_NODE:
-            rec = acc.pop(id(nd), None) or [0] * 10
+            rec = acc.pop(nd, None) or [0] * 10
             tag = nd.data
             if tag in _CLEAN_TAGS:
-                out[id(nd)] = list(rec)
+                out[nd] = list(rec)
             if tag == "a":
                 rec[2] += rec[0]  # its text is link text once more
             elif tag in _COUNTED:
@@ -513,9 +487,9 @@ def _clean_stats(nodes: list) -> dict:
         if parent is None:
             continue
         # children arrive last first: prepend rec to what the parent has
-        sib = acc.get(id(parent))
+        sib = acc.get(parent)
         if sib is None:
-            acc[id(parent)] = rec
+            acc[parent] = rec
             continue
         if sib[3] == sib[0]:  # the later siblings are all whitespace
             sib[4] += rec[4]
@@ -529,7 +503,7 @@ def _clean_stats(nodes: list) -> dict:
     return out
 
 
-
+# R7 — getLinkDensity (readability.go:306-315) over byte lengths
 def _link_density(link_length: int, text_length: int):
     if text_length == 0:
         return f32(0)

@@ -69,8 +69,6 @@ HEADINGS = frozenset(("h1", "h2", "h3", "h4", "h5", "h6"))
 # active formatting elements (HTML5 §13.2.4.3) — misnesting of these runs the
 # adoption agency algorithm, like x/net/html
 FORMATTING = frozenset("a b big code em font i nobr s small strike strong tt u".split())
-# markers scope formatting reconstruction
-AFE_MARKER_TAGS = frozenset(("applet", "marquee", "object", "template"))
 # foreign content (SVG/MathML, HTML5 §13.2.6.5): inside <svg>/<math> the
 # self-closing flag is honored for every tag, SVG names are case-adjusted, and
 # certain HTML tags break out of the foreign subtree
@@ -153,7 +151,6 @@ TOK_END = 2
 TOK_COMMENT = 3
 TOK_DOCTYPE = 4
 
-_NAME_END = frozenset(" \t\n\f/>")
 # a comment ends at "-->" or "--!>" (HTML5 comment-end-bang state)
 _COMMENT_END_RE = _re.compile(r"--!?>")
 _unescape = _htmlmod.unescape

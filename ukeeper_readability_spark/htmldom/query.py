@@ -22,11 +22,13 @@ from .selector import SelectorError, _Group, _NeverMatch, _TagSel, parse_group
 
 _NEVER = _Group([_NeverMatch()])
 
-_SELECTOR_CACHE: dict = {}
+_SELECTOR_CACHE: dict = {}  # selector text -> (group, tag set or None)
 
 
-def compile_selector(sel: str):
-    """Compile a selector group (memoized).
+def _compiled(sel: str):
+    """(group, tags) for a selector text (memoized). `tags` is the set of
+    tag names when every member of the group is a plain tag selector
+    ("p,td", "div", "script,style,…"), else None.
 
     Invalid selectors compile to a never-matching group — goquery
     compileMatcher semantics (type.go:166-176), not an exception.
@@ -38,9 +40,19 @@ def compile_selector(sel: str):
         group = parse_group(sel)
     except SelectorError:
         group = _NEVER
+    tags = None
+    if all(type(s) is _TagSel for s in group.sels):
+        tags = {s.tag for s in group.sels}
+    cached = (group, tags)
     if len(_SELECTOR_CACHE) < 4096:
-        _SELECTOR_CACHE[sel] = group
-    return group
+        _SELECTOR_CACHE[sel] = cached
+    return cached
+
+
+def compile_selector(sel: str):
+    """Compile a selector group (memoized); an invalid selector compiles
+    to a group that matches nothing."""
+    return _compiled(sel)[0]
 
 
 def descendants(root: Node) -> list:
@@ -60,32 +72,12 @@ def descendants(root: Node) -> list:
     return out
 
 
-_TAG_ONLY_CACHE: dict = {}
-
-
-def _tag_only_set(group, key):
-    """If every group member is a plain tag selector, return the tag set."""
-    if key in _TAG_ONLY_CACHE:
-        return _TAG_ONLY_CACHE[key]
-    tags = set()
-    for sel in group.sels:
-        if type(sel) is not _TagSel:
-            tags = None
-            break
-        tags.add(sel.tag)
-    if len(_TAG_ONLY_CACHE) < 4096:
-        _TAG_ONLY_CACHE[key] = tags
-    return tags
-
-
 def find_all(root: Node, selector) -> list:
     """goquery Find(): matching element descendants, document order, snapshot."""
     if isinstance(selector, str):
-        group = compile_selector(selector)
-        tags = _tag_only_set(group, selector)
+        group, tags = _compiled(selector)
     else:
-        group = selector
-        tags = None
+        group, tags = selector, None
     if tags is not None:
         # fast path: plain tag-set selectors ("p,td", "div", "script,style,…")
         return [

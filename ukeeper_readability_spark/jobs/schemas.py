@@ -68,8 +68,6 @@ EXTRACTED_FIELDS = [
     StructField("routed_cloudflare", BooleanType()),
 ]
 
-EXTRACTED_SCHEMA = StructType(EXTRACTED_FIELDS)
-
 # per-row metric columns appended by the extraction UDF; aggregated per
 # partition before the sink (FIXTURES.md §4)
 METRIC_FIELDS = [

@@ -38,7 +38,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -47,15 +46,6 @@ from pyspark.sql.types import (
 )
 
 from .sqltext import ident, strings
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),  # image | audio | video
-        StructField("payload", BinaryType()),
-        StructField("mime", StringType()),
-    ]
-)
 
 MEDIA_FEATURES_SCHEMA = StructType(
     [
