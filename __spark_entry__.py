@@ -365,9 +365,7 @@ def _q_ann_brute(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding", "label"
     )
-    return cosine_topk_bruteforce(
-        emb, queries, k=5, query_id_col="query_id"
-    )
+    return cosine_topk_bruteforce(emb, queries, k=5)
 
 
 def _q_ann_ivf(spark, sf_dir):
@@ -376,7 +374,7 @@ def _q_ann_ivf(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding", "label"
     )
-    return cosine_topk_bucketed(emb, queries, k=5, query_id_col="query_id")
+    return cosine_topk_bucketed(emb, queries, k=5)
 
 
 def _q_ann_ivf_lsh(spark, sf_dir):

@@ -1,7 +1,10 @@
 """SVG/MathML foreign content (HTML5 §13.2.6.5) — self-closing honored,
 camelCase restored, integration points and breakout tags."""
 
-from ukeeper_readability_spark.htmldom import outer_html, parse
+import pytest
+
+from ukeeper_readability_spark.htmldom import find_all, outer_html, parse
+from ukeeper_readability_spark.htmldom.node import TEXT_NODE
 
 
 def body_of(s: str) -> str:
@@ -34,6 +37,52 @@ def test_breakout_tag_exits_foreign_content():
 
 def test_math():
     assert body_of("<math><mi>x</mi><mo>+</mo></math>d") == "<math><mi>x</mi><mo>+</mo></math>d"
+
+
+def _children(nd):
+    c, out = nd.first_child, []
+    while c is not None:
+        out.append(c.data if c.type == TEXT_NODE else "<" + c.data + ">")
+        c = c.next_sibling
+    return out
+
+
+@pytest.mark.parametrize("tag", ["style", "script", "xmp", "iframe", "noembed",
+                                 "noframes", "noscript", "title", "textarea"])
+@pytest.mark.parametrize("root", ["svg", "math"])
+def test_raw_text_tags_in_foreign_content_hold_markup(root, tag):
+    """Inserted as a foreign element, a raw-text or RCDATA tag's content is
+    markup (x/net/html NextIsNotRawText after a foreign start tag)."""
+    doc = parse(f"<div><{root}><{tag}>a<g></g>b</{tag}></{root}></div>")
+    (el,) = find_all(doc, tag)
+    assert _children(el) == ["a", "<g>", "b"]
+
+
+def test_foreign_plaintext_ends_at_its_close_tag():
+    assert body_of("<svg><plaintext>a<g/>b</plaintext></svg>after") == (
+        "<svg><plaintext>a<g></g>b</plaintext></svg>after"
+    )
+
+
+@pytest.mark.parametrize("html", [
+    "<svg><foreignObject><style>a<g/>b</style></foreignObject></svg>",
+    "<svg><title><style>a<g/>b</style></title></svg>",
+    "<svg><desc><style>a<g/>b</style></desc></svg>",
+    "<math><mi><style>a<g/>b</style></mi></math>",
+    "<style>a<g/>b</style>",
+])
+def test_raw_text_stays_raw_at_integration_points_and_in_html(html):
+    (el,) = find_all(parse(html), "style")
+    assert _children(el) == ["a<g/>b"]
+
+
+def test_start_tag_scan_stays_context_free():
+    """The image token scan (like the charset prescan) runs without a tree,
+    so raw text is raw text wherever it stands; extraction sends documents
+    with <svg>/<math> to the tree instead."""
+    from ukeeper_readability_spark.engine.pics import img_start_tag_srcs
+
+    assert img_start_tag_srcs("<svg><style><img src=a></style></svg><img src=b>") == ["b"]
 
 
 def test_extraction_with_inline_svg_icons():

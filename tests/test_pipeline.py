@@ -164,7 +164,7 @@ def test_ngram_jaccard_semijoin_prunes_noncandidates(spark, docs):
 
     pairs = minhash_lsh_pairs(docs, shingle_n=3, k=8, bands=4)
     # the pre-snapshot shape ngram_jaccard builds for its shingle table
-    sh = _pruned_shingles(docs, pairs, "text", "doc_id", 3)
+    sh = _pruned_shingles(docs, pairs, 3)
     assert "LeftSemi" in sh._jdf.queryExecution().executedPlan().toString()
 
     out = ngram_jaccard(docs, pairs, shingle_n=3)

@@ -172,7 +172,7 @@ def test_kmeans_update_runs_no_fold_in_a_filter(spark, emb_path):
 
     emb = spark.read.parquet(emb_path)
     cents = [[float(c - j % 3) for j in range(8)] for c in range(3)]
-    plan = _plan(_kmeans_update(emb, cents, "embedding"))
+    plan = _plan(_kmeans_update(emb, cents))
     filters = [ln for ln in plan.splitlines() if ln.lstrip(" :+-").startswith("Filter")]
     assert filters, plan  # the inferred filter is still there, but cheap
     assert not [ln for ln in filters if "transform(" in ln or "aggregate(" in ln], plan
@@ -199,7 +199,7 @@ def test_ngram_jaccard_semi_join_not_forced_broadcast(spark):
     # pre-snapshot shape the operator builds, unhinted there too
     from ukeeper_readability_spark.pipeline.dedup import _pruned_shingles
 
-    sh = _pruned_shingles(docs, pairs, "text", "doc_id", 3)
+    sh = _pruned_shingles(docs, pairs, 3)
     sh_analyzed = sh._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in sh_analyzed, sh_analyzed
     assert "LeftSemi" in sh_analyzed, sh_analyzed
@@ -396,13 +396,14 @@ def test_sessionize_bucketed_marker_guards(spark, tmp_path):
     # different nbuckets than the files were written with → refuse
     with pytest.raises(ValueError, match="bucket layout mismatch"):
         ensure_events_bucketed(spark, ev, path, table="t_ev_guard", nbuckets=8)
-    # different sort spec → refuse
+    # files written with a different sort spec → refuse
+    marker = os.path.join(path, _BUCKET_SPEC_FILE)
+    with open(marker, "w") as f:
+        json.dump({**spec, "sort_cols": ["user_id", "ts", "value"]}, f)
     with pytest.raises(ValueError, match="bucket layout mismatch"):
-        ensure_events_bucketed(
-            spark, ev, path, table="t_ev_guard", nbuckets=4, order_tiebreak="value"
-        )
+        ensure_events_bucketed(spark, ev, path, table="t_ev_guard", nbuckets=4)
     # interrupted/foreign write (part- files, no marker) → refuse
-    os.remove(os.path.join(path, _BUCKET_SPEC_FILE))
+    os.remove(marker)
     with pytest.raises(ValueError, match="no _bucket_spec.json marker"):
         ensure_events_bucketed(spark, ev, path, table="t_ev_guard", nbuckets=4)
     spark.sql("DROP TABLE IF EXISTS t_ev_guard")

@@ -16,6 +16,7 @@ from ukeeper_readability_spark.jobs.extract_job import (
     partition_metrics,
     pending_buckets,
     run_extraction,
+    run_pipeline,
     with_host,
     write_with_manifest,
 )
@@ -130,6 +131,56 @@ def test_manifest_resume(spark, tmp_path):
     assert final.select("conv_id", "turn_idx").distinct().count() == 36
     assert pending_buckets(spark, out_dir, nb) == []
     assert spark.conf.get(mode_key) == session_mode
+
+
+def test_pending_buckets_raises_on_a_corrupt_manifest(spark, tmp_path):
+    """Only a missing manifest means nothing is done; a corrupt one must
+    raise, not report every bucket pending (a resume would then redo the
+    whole job on every restart and never finish)."""
+    out_dir = str(tmp_path / "out")
+    assert pending_buckets(spark, out_dir, 4) == [0, 1, 2, 3]
+    os.makedirs(os.path.join(out_dir, "manifest"))
+    with open(os.path.join(out_dir, "manifest", "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        pending_buckets(spark, out_dir, 4)
+
+
+def test_run_pipeline_end_to_end(spark, tmp_path):
+    """Transcripts and rules parquet in, manifest sink out: the rows read
+    back equal an in-memory extraction of the same join, and no bucket is
+    left pending."""
+    from ukeeper_readability_spark.jobs.schemas import RULES_SCHEMA
+
+    trans = fixture_transcripts_df(spark, n_turns=6)
+    rules = spark.createDataFrame(
+        [("r1", "umputun.com", None, ".content p", None, None, None, None, None, True, True)],
+        RULES_SCHEMA,
+    )
+    trans_path, rules_path = str(tmp_path / "transcripts"), str(tmp_path / "rules")
+    out_dir = str(tmp_path / "out")
+    trans.write.parquet(trans_path)
+    rules.write.parquet(rules_path)
+
+    out = run_pipeline(
+        spark, trans_path, rules_path=rules_path, output_path=out_dir, snippet_size=200
+    )
+    expected = run_extraction(join_rules(trans, rules), snippet_size=200)
+    cols = expected.columns
+
+    def key(r):
+        return (r.conv_id, r.turn_idx)
+
+    got = sorted(out.select(*cols).collect(), key=key)
+    assert len(got) == 6
+    assert [r.asDict() for r in got] == [
+        r.asDict() for r in sorted(expected.collect(), key=key)
+    ]
+    apple = [r for r in got if "apple-maps" in r.url][0]
+    assert apple.m_rule_hit == 1 and apple.routed_cloudflare is True
+    podcast = [r for r in got if "podcast-369" in r.url][0]
+    assert podcast.m_rule_hit == 0 and len(podcast.links) == 13
+    assert pending_buckets(spark, out_dir, 32) == []
 
 
 def test_extract_by_rule_preview(spark):

@@ -23,6 +23,12 @@ FIXTURE_NAMES = (
     "podcast-369",
     "poiezdka-s-apple-maps",
 )
+# the page URL each fixture was fetched from
+FIXTURE_URLS = {
+    "vsiem-mirom-dlia-obshchiei-polzy": "http://umputun.com/2015/11/26/vsiem-mirom-dlia-obshchiei-polzy/",
+    "podcast-369": "https://podcast.umputun.com/p/2015/11/22/podcast-369/",
+    "poiezdka-s-apple-maps": "http://umputun.com/2015/09/25/poiezdka-s-apple-maps/",
+}
 
 # guards making the expected extraction output exactly == documents.text:
 # no sentences/commas (reDot / comma scoring), no HTML-special chars (escaping),
@@ -281,12 +287,7 @@ def fixture_transcript_rows(n_turns: int = 60, skew_conv_every: int = 0):
     every k-th conversation gets all its rows funneled into one conv_id to
     exercise salting.
     """
-    urls = {
-        "vsiem-mirom-dlia-obshchiei-polzy": "http://umputun.com/2015/11/26/vsiem-mirom-dlia-obshchiei-polzy/",
-        "podcast-369": "https://podcast.umputun.com/p/2015/11/22/podcast-369/",
-        "poiezdka-s-apple-maps": "http://umputun.com/2015/09/25/poiezdka-s-apple-maps/",
-    }
-    fixtures = [(n, load_fixture(n), urls[n]) for n in FIXTURE_NAMES]
+    fixtures = [(n, load_fixture(n), FIXTURE_URLS[n]) for n in FIXTURE_NAMES]
     base_ts = datetime(2026, 1, 1, tzinfo=timezone.utc)
     rows = []
     for i in range(n_turns):
@@ -330,13 +331,8 @@ def fixture_transcripts_distributed(
     partitioning that the salt knob exists for."""
     from pyspark.sql import functions as F
 
-    urls = {
-        "vsiem-mirom-dlia-obshchiei-polzy": "http://umputun.com/2015/11/26/vsiem-mirom-dlia-obshchiei-polzy/",
-        "podcast-369": "https://podcast.umputun.com/p/2015/11/22/podcast-369/",
-        "poiezdka-s-apple-maps": "http://umputun.com/2015/09/25/poiezdka-s-apple-maps/",
-    }
     base = spark.createDataFrame(
-        [(i, load_fixture(n), urls[n]) for i, n in enumerate(FIXTURE_NAMES)],
+        [(i, load_fixture(n), FIXTURE_URLS[n]) for i, n in enumerate(FIXTURE_NAMES)],
         "fid int, html string, url string",
     )
     rng = spark.range(0, n_turns, 1, partitions or spark.sparkContext.defaultParallelism)

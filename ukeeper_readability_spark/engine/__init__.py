@@ -1,5 +1,5 @@
 from .extract import DEFAULT_SNIPPET_SIZE, extract_document, get_content
-from .links import normalize_links, resolve_link
+from .links import normalize_links
 from .pics import extract_pics
 from .readability import Document
 from .sanitize_text import get_snippet, get_text, sanitize_html
@@ -9,7 +9,6 @@ __all__ = [
     "extract_document",
     "get_content",
     "normalize_links",
-    "resolve_link",
     "extract_pics",
     "Document",
     "get_snippet",

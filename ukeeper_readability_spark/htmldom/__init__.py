@@ -8,7 +8,6 @@ from .node import (
 )
 from .parser import parse
 from .query import (
-    compile_selector,
     find_all,
     find_elements,
     node_text,
@@ -24,7 +23,6 @@ __all__ = [
     "TEXT_NODE",
     "Node",
     "parse",
-    "compile_selector",
     "find_all",
     "find_elements",
     "node_text",

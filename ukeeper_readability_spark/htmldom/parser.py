@@ -111,7 +111,11 @@ SVG_ATTR_ADJUST = {
 }
 
 # integration points: inside these, children parse as ordinary HTML again
-FOREIGN_INTEGRATION = frozenset(("foreignobject", "desc", "title", "annotation-xml"))
+# (svg HTML integration points, annotation-xml, and the MathML text
+# integration points mi/mo/mn/ms/mtext), so e.g. a <style> there is raw text
+FOREIGN_INTEGRATION = frozenset(
+    ("foreignobject", "desc", "title", "annotation-xml", "mi", "mo", "mn", "ms", "mtext")
+)
 
 # start tags whose "in body" handling does NOT reconstruct formatting
 NO_RECONSTRUCT = frozenset(
@@ -164,8 +168,15 @@ _RAW_CLOSE_RE = {
 }
 
 
-def _tokenize(s: str):
-    """Yield (kind, data, attrs, self_closing) tokens."""
+def _tokenize(s: str, tb: "_TreeBuilder | None" = None):
+    """Yield (kind, data, attrs, self_closing) tokens.
+
+    After a raw-text or RCDATA start tag the content up to its close tag is
+    one text token, unless the tree builder `tb` consuming the tokens has
+    just inserted that tag as a foreign (svg/math) element and set its
+    `raw_off`: the content is then markup, as after x/net/html's
+    NextIsNotRawText. Without a builder (prescan, image scans) the
+    tokenizer is context-free, like Go's prescan."""
     # input-stream preprocessing: normalize newlines (HTML5 §13.2.3.5)
     if "\r" in s:
         s = s.replace("\r\n", "\n").replace("\r", "\n")
@@ -223,6 +234,9 @@ def _tokenize(s: str):
             name, attrs, self_closing, i = _scan_tag(s, i + 1, n)
             yield (TOK_START, name, attrs, self_closing)
             if not self_closing and (name in RAW_TEXT or name in RCDATA):
+                if tb is not None and tb.raw_off:
+                    tb.raw_off = False
+                    continue
                 if name == "plaintext":
                     # HTML5: <plaintext> has no close tag; everything to EOF is text
                     raw = s[i:]
@@ -300,7 +314,7 @@ def _scan_tag(s: str, i: int, n: int):
 
 
 class _TreeBuilder:
-    __slots__ = ("doc", "html", "head", "body", "stack", "open", "phase", "afe")
+    __slots__ = ("doc", "html", "head", "body", "stack", "open", "phase", "afe", "raw_off")
 
     # phases
     INITIAL = 0
@@ -321,6 +335,9 @@ class _TreeBuilder:
         self.phase = self.INITIAL
         # active formatting elements: [node, name, attrs] entries or None markers
         self.afe = []
+        # set when a raw-text/RCDATA tag was just inserted as a foreign
+        # element; _tokenize reads and clears it (see there)
+        self.raw_off = False
 
     # -- skeleton ----------------------------------------------------------
     def _ensure_html(self, attrs=None):
@@ -757,6 +774,9 @@ class _TreeBuilder:
                 self._current().append_child(el)
                 if not self_closing:  # foreign content honors self-closing
                     self._push(el)
+                    # an svg <style> or <title> holds markup, not raw text
+                    # (x/net/html NextIsNotRawText)
+                    self.raw_off = name in RAW_TEXT or name in RCDATA
                 return
 
         if name == "image":
@@ -990,7 +1010,7 @@ class _TreeBuilder:
 def parse(s: str) -> Node:
     """Parse an HTML string into a document Node (always has html/head/body)."""
     tb = _TreeBuilder()
-    for tok in _tokenize(s):
+    for tok in _tokenize(s, tb):
         tb.process(*tok)
     tb._ensure_body()
     return tb.doc
@@ -1006,7 +1026,7 @@ def parse_head(s: str) -> Node:
     occurs in the input (title-in-body pathology).
     """
     tb = _TreeBuilder()
-    for tok in _tokenize(s):
+    for tok in _tokenize(s, tb):
         tb.process(*tok)
         if tb.phase == tb.IN_BODY:
             break

@@ -49,12 +49,6 @@ def _compiled(sel: str):
     return cached
 
 
-def compile_selector(sel: str):
-    """Compile a selector group (memoized); an invalid selector compiles
-    to a group that matches nothing."""
-    return _compiled(sel)[0]
-
-
 def descendants(root: Node) -> list:
     """Pre-order descendants of root (excluding root), as a snapshot."""
     out = []

@@ -14,6 +14,9 @@ Scale notes:
   cardinality) is the real skew — the salt knob spreads a conversation's turns;
 - metrics are counted inside the UDF and aggregated by spark_partition_id()
   (deterministic under retries, unlike accumulators).
+
+Column contract: transcripts follow jobs/schemas.py TRANSCRIPTS_SCHEMA; the
+document URL is in `tool` (the rules join key `host` is derived from it).
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ from itertools import repeat
 from typing import Iterator, Optional
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -89,8 +93,9 @@ def load_rules(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(RULES_SCHEMA).parquet(path)
 
 
-def with_host(df: DataFrame, url_col: str = "tool") -> DataFrame:
-    return df.withColumn("host", F.regexp_extract(F.col(url_col), _HOST_REGEX, 1))
+def with_host(df: DataFrame) -> DataFrame:
+    """Add `host`, the rules join key, from the transcript URL in `tool`."""
+    return df.withColumn("host", F.regexp_extract("tool", _HOST_REGEX, 1))
 
 
 def enabled_rules_first_match(rules: DataFrame) -> DataFrame:
@@ -128,11 +133,7 @@ def join_rules(
 
 
 def extract_by_rule(
-    transcripts: DataFrame,
-    rule_selector: str,
-    use_cloudflare: bool = False,
-    snippet_size: int = DEFAULT_SNIPPET_SIZE,
-    num_partitions: Optional[int] = None,
+    transcripts: DataFrame, rule_selector: str, snippet_size: int = DEFAULT_SNIPPET_SIZE
 ) -> DataFrame:
     """Preview semantics (reference rest/server.go:204-274 handlePreview /
     extractor ExtractByRule): apply an explicit rule literal to every row,
@@ -140,8 +141,8 @@ def extract_by_rule(
     fall back to the general parser exactly like the service does."""
     df = with_host(transcripts)
     df = df.withColumn("rule_content", F.lit(rule_selector))
-    df = df.withColumn("routed_cloudflare", F.lit(use_cloudflare))
-    return run_extraction(df, snippet_size, num_partitions)
+    df = df.withColumn("routed_cloudflare", F.lit(False))
+    return run_extraction(df, snippet_size)
 
 
 # whether this Python process has frozen its long-lived heap (once per
@@ -247,9 +248,17 @@ def run_extraction(
 ) -> DataFrame:
     """Explicit conv_id-hash partitioning (north_rule) + the Arrow UDF.
 
-    salt_buckets>0 spreads a single conversation's turns across that many salt
-    values — the mitigation for a conversation with 10^6 turns landing on one
-    task. Extraction is per-turn, so salting never changes results, only layout.
+    num_partitions=None (the default) adds no exchange: the right call when
+    the input table is ALREADY laid out by conv_id hash (Iceberg
+    `PARTITIONED BY (bucket(N, conv_id))`, the realistic 10^12-turn setup).
+    Reshuffling 100 TB to obtain a layout the table already has is the
+    single biggest avoidable cost in this job (~35% of wall-clock on small
+    documents at local[16], BENCH.md). The runtime repartition is the path
+    for unbucketed sources and, with salt_buckets>0, for skewed
+    conversations: salting spreads a single conversation's turns across
+    that many salt values — the mitigation for a conversation with 10^6
+    turns landing on one task. Extraction is per-turn, so salting never
+    changes results, only layout.
     """
     cols = ["conv_id", "turn_idx", "text", "tool", "rule_content", "routed_cloudflare"]
     return _run_extract(joined, cols, False, snippet_size, num_partitions, salt_buckets)
@@ -351,15 +360,20 @@ def write_with_manifest(
 
 
 def pending_buckets(spark: SparkSession, output_path: str, nbuckets: int) -> list:
-    """Buckets not yet recorded in the manifest → what a restart must process."""
-    manifest_path = os.path.join(output_path, "manifest")
+    """Buckets not yet recorded in the manifest → what a restart must process.
+
+    Only a missing manifest means "nothing done yet"; an unreadable one
+    raises, because treating it as empty would redo the whole job on every
+    resume."""
     try:
-        done = {
-            r.bucket
-            for r in spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path).select("bucket").distinct().collect()
-        }
-    except Exception:
-        done = set()
+        manifest = spark.read.schema(MANIFEST_SCHEMA).parquet(
+            os.path.join(output_path, "manifest")
+        )
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return list(range(nbuckets))
+    done = {r.bucket for r in manifest.select("bucket").distinct().collect()}
     return [b for b in range(nbuckets) if b not in done]
 
 
@@ -378,24 +392,14 @@ def run_pipeline(
     num_partitions: Optional[int] = None,
     salt_buckets: int = 0,
     cf_route_all: bool = False,
-    source_partitioned: bool = False,
 ) -> DataFrame:
-    """source_partitioned=True declares that the input table is ALREADY laid
-    out by conv_id hash (Iceberg `PARTITIONED BY (bucket(N, conv_id))` — the
-    realistic 10^12-turn setup) and skips the runtime exchange: reshuffling
-    100 TB to obtain a layout the table already has is the single biggest
-    avoidable cost in this job (~35% of wall-clock on small documents at
-    local[16], BENCH.md). The runtime repartition (+ salt knob) remains the
-    path for unbucketed sources and for skewed conversations."""
+    """Load, join rules, extract; with `output_path`, write through the
+    manifest sink and return the rows read back from it. Partitioning
+    options are run_extraction's."""
     transcripts = load_transcripts(spark, transcripts_path)
     rules = load_rules(spark, rules_path) if rules_path else None
     joined = join_rules(transcripts, rules, cf_route_all=cf_route_all)
-    extracted = run_extraction(
-        joined,
-        snippet_size,
-        None if source_partitioned else num_partitions,
-        salt_buckets if not source_partitioned else 0,
-    )
+    extracted = run_extraction(joined, snippet_size, num_partitions, salt_buckets)
     if output_path:
         write_with_manifest(extracted, output_path)
         return spark.read.parquet(os.path.join(output_path, "extracted"))

@@ -8,6 +8,10 @@ Two hash modes:
     oracle verify the full shingle→minhash→band→bucket-join composition
     value-for-value, not just row counts.
 
+Column contract: documents are (doc_id, text); candidate pairs are
+(doc_a, doc_b). Every operator reads those names and takes no column-name
+parameters.
+
 Scale notes: minhash signatures are k aggregations over an exploded shingle
 relation — one shuffle on doc_id with map-side partial min; banding re-shuffles
 on (band, band_key) whose cardinality is bounded by corpus size, not pair
@@ -25,19 +29,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .sqltext import ident, let, word_shingles
+from .sqltext import let, word_shingles
 
 
-def exact_duplicates(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Exact dedup by full-text hash: (doc_id, canonical_id, group size).
 
     Canonical = lowest key in the group. Hash-groupBy — one shuffle on the text
     hash, never on the text itself.
     """
-    h = F.md5(F.col(text_col)).alias("text_hash")
     w = Window.partitionBy("text_hash")
     return (
-        docs.select(F.col(key_col).alias("doc_id"), h)
+        docs.select("doc_id", F.md5("text").alias("text_hash"))
         .withColumn("canonical_id", F.min("doc_id").over(w))
         .withColumn("group_size", F.count(F.lit(1)).over(w))
         .filter(F.col("group_size") > 1)
@@ -45,22 +48,16 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text", key_col: str = "do
     )
 
 
-def _shingle_array(text_col: str, n: int) -> str:
+def _shingle_array(n: int) -> str:
     """SQL: the distinct word n-gram shingles of a doc as an ARRAY —
     deduplicated inside the row (array_distinct), never via a relational
     distinct, so no shuffle is ever needed to build shingles. The token array
     is let-bound."""
-    toks = f"split(trim({ident(text_col)}), ' +')"
-    return let("toks", toks, f"array_distinct({word_shingles('toks', n)})")
+    return let("toks", "split(trim(text), ' +')", f"array_distinct({word_shingles('toks', n)})")
 
 
 def minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    shingle_n: int = 3,
-    k: int = 16,
-    portable: bool = False,
+    docs: DataFrame, shingle_n: int = 3, k: int = 16, portable: bool = False
 ) -> DataFrame:
     """(doc_id, mh_0..mh_{k-1}): min over shingles of k seeded hashes.
 
@@ -74,10 +71,7 @@ def minhash_signatures(
     keeps a multiply-referenced non-cheap alias un-inlined, so the array is
     built once per row instead of k times (measured 1.8× on 120k docs).
     """
-    base = docs.select(
-        F.col(key_col).alias("doc_id"),
-        F.expr(_shingle_array(text_col, shingle_n)).alias("_sh"),
-    )
+    base = docs.select("doc_id", F.expr(_shingle_array(shingle_n)).alias("_sh"))
     seeded = "md5(concat(s, '#{i}'))" if portable else "xxhash64(s, {i})"
     return base.selectExpr("doc_id", *(
         f"array_min(transform(_sh, s -> {seeded.format(i=i)})) AS mh_{i}"
@@ -87,8 +81,6 @@ def minhash_signatures(
 
 def minhash_lsh_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
     shingle_n: int = 3,
     k: int = 16,
     bands: int = 4,
@@ -106,7 +98,7 @@ def minhash_lsh_pairs(
     if bands < 1 or k < bands or k % bands:
         raise ValueError(f"k must be a positive multiple of bands, got k={k}, bands={bands}")
     r = k // bands
-    sig = minhash_signatures(docs, text_col, key_col, shingle_n, k, portable)
+    sig = minhash_signatures(docs, shingle_n, k, portable)
     band_keys = ", ".join(
         f"named_struct('band', {b}, 'band_key', concat_ws('|', "
         + ", ".join(f"CAST(mh_{i} AS STRING)" for i in range(b * r, (b + 1) * r))
@@ -147,9 +139,7 @@ def minhash_lsh_pairs(
     )
 
 
-def _pruned_shingles(
-    docs: DataFrame, pairs: DataFrame, text_col: str, key_col: str, n: int
-) -> DataFrame:
+def _pruned_shingles(docs: DataFrame, pairs: DataFrame, n: int) -> DataFrame:
     """(doc_id, shingles) for the docs that appear in a candidate pair: the
     shingle table ngram_jaccard snapshots, before the snapshot (the plan
     tests assert its unhinted left-semi prune on this exact shape)."""
@@ -159,17 +149,11 @@ def _pruned_shingles(
         .distinct()
     )
     return docs.select(
-        F.col(key_col).alias("doc_id"), F.expr(_shingle_array(text_col, n)).alias("shingles")
+        "doc_id", F.expr(_shingle_array(n)).alias("shingles")
     ).join(cand, "doc_id", "left_semi")
 
 
-def ngram_jaccard(
-    docs: DataFrame,
-    pairs: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    shingle_n: int = 3,
-) -> DataFrame:
+def ngram_jaccard(docs: DataFrame, pairs: DataFrame, shingle_n: int = 3) -> DataFrame:
     """Exact Jaccard over word n-gram shingle sets for given candidate pairs.
 
     The shingle SET stays an in-row ARRAY end to end (round 4): the per-doc
@@ -213,7 +197,7 @@ def ngram_jaccard(
     # (different keys, so no exchange reuse) — snapshot it too, so the scan +
     # shingle build runs once instead of once per side; bounded by the
     # candidate-doc count, strictly smaller than the pair snapshot above
-    sh = _pruned_shingles(docs, pairs, text_col, key_col, shingle_n)
+    sh = _pruned_shingles(docs, pairs, shingle_n)
     sh = sh.localCheckpoint(eager=False)
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("_sa"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("_sb"))
@@ -231,13 +215,7 @@ def ngram_jaccard(
     )
 
 
-def simhash(
-    docs: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    bits: int = 16,
-    portable: bool = False,
-) -> DataFrame:
+def simhash(docs: DataFrame, bits: int = 16, portable: bool = False) -> DataFrame:
     """(doc_id, simhash int): sign-sum over token hash bits.
 
     Portable mode uses the first bits/4 hex chars of md5 (verifiable in
@@ -248,9 +226,7 @@ def simhash(
         raise ValueError(f"portable simhash bits must be a multiple of 4 in 4..60, got {bits}")
     if not portable and not 1 <= bits <= 62:
         raise ValueError(f"fast simhash bits must be in 1..62, got {bits}")
-    toks = (
-        docs.select(F.col(key_col).alias("doc_id"), F.explode(F.split(F.trim(F.col(text_col)), " +")).alias("tok"))
-    )
+    toks = docs.select("doc_id", F.explode(F.split(F.trim("text"), " +")).alias("tok"))
     if portable:
         # nibble j of md5 hex → 4 bits each; use first bits/4 hex chars
         h = f"CAST(conv(substring(md5(tok), 1, {bits // 4}), 16, 10) AS BIGINT)"
@@ -278,8 +254,6 @@ def _release(snapshot: DataFrame) -> None:
 
 def dedup_components(
     pairs: DataFrame,
-    key_a: str = "doc_a",
-    key_b: str = "doc_b",
     max_iters: int = 20,
     mode: str = "propagate",
     stats: dict | None = None,
@@ -341,9 +315,7 @@ def dedup_components(
         raise ValueError(f"mode must be 'propagate' or 'star', got {mode!r}")
     round_sec: list = []
     fallback_rounds = None
-    edges = pairs.select(
-        F.col(key_a).alias("u"), F.col(key_b).alias("v")
-    ).localCheckpoint(eager=True)
+    edges = pairs.selectExpr("doc_a AS u", "doc_b AS v").localCheckpoint(eager=True)
     solve = _components_star if mode == "star" else _components_propagate
     out, rounds = solve(edges, max_iters, round_sec)
     if out is None and mode == "propagate":

@@ -1,9 +1,12 @@
 """Gap-based sessionization over an event stream table.
 
-Batch sessionization (window functions) — the Structured-Streaming analogue
-would be applyInPandasWithState, but this engine is deliberately batch-only
-(SURVEY §7: the north rule is batch with manifest-based resume). One shuffle on
-user_id; per-user state is a running sum over an ordered window.
+Batch sessionization (window functions): one shuffle on user_id; per-user
+state is a running sum over an ordered window. Its incremental re-expression
+over session_window is streaming/sessions.py (sessionize_stream).
+
+Column contract: events are (user_id, event_id, ts, value); sessions split
+on `ts` gaps within a user_id, with event_id breaking timestamp ties. The
+operators read those names and take no column-name parameters.
 
 At 10^12-event scale even that one shuffle should come from the TABLE LAYOUT,
 not runtime: store events bucketed by user_id (ensure_events_bucketed below)
@@ -31,41 +34,34 @@ _BUCKET_SPEC_FILE = "_bucket_spec.json"
 #: events / 64 buckets the bucketed read is SLOWER than the 240 KB shuffle)
 MIN_AVG_ROWS_PER_BUCKET = 4096
 
+#: the bucketed layout's sort order: sessionize's window order within a user
+_SORT_COLS = ("user_id", "ts", "event_id")
 
-def sessionize(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_tiebreak: str = "event_id",
-    value_col: str = "value",
-) -> DataFrame:
+
+def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Split each user's events into sessions at inactivity gaps.
 
-    Returns (user_id, session_seq, n_events, first_ts, last_ts, total_value);
-    deterministic ordering ties broken by `order_tiebreak`.
+    Returns (user_id, session_seq, n_events, first_ts_epoch, last_ts_epoch,
+    total_value); timestamp ties are ordered by event_id.
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col, order_tiebreak)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # TIMESTAMP_NTZ needs a tz-typed hop before epoch; any consistent offset
     # cancels out in the gap differences
-    epoch = F.col(ts_col).cast("timestamp").cast("long")
+    epoch = F.col("ts").cast("timestamp").cast("long")
     gap = epoch - F.lag(epoch).over(w)
     new_session = F.when(gap.isNull() | (gap > gap_minutes * 60), 1).otherwise(0)
-    run = Window.partitionBy(user_col).orderBy(ts_col, order_tiebreak).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
+    run = w.rowsBetween(Window.unboundedPreceding, 0)
     with_sessions = events.withColumn("_new", new_session).withColumn(
         "session_seq", F.sum("_new").over(run)
     )
-    ep = F.col(ts_col).cast("timestamp").cast("long")
     return (
-        with_sessions.withColumn("_ep", ep)
-        .groupBy(user_col, "session_seq")
+        with_sessions.withColumn("_ep", epoch)
+        .groupBy("user_id", "session_seq")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.min("_ep").alias("first_ts_epoch"),
             F.max("_ep").alias("last_ts_epoch"),
-            F.round(F.sum(value_col), 6).alias("total_value"),
+            F.round(F.sum("value"), 6).alias("total_value"),
         )
     )
 
@@ -76,14 +72,11 @@ def ensure_events_bucketed(
     path: str,
     table: str = "events_bucketed",
     nbuckets: int = 64,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_tiebreak: str = "event_id",
 ) -> DataFrame:
     """Materialize (once) and register `events` as a user_id-bucketed table.
 
     This is the 100 TB layout for sessionize: the bucketed scan reports
-    HashPartitioning(user_col), so the window partitionBy and the session
+    HashPartitioning(user_id), so the window partitionBy and the session
     groupBy both run WITHOUT an Exchange (plan-asserted in
     tests/test_plan_shape.py). Files written by a previous session are
     re-registered via external-table DDL — bucket metadata lives in the
@@ -113,11 +106,7 @@ def ensure_events_bucketed(
     ddl = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in events.schema.fields
     )
-    spec = {
-        "nbuckets": nbuckets,
-        "bucket_col": user_col,
-        "sort_cols": [user_col, ts_col, order_tiebreak],
-    }
+    spec = {"nbuckets": nbuckets, "bucket_col": "user_id", "sort_cols": list(_SORT_COLS)}
     marker = os.path.join(path, _BUCKET_SPEC_FILE)
     have_files = os.path.isdir(path) and any(
         fn.startswith("part-") for fn in os.listdir(path)
@@ -126,8 +115,8 @@ def ensure_events_bucketed(
     if not have_files:
         (
             events.write.mode("overwrite")
-            .bucketBy(nbuckets, user_col)
-            .sortBy(user_col, ts_col, order_tiebreak)
+            .bucketBy(nbuckets, "user_id")
+            .sortBy(*_SORT_COLS)
             .option("path", path)
             .saveAsTable(table)
         )
@@ -167,8 +156,8 @@ def ensure_events_bucketed(
         spark.sql(
             f"""
             CREATE TABLE {table} ({ddl}) USING PARQUET
-            CLUSTERED BY ({user_col})
-            SORTED BY ({user_col}, {ts_col}, {order_tiebreak})
+            CLUSTERED BY (user_id)
+            SORTED BY ({", ".join(_SORT_COLS)})
             INTO {nbuckets} BUCKETS
             LOCATION '{path}'
             """

@@ -30,6 +30,14 @@ query set; the IVF paths bound each query's candidate set to its probed
 buckets, and the plan shuffles once, on the query id for the rank window.
 Scores are rounded to 6 dp and ties broken by neighbor id so results are
 deterministic and oracle-comparable.
+
+Column contract: embeddings are (vec_id, embedding, label) and queries are
+(query_id, embedding), plus label for `cosine_topk_bucketed`; `embedding` is
+array<float> and `label` is the precomputed coarse bucket. The operators read
+those names. Only the quantizer helpers (`with_hyperplane_bucket`,
+`hyperplane_probe_buckets`, `with_kmeans_bucket`, `probe_centroids`) take
+`vec_col`/`out_col`: the IVF operators apply them to the normed corpus
+(`nvec`, `bucket`), not to a contract column.
 """
 
 from __future__ import annotations
@@ -53,24 +61,26 @@ def _dot(a: str, b: str) -> str:
     return _zip_sum(a, b, "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)")
 
 
-def _normed(df: DataFrame, id_col: str, vec_col: str, names, *extra) -> DataFrame:
-    """(id, vec, norm) renamed to `names`, plus `extra` columns. Norms are
-    computed ONCE PER ROW before any join (r06): higher-order aggregates are
-    interpreted, and folding both norms per (query, neighbor) pair costs
-    O(Q·N) norm evaluations instead of O(Q + N). Same doubles either way."""
-    i, v, n = names
-    vec = ident(vec_col)
+def _normed(df: DataFrame, side, *extra) -> DataFrame:
+    """The id column `side[0]` and `embedding`, renamed to the (id, vec,
+    norm) names `side[1:]` with the vector's norm, plus `extra` columns.
+    Norms are computed ONCE PER ROW before any join (r06): higher-order
+    aggregates are interpreted, and folding both norms per (query,
+    neighbor) pair costs O(Q·N) norm evaluations instead of O(Q + N). Same
+    doubles either way."""
+    src, i, v, n = side
     return df.select(
-        F.col(id_col).alias(i),
-        F.col(vec_col).alias(v),
-        F.expr(f"sqrt({_dot(vec, vec)})").alias(n),
+        F.col(src).alias(i),
+        F.col("embedding").alias(v),
+        F.expr(f"sqrt({_dot('embedding', 'embedding')})").alias(n),
         *extra,
     )
 
 
-# (id, vec, norm) column names of the corpus and query sides _score_topk reads
-_E = ("neighbor_id", "nvec", "_nn")
-_Q = ("query_id", "qvec", "_qn")
+# source id, then the (id, vec, norm) names _score_topk reads, of the corpus
+# and query sides
+_E = ("vec_id", "neighbor_id", "nvec", "_nn")
+_Q = ("query_id", "query_id", "qvec", "_qn")
 
 
 def _cosine(a: str, b: str, na: str, nb: str):
@@ -101,32 +111,20 @@ def _score_topk(e: DataFrame, q: DataFrame, on, k: int) -> DataFrame:
     )
 
 
-def cosine_topk_bruteforce(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
+def cosine_topk_bruteforce(embeddings: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k neighbors per query: broadcast queries × corpus scan.
 
     Output: (query_id, neighbor_id, cosine, rank).
     """
-    e = _normed(embeddings, id_col, vec_col, _E)
-    q = _normed(queries, query_id_col, vec_col, _Q)
-    return _score_topk(e, q, None, k)
+    return _score_topk(_normed(embeddings, _E), _normed(queries, _Q), None, k)
 
 
 def embedding_near_duplicates(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_col: str = "label",
     max_bucket: int = 10_000,
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (a < b) within coarse buckets.
+    """Embedding-cosine near-duplicate pairs (a < b) within `label` buckets.
 
     The scale path for embedding dedup: one shuffle on the bucket key bounds the
     pair space to within-bucket; cross-bucket near-dups are by construction
@@ -141,13 +139,13 @@ def embedding_near_duplicates(
     (__spark_entry__._ORACLE_EMBEDDING_NEAR_DUP).
     """
     sized = embeddings.withColumn(
-        "_bsize", F.count(F.lit(1)).over(Window.partitionBy(bucket_col))
+        "_bsize", F.count(F.lit(1)).over(Window.partitionBy("label"))
     ).filter(F.col("_bsize") <= max_bucket)
     # per-row norms before the self-join (see _normed): the within-bucket
     # pair space is O(b²) while rows are O(b)
-    bucket = F.col(bucket_col).alias("bucket")
-    a = _normed(sized, id_col, vec_col, ("doc_a", "avec", "_an"), bucket)
-    b = _normed(sized, id_col, vec_col, ("doc_b", "bvec", "_bn"), bucket)
+    bucket = F.col("label").alias("bucket")
+    a = _normed(sized, ("vec_id", "doc_a", "avec", "_an"), bucket)
+    b = _normed(sized, ("vec_id", "doc_b", "bvec", "_bn"), bucket)
     return (
         a.join(b, "bucket")
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -156,40 +154,26 @@ def embedding_near_duplicates(
     )
 
 
-def embedding_dropped_buckets(
-    embeddings: DataFrame,
-    bucket_col: str = "label",
-    max_bucket: int = 10_000,
-) -> DataFrame:
+def embedding_dropped_buckets(embeddings: DataFrame, max_bucket: int = 10_000) -> DataFrame:
     """Audit companion to embedding_near_duplicates: the buckets its
     max_bucket cap excludes, with sizes — (bucket, bucket_size). Run it
     alongside the dedup job so capped cells are counted, never silent."""
     return (
-        embeddings.groupBy(F.col(bucket_col).alias("bucket"))
+        embeddings.groupBy(F.col("label").alias("bucket"))
         .agg(F.count(F.lit(1)).alias("bucket_size"))
         .filter(F.col("bucket_size") > max_bucket)
     )
 
 
-def cosine_topk_bucketed(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    bucket_col: str = "label",
-) -> DataFrame:
+def cosine_topk_bucketed(embeddings: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """IVF-style top-k: candidates restricted to the query's coarse bucket.
 
     Here the coarse quantizer is the precomputed `label` column (in production:
     a k-means assignment or LSH bucket). Each query scores only the corpus
     rows of its own bucket — the 100 TB path.
     """
-    bucket = F.col(bucket_col).alias("bucket")
-    e = _normed(embeddings, id_col, vec_col, _E, bucket)
-    q = _normed(queries, query_id_col, vec_col, _Q, bucket)
-    return _score_topk(e, q, "bucket", k)
+    bucket = F.col("label").alias("bucket")
+    return _score_topk(_normed(embeddings, _E, bucket), _normed(queries, _Q, bucket), "bucket", k)
 
 
 # ---------------------------------------------------------------------------
@@ -286,16 +270,13 @@ def _explode_probes(q: DataFrame, probes: str) -> DataFrame:
     list is exploded as an EXPRESSION: exploding a computed column makes
     Spark infer size(col) > 0 and push that filter below the projection,
     which evaluates every fold of the probe list a second time per query."""
-    return q.select(*_Q, F.explode(F.expr(probes)).alias("bucket"))
+    return q.select(*_Q[1:], F.explode(F.expr(probes)).alias("bucket"))
 
 
 def cosine_topk_ivf_lsh(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     n_planes: int = 4,
     dim: int = 64,
     n_probes: int = 1,
@@ -304,10 +285,10 @@ def cosine_topk_ivf_lsh(
     computed (not assumed), queries probe `n_probes` buckets, candidates are
     scanned within-bucket only."""
     e = with_hyperplane_bucket(
-        _normed(embeddings, id_col, vec_col, _E), "nvec", n_planes, dim, "bucket"
+        _normed(embeddings, _E), "nvec", n_planes, dim, "bucket"
     )
     q = _explode_probes(
-        _normed(queries, query_id_col, vec_col, _Q),
+        _normed(queries, _Q),
         _lsh_probes(ident("qvec"), n_planes, dim, n_probes),
     )
     return _score_topk(e, q, "bucket", k)
@@ -317,8 +298,6 @@ def kmeans_fit(
     embeddings: DataFrame,
     n_clusters: int = 8,
     iters: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list:
     """Lloyd's k-means, Spark-native: assignment is a broadcast-centroid
     argmin (codegen), update a posexplode + per-dimension avg (one shuffle per
@@ -341,7 +320,7 @@ def kmeans_fit(
     is vanishing, but if ann_ivf_kmeans ever hash-mismatches on a new corpus,
     check for a ...X5000000-shaped centroid mean before suspecting the logic.
     """
-    init = embeddings.orderBy(id_col).limit(n_clusters).select(vec_col).collect()
+    init = embeddings.orderBy("vec_id").limit(n_clusters).select("embedding").collect()
     centroids = [list(r[0]) for r in init]
     if not centroids:
         raise ValueError("kmeans_fit: empty input")
@@ -350,7 +329,7 @@ def kmeans_fit(
     n_clusters = len(centroids)
     for _ in range(iters):
         dim = len(centroids[0])
-        upd = _kmeans_update(embeddings, centroids, vec_col).collect()
+        upd = _kmeans_update(embeddings, centroids).collect()
         new = {r.cluster_id: list(r.cvec) for r in upd}
         # empty clusters keep their previous centroid
         centroids = [new.get(c, centroids[c]) for c in range(n_clusters)]
@@ -358,13 +337,13 @@ def kmeans_fit(
     return centroids
 
 
-def _kmeans_update(embeddings: DataFrame, centroids: list, vec_col: str) -> DataFrame:
+def _kmeans_update(embeddings: DataFrame, centroids: list) -> DataFrame:
     """(cluster_id, cvec): the updated centroids of one Lloyd iteration, as
     kmeans_fit collects them. The raw float vector is exploded, not a double
     cast of it: posexplode makes Spark infer size(v) > 0 AND isnotnull(v) and
     push that below the projection, where a cast fold would run again. Float
     widens to double exactly in the distance fold and in avg."""
-    assigned = embeddings.select(F.col(vec_col).alias("_v")).withColumn(
+    assigned = embeddings.select(F.col("embedding").alias("_v")).withColumn(
         "cluster_id", F.expr(_nearest_centroid(centroids, ident("_v")))
     )
     return (
@@ -439,9 +418,6 @@ def cosine_topk_ivf_kmeans(
     queries: DataFrame,
     centroids: list,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     n_probes: int = 1,
 ) -> DataFrame:
     """IVF ANN over a fitted k-means quantizer. Queries probe their n_probes
@@ -449,10 +425,10 @@ def cosine_topk_ivf_kmeans(
     standard recall lever when clusters overlap; candidates still bounded to
     the probed cells."""
     e = with_kmeans_bucket(
-        _normed(embeddings, id_col, vec_col, _E), centroids, "nvec", "bucket"
+        _normed(embeddings, _E), centroids, "nvec", "bucket"
     )
     q = _explode_probes(
-        _normed(queries, query_id_col, vec_col, _Q),
+        _normed(queries, _Q),
         _centroid_probes(centroids, ident("qvec"), n_probes),
     )
     return _score_topk(e, q, "bucket", k)

@@ -3,6 +3,9 @@ expressions (no UDFs), built as SQL text (see sqltext): language-ID
 heuristic, quality scoring, token counting, document fingerprinting. Each is
 a narrow projection + at most one aggregation, so they pushdown/prune cleanly
 and scale linearly.
+
+Column contract: documents are (doc_id, text); every operator reads those
+names and takes no column-name parameters.
 """
 
 from __future__ import annotations
@@ -10,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .sqltext import ident, let, strings, word_shingles
+from .sqltext import let, strings, word_shingles
 
 # tiny built-in stopword lists for the n-gram/stopword language heuristic
 STOPWORDS = {
@@ -37,9 +40,8 @@ TRIGRAMS = {
 }
 
 
-def _tokens(text_col: str) -> str:
-    """SQL: the lowercased whitespace tokens of `text_col`."""
-    return f"split(trim(lower({ident(text_col)})), ' +')"
+#: SQL: the lowercased whitespace tokens of `text`
+_TOKENS = "split(trim(lower(text)), ' +')"
 
 
 def _hits(arr: str, words) -> str:
@@ -58,16 +60,16 @@ def _ranked_langs(arr: str, table: dict) -> str:
     return f"array_sort(array({', '.join(structs)}))"
 
 
-def token_counts(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace token count + BPE-ish subword count (regex split on
     non-alnum boundaries and 4-char chunks — a cheap proxy for BPE length)."""
     # token array bound once per row (multi-referenced non-cheap alias stays
     # un-inlined): higher-order functions are interpreted, so every extra
     # reference would re-run the split
     staged = docs.select(
-        F.col(key_col).alias("doc_id"),
-        F.length(F.col(text_col)).cast("long").alias("_nchars"),
-        F.expr(_tokens(text_col)).alias("_toks"),
+        "doc_id",
+        F.length("text").cast("long").alias("_nchars"),
+        F.expr(_TOKENS).alias("_toks"),
     )
     # BPE-ish: every token contributes ceil(len/4) subword units
     return staged.selectExpr(
@@ -79,7 +81,7 @@ def token_counts(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id
     )
 
 
-def language_id(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Two-stage language heuristic, all codegen expressions.
 
     Stage 1: argmax language by stopword hits (tie-break: language code
@@ -93,13 +95,11 @@ def language_id(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id"
     # computed once per row as multi-referenced (hence un-collapsed) aliases,
     # and the lowercased text the trigrams slice is let-bound.
     tris = let(
-        "s", f"lower(trim({ident(text_col)}))",
+        "s", "lower(trim(text))",
         "transform(sequence(1, greatest(length(s) - 2, 1)), i -> substr(s, i, 3))",
     )
     scored = docs.select(
-        F.col(key_col).alias("doc_id"),
-        F.expr(_tokens(text_col)).alias("_toks"),
-        F.expr(tris).alias("_tris"),
+        "doc_id", F.expr(_TOKENS).alias("_toks"), F.expr(tris).alias("_tris")
     ).selectExpr(
         "doc_id",
         f"{_ranked_langs('_toks', STOPWORDS)} AS _sw",
@@ -116,16 +116,14 @@ def language_id(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id"
     )
 
 
-def quality_score(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic quality features + a composite score: length, mean word
     length, punctuation ratio, stopword ratio, repetition (distinct/total
     token ratio). All ratios rounded to 6 dp for determinism."""
     # token array bound once per row (see language_id): the old form re-split
     # the text for each of the four token-derived features
     staged = docs.select(
-        F.col(key_col).alias("doc_id"),
-        F.col(text_col).alias("_t"),
-        F.expr(_tokens(text_col)).alias("_toks"),
+        "doc_id", F.col("text").alias("_t"), F.expr(_TOKENS).alias("_toks")
     )
     n_tok, n_chars = "size(_toks)", "length(_t)"
     punct = "length(regexp_replace(_t, '[^.,;:!?]', ''))"
@@ -148,34 +146,28 @@ PII_PHONE_RE = "\\+?[0-9][0-9()\\-. ]{7,}[0-9]"
 PII_URL_RE = "https?://[^ ]+"
 
 
-def redact_pii(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """Training-data scrubbing: mask emails, URLs and phone-like sequences.
 
     Pure regexp_replace chain (JVM-side); order matters — URLs first so their
     digit runs aren't half-eaten by the phone pattern.
     """
-    t = F.col(text_col)
-    t = F.regexp_replace(t, PII_URL_RE, "<URL>")
+    t = F.regexp_replace("text", PII_URL_RE, "<URL>")
     t = F.regexp_replace(t, PII_EMAIL_RE, "<EMAIL>")
     t = F.regexp_replace(t, PII_PHONE_RE, "<PHONE>")
     return docs.select(
-        F.col(key_col).alias("doc_id"),
+        "doc_id",
         t.alias("redacted"),
-        (F.length(F.col(text_col)) - F.length(t)).cast("long").alias("chars_redacted"),
+        (F.length("text") - F.length(t)).cast("long").alias("chars_redacted"),
     )
 
 
-def fingerprint(
-    docs: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    shingle_n: int = 5,
-) -> DataFrame:
+def fingerprint(docs: DataFrame, shingle_n: int = 5) -> DataFrame:
     """Document fingerprint: lexicographic-min md5 over word n-gram shingles
     (a winnowing-style content fingerprint, stable under whitespace changes
     and portable to the DuckDB oracle)."""
     fp = let(
-        "toks", _tokens(text_col),
+        "toks", _TOKENS,
         f"array_min(transform({word_shingles('toks', shingle_n)}, s -> md5(s)))",
     )
-    return docs.select(F.col(key_col).alias("doc_id"), F.expr(fp).alias("fingerprint"))
+    return docs.select("doc_id", F.expr(fp).alias("fingerprint"))

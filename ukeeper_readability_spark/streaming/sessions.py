@@ -5,11 +5,12 @@ a running sum over an ordered window — a shape that needs the user's full
 history and therefore cannot run incrementally. The streaming re-expression
 drops the sequence number and keys sessions by their TIME RANGE instead:
 `groupBy(user_id, session_window(ts, gap))`, Spark's built-in stateful
-session operator (merging session state store, SPARK-10816).
+session operator (merging session state store, SPARK-10816). It reads the
+batch operator's column contract: events are (user_id, event_id, ts, value).
 
 Gap-boundary alignment (load-bearing): the batch operator starts a new
 session when the inter-event gap is STRICTLY GREATER than `gap` seconds
-(`gap > g`, pipeline/sessions.py:42), i.e. events exactly `g` apart share a
+(`gap > g` in pipeline/sessions.py), i.e. events exactly `g` apart share a
 session. Spark's `session_window(ts, g)` merges INCLUSIVELY at the
 boundary: an event exactly `g` after the previous one still extends the
 session (verified empirically — an exclusive-end reading would need g+1s
@@ -41,9 +42,6 @@ from pyspark.sql import functions as F
 def sessionize_stream(
     events: DataFrame,
     gap_minutes: int = 30,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
     watermark_delay: str | None = None,
 ) -> DataFrame:
     """Session aggregates per (user, session time-range).
@@ -61,23 +59,21 @@ def sessionize_stream(
         # groups on — a cast EXPRESSION over a watermarked column loses the
         # event-time tag and append mode rejects the aggregation
         events = events.withColumn(
-            ts_col, F.col(ts_col).cast("timestamp")
-        ).withWatermark(ts_col, watermark_delay)
-        ep = F.col(ts_col)
+            "ts", F.col("ts").cast("timestamp")
+        ).withWatermark("ts", watermark_delay)
+        ep = F.col("ts")
     else:
-        ep = F.col(ts_col).cast("timestamp")
+        ep = F.col("ts").cast("timestamp")
     return (
-        events.groupBy(
-            F.col(user_col), F.session_window(ep, gap).alias("_w")
-        )
+        events.groupBy(F.col("user_id"), F.session_window(ep, gap).alias("_w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.min(ep.cast("long")).alias("first_ts_epoch"),
             F.max(ep.cast("long")).alias("last_ts_epoch"),
-            F.round(F.sum(value_col), 6).alias("total_value"),
+            F.round(F.sum("value"), 6).alias("total_value"),
         )
         .select(
-            user_col, "n_events", "first_ts_epoch", "last_ts_epoch",
+            "user_id", "n_events", "first_ts_epoch", "last_ts_epoch",
             "total_value",
         )
     )
